@@ -23,9 +23,10 @@ Python UDFs anywhere.
   ``minhash_lsh_pairs`` and reserve this for verification/audit. A
   stop-shingle cap (``max_shingle_freq``) bounds the quadratic term.
   Within the documented caps the direct path runs the quadratic term
-  as a blocked in-cache numpy kernel over a broadcast integer proxy
-  (``_blocked_inter_counts``) instead of a pair-keyed shuffle — same
-  exact counts, ~10x at the 50k-doc scale the shuffle form choked on.
+  as a blocked in-cache numpy kernel over an integer proxy shipped
+  once per node as an mmap'd ``.npy`` file (``_blocked_inter_counts``)
+  instead of a pair-keyed shuffle — same exact counts, ~10x at the
+  50k-doc scale the shuffle form choked on.
 - ``simhash_fingerprints``: one narrow pass (token hash → 60 weighted
   bit sums → fingerprint), one aggregation keyed by doc. Grouping equal
   fingerprints is another tiny shuffle.
@@ -351,7 +352,7 @@ def minhash_lsh_pairs(
         # the shuffle-hash verify below, so the posture at any scale is:
         # broadcast verify (small) -> kernel verify (mid) ->
         # shuffle-hash verify (huge).
-        kern = _blocked_inter_counts(
+        kern, _ = _blocked_inter_counts(
             sh.select("id", F.explode("shingles").alias("s")),
             sh,
             max_shingle_freq=None,
@@ -363,18 +364,9 @@ def minhash_lsh_pairs(
             n_docs=n_docs,  # already counted above — skip the re-count
         )
         if kern is not None:
-            exact = (
-                kern.withColumn(
-                    "jaccard",
-                    F.col("inter").cast("double")
-                    / (
-                        F.col("n_a") + F.col("n_b") - F.col("inter")
-                    ).cast("double"),
-                )
-                .filter(F.col("jaccard") >= threshold)
-                .select("id_a", "id_b", "jaccard")
+            return _with_jaccard(kern, threshold).join(
+                cand, ["id_a", "id_b"], "left_semi"
             )
-            return exact.join(cand, ["id_a", "id_b"], "left_semi")
     return _jaccard_on_pairs(cand.distinct(), sh, n_docs=n_docs).filter(
         F.col("jaccard") >= threshold
     )
@@ -416,23 +408,159 @@ def hot_shingle_mass_ratio(
 NGRAM_PAIR_ROW_BUDGET = CANDIDATE_MASS_BUDGET
 
 # Eligibility caps for the blocked-intersection kernel (the direct
-# exact-pairing path of ngram_jaccard_pairs / ngram_containment_dropped).
-# The kernel broadcasts an integer-coded proxy of the inverted index —
-# never the texts — so its footprint is bounded by these, not by corpus
-# bytes (guide §8: decide with small rows). Cost model, measured at
-# sf1 (50k docs, 2.8M postings, Σc²=2.7e8): per-block dense counting
-# scans n_docs²·8 bytes of accumulator across all tasks (~20 GB at
-# 50k docs → 0.5s over 32 cores) plus Σc² gathered increments. At the
-# 300k-doc cap the accumulator term is ~720 GB of streamed memset
-# (~8 s/core at 32 cores) — still an order of magnitude under the
-# join path, whose 150k-doc run took 135 s and whose 500k run OOMed a
-# 24g heap (PLANS.md r10 probe). Above the caps the pre-kernel
-# aggregates are discarded and the classic inverted-index join runs
-# unchanged, so ineligible corpora lose nothing but one small agg.
+# exact-pairing path of ngram_jaccard_pairs / ngram_containment_dropped /
+# winnow_overlap_pairs, and the minhash mid-size verify). The kernel
+# ships an integer-coded proxy of the inverted index — never the texts —
+# as one mmap'd .npy file per node, so its footprint is bounded by
+# these, not by corpus bytes (guide §8: decide with small rows). Cost
+# model, measured at sf1 (50k docs, 2.8M postings, Σc²=2.7e8):
+# per-block dense counting scans n_docs²·8 bytes of accumulator across
+# all tasks (~20 GB at 50k docs → 0.5s over 32 cores) plus Σc²
+# gathered increments. At the 300k-doc cap the accumulator term is
+# ~720 GB of streamed memset (~8 s/core at 32 cores) — still an order
+# of magnitude under the join path, whose 150k-doc run took 135 s and
+# whose 500k run OOMed a 24g heap (PLANS.md r10 probe). Above the caps
+# the classic inverted-index join runs instead.
 NGRAM_KERNEL_MAX_DOCS = 300_000
 NGRAM_KERNEL_MAX_VOCAB = 4_000_000
 NGRAM_KERNEL_MAX_POSTING = 32_000_000
 _NGRAM_KERNEL_BLOCK = 64  # bincount accumulator rows; A/B'd 64/128/512
+
+
+def _check_pair_mass(
+    op: str,
+    mass: float | None,
+    max_pair_rows: int | None,
+    law: str | None = None,
+    remediations: str | None = None,
+) -> None:
+    """The exact-pairing fail-fast (r10 verdict item 3): raise when the
+    pairing mass Σ c_s² exceeds ``max_pair_rows``, in the n-gram
+    family's words unless the caller supplies its own."""
+    check_candidate_mass(
+        op,
+        mass,
+        max_pair_rows,
+        knob="max_pair_rows",
+        law=law
+        or "pairing mass sum_s c_s^2 over the inverted index; the "
+        "r10 probe's measured infeasibility boundary for EXACT "
+        "pairwise similarity on this engine's standard heap",
+        remediations=remediations
+        or "cap hot shingles with max_shingle_freq "
+        "(lossy, documented recall contract) or switch to banded "
+        "minhash_lsh_pairs",
+    )
+
+
+def _pair_mass(posting: DataFrame) -> float | None:
+    """Σ c_s² over an (id, s) posting — the exact row count of its
+    pairing self-join — as one 1-row aggregate."""
+    return (
+        posting.groupBy("s")
+        .agg(F.count(F.lit(1)).cast("double").alias("c"))
+        .agg(F.sum(F.col("c") * F.col("c")).alias("pr"))
+        .first()["pr"]
+    )
+
+
+def _drop_hot(
+    posting: DataFrame, max_freq: int | None, index: DataFrame | None = None
+) -> DataFrame:
+    """``posting`` without the shingles held by more than ``max_freq``
+    documents of ``index`` (default: ``posting`` itself) — the lossy
+    stop-shingle cap. The hot set is small by construction, so the
+    anti-join broadcasts it; ``max_freq=None`` keeps every shingle."""
+    if max_freq is None:
+        return posting
+    index = posting if index is None else index
+    hot = index.groupBy("s").count().filter(F.col("count") > max_freq)
+    return posting.join(F.broadcast(hot.select("s")), "s", "left_anti")
+
+
+def _with_jaccard(pairs: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, jaccard) for exact (inter, n_a, n_b) pair counts
+    with jaccard >= threshold: one float64 division of exact integers,
+    the same arithmetic the kernel's jaccard keep-rule applies."""
+    return (
+        pairs.withColumn(
+            "jaccard",
+            F.col("inter").cast("double")
+            / (F.col("n_a") + F.col("n_b") - F.col("inter")).cast("double"),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
+def _exact_pair_counts(
+    posting: DataFrame,
+    sh: DataFrame | None,
+    *,
+    max_shingle_freq: int | None,
+    max_pair_rows: int | None,
+    guard_op: str,
+    guard_law: str | None = None,
+    guard_remediations: str | None = None,
+    **kernel_args,
+) -> DataFrame:
+    """EXACT (id_a, id_b, inter, n_a, n_b), id_a < id_b, over an
+    (id, s) posting minus its hot shingles: the blocked kernel when the
+    corpus is eligible, else the inverted-index self-join with a
+    pair-keyed count. The one exact-pairing dispatch of the n-gram and
+    winnowing callers; each keeps only its own keep-rule tail.
+
+    It owns the ``max_shingle_freq`` hot cap, the ``max_pair_rows``
+    fail-fast (evaluated once: on the kernel's dictionary stats, or on
+    the capped posting when the kernel declined before computing them)
+    and the join. ``inter`` counts the capped posting; ``n_a``/``n_b``
+    are the FULL shingle-set sizes from ``sh``. Sizeless callers
+    (``sh is None``, the count keep-rule) never read the sizes: they
+    are capped-posting counts on the kernel tier and null on the join
+    tier. ``kernel_args`` (``keep_mode``, ``threshold``,
+    ``fallback_over_mass``, ``n_docs``) go to
+    :func:`_blocked_inter_counts`; its keep-rule only prunes pairs the
+    caller's own filter would drop, so both tiers yield the same rows
+    after that filter (pinned by the forced-tier operator test).
+    """
+    kern, guarded = _blocked_inter_counts(
+        posting,
+        sh,
+        max_shingle_freq=max_shingle_freq,
+        max_pair_rows=max_pair_rows,
+        guard_op=guard_op,
+        guard_law=guard_law,
+        guard_remediations=guard_remediations,
+        **kernel_args,
+    )
+    if kern is not None:
+        return kern
+    posting = _drop_hot(posting, max_shingle_freq)
+    if max_pair_rows is not None and not guarded:
+        _check_pair_mass(
+            guard_op, _pair_mass(posting), max_pair_rows, guard_law,
+            guard_remediations,
+        )
+    inter = (
+        posting.select(F.col("id").alias("id_a"), "s")
+        .join(posting.select(F.col("id").alias("id_b"), "s"), "s")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
+    if sh is None:
+        size = F.lit(None).cast("int")
+        return inter.select(
+            "id_a", "id_b", "inter", size.alias("n_a"), size.alias("n_b")
+        )
+    sizes = sh.select("id", F.size("shingles").alias("n"))
+    return inter.join(
+        sizes.select(F.col("id").alias("id_a"), F.col("n").alias("n_a")),
+        "id_a",
+    ).join(
+        sizes.select(F.col("id").alias("id_b"), F.col("n").alias("n_b")),
+        "id_b",
+    )
 
 
 def _blocked_inter_counts(
@@ -448,10 +576,12 @@ def _blocked_inter_counts(
     n_docs: int | None = None,
     guard_law: str | None = None,
     guard_remediations: str | None = None,
-) -> DataFrame | None:
-    """EXACT pair intersection counts via a blocked numpy kernel, or
-    ``None`` when the corpus is ineligible (caller falls back to the
-    inverted-index self-join).
+) -> tuple[DataFrame | None, bool]:
+    """EXACT pair intersection counts via a blocked numpy kernel:
+    ``(pairs, guarded)``, with ``pairs`` None when the corpus is
+    ineligible and ``guarded`` True once the ``max_pair_rows``
+    fail-fast has been evaluated here. Callers wanting the
+    inverted-index join as the fallback use :func:`_exact_pair_counts`.
 
     Replaces the pairing self-join + pair-keyed count aggregation: on
     near-uniform-df corpora that aggregation materializes Σc_s² mostly-
@@ -462,22 +592,21 @@ def _blocked_inter_counts(
 
     1. ONE groupBy(s) builds the shingle dictionary (df_s counts); the
        lossy ``max_shingle_freq`` cap and the ``max_pair_rows`` mass
-       guard both evaluate on it (identical mass value and raise point
-       as the join path's posting-side guard).
-    2. Shingles get dense integer codes (row_number over the shingle
-       order — deterministic under task retry, unlike
-       monotonically_increasing_id), and the coded posting (12 B/row,
-       no strings) is collected and re-shaped into CSR arrays.
-    3. The arrays ride ONE broadcast; ``spark.range(n_blocks)`` +
-       ``mapInPandas`` counts each block of docs against the full
-       inverted index with ``np.bincount`` (guide §4.2: whole batches
+       guard both evaluate on it (the same mass value and message as
+       the join path's posting-side guard).
+    2. The capped posting is collected sorted by (xxhash64(s), id) and
+       re-shaped on the driver into CSR arrays with dense shingle codes
+       (no strings).
+    3. The arrays ship as ONE mmap-able ``.npy`` file via ``addFile``;
+       ``spark.range(n_blocks)`` + ``mapInPandas`` counts each block of
+       docs against the full inverted index (guide §4.2: whole batches
        to vectorized native code) and emits only pairs that can pass
        the caller's threshold — every decision happens on the integer
        proxy, the heavy rows never move (guide §8).
 
     Emits (id_a, id_b, inter, n_a, n_b) with id_a < id_b, ``inter``
     counted over the (capped) posting and sizes from the FULL shingle
-    sets — exactly the join path's ``both`` frame. ``keep_mode``:
+    sets — exactly the join path's frame. ``keep_mode``:
 
     - ``"jaccard"``: keep pairs with inter/(n_a+n_b-inter) >= threshold
       (the same float64 division the caller re-applies in-plan, so the
@@ -496,16 +625,21 @@ def _blocked_inter_counts(
     fingerprints): the doc universe and per-doc counts then fall out
     of the collected coded posting itself — no separate size job —
     and the emitted ``n_a``/``n_b`` carry capped-posting counts,
-    which the count keep-rule never reads.
-    ``guard_law``/``guard_remediations`` override the fail-fast's
-    message so each caller raises its own documented text (default:
-    the n-gram family's).
-
-    Results are identical to the join path (pinned by the operator
-    equivalence tests and the DuckDB oracles); only the plan changes.
+    which the count keep-rule never reads. ``fallback_over_mass``
+    declines corpora whose pairing mass exceeds it, for callers whose
+    own path never raises. ``guard_law``/``guard_remediations``
+    override the fail-fast's message (see :func:`_check_pair_mass`).
     """
     import numpy as np
     from pyspark.sql import types as T
+
+    guarded = False
+
+    def declined(why):
+        logger.info(
+            "%s: pairing kernel declined (%s) — join path", guard_op, why
+        )
+        return None, guarded
 
     idt = (sh if sh is not None else posting).schema["id"].dataType
     if not isinstance(
@@ -513,30 +647,19 @@ def _blocked_inter_counts(
     ):
         # index-order == id-order below relies on numeric ids; string
         # ids would need the JVM's binary collation re-implemented.
-        logger.info(
-            "%s: pairing kernel declined (non-integral ids) — join path",
-            guard_op,
-        )
-        return None
+        return declined("non-integral ids")
     spark = posting.sparkSession
 
-    # Cheap doc-count cap FIRST (r13 ADVICE item 3): the largest —
-    # ineligible — corpora used to pay the full posting dictionary
-    # shuffle below before falling back. The count is one action on the
-    # caller-persisted frame (or passed in by callers that already
-    # counted it); an over-cap corpus now skips the dictionary
-    # aggregation entirely, and the join path's own mass guard still
-    # raises at the same logical point with the same message. Sizeless
-    # (``sh is None``) callers defer the doc cap to the coded-posting
-    # collect, whose volume the posting cap already bounds.
+    # Cheap doc-count cap FIRST (r13 ADVICE item 3): an over-cap corpus
+    # skips the dictionary aggregation entirely. The count is one
+    # action on the caller-persisted frame (or passed in by callers
+    # that already counted it). Sizeless (``sh is None``) callers defer
+    # the doc cap to the coded-posting collect, whose volume the
+    # posting cap already bounds.
     if n_docs is None and sh is not None:
         n_docs = sh.count()
     if n_docs is not None and n_docs > NGRAM_KERNEL_MAX_DOCS:
-        logger.info(
-            "%s: pairing kernel declined (n_docs=%d > cap %d) — join path",
-            guard_op, n_docs, NGRAM_KERNEL_MAX_DOCS,
-        )
-        return None
+        return declined(f"n_docs={n_docs} > cap {NGRAM_KERNEL_MAX_DOCS}")
 
     dict_all = posting.groupBy("s").agg(F.count(F.lit(1)).alias("df_s"))
     # ONE conditional aggregation yields the capped dictionary's stats
@@ -561,51 +684,25 @@ def _blocked_inter_counts(
         F.count(F.when(~in_cap, 1)).alias("n_hot"),
     ).first()
     n_vocab = stats["n_vocab"] or 0
-    # the fail-fast contract is unchanged: same mass (Σc_s² over the
-    # capped posting), same knob, same remediations, raised before any
-    # heavy work — kernel or join path alike.
-    check_candidate_mass(
-        guard_op,
-        stats["mass"],
-        max_pair_rows,
-        knob="max_pair_rows",
-        law=guard_law
-        or "pairing mass sum_s c_s^2 over the inverted index; the "
-        "r10 probe's measured infeasibility boundary for EXACT "
-        "pairwise similarity on this engine's standard heap",
-        remediations=guard_remediations
-        or "cap hot shingles with max_shingle_freq "
-        "(lossy, documented recall contract) or switch to banded "
-        "minhash_lsh_pairs",
+    n_posting = stats["n_posting"] or 0
+    mass = stats["mass"] or 0.0
+    _check_pair_mass(
+        guard_op, mass, max_pair_rows, guard_law, guard_remediations
     )
-    if (
-        fallback_over_mass is not None
-        and (stats["mass"] or 0.0) > fallback_over_mass
-    ):
-        # opt-in soft cap for callers whose classic path never raises
-        # (e.g. the banded-minhash verify): over-mass corpora fall back
-        # instead of erroring.
-        logger.info(
-            "%s: pairing kernel declined (mass %.3e > soft cap %.3e) — "
-            "join path", guard_op, stats["mass"] or 0.0,
-            float(fallback_over_mass),
+    guarded = True
+    if fallback_over_mass is not None and mass > fallback_over_mass:
+        return declined(
+            f"mass {mass:.3e} > soft cap {float(fallback_over_mass):.3e}"
         )
-        return None
-    if (
-        n_vocab > NGRAM_KERNEL_MAX_VOCAB
-        or (stats["n_posting"] or 0) > NGRAM_KERNEL_MAX_POSTING
-    ):
-        logger.info(
-            "%s: pairing kernel declined (vocab=%d posting=%d vs caps "
-            "%d/%d) — join path", guard_op, n_vocab,
-            stats["n_posting"] or 0, NGRAM_KERNEL_MAX_VOCAB,
-            NGRAM_KERNEL_MAX_POSTING,
+    if n_vocab > NGRAM_KERNEL_MAX_VOCAB or n_posting > NGRAM_KERNEL_MAX_POSTING:
+        return declined(
+            f"vocab={n_vocab} posting={n_posting} vs caps "
+            f"{NGRAM_KERNEL_MAX_VOCAB}/{NGRAM_KERNEL_MAX_POSTING}"
         )
-        return None
     logger.info(
         "%s: pairing kernel engaged (n_docs=%s vocab=%d posting=%d "
-        "mass=%.3e)", guard_op, n_docs, n_vocab,
-        stats["n_posting"] or 0, stats["mass"] or 0.0,
+        "hot=%d mass=%.3e)", guard_op, n_docs, n_vocab, n_posting,
+        stats["n_hot"] or 0, mass,
     )
 
     id_ddl = idt.simpleString()
@@ -613,7 +710,7 @@ def _blocked_inter_counts(
         f"id_a {id_ddl}, id_b {id_ddl}, inter bigint, n_a int, n_b int"
     )
     if n_docs == 0 or n_vocab == 0:
-        return spark.createDataFrame([], out_schema)
+        return spark.createDataFrame([], out_schema), guarded
 
     # Dense shingle codes WITHOUT the serial coding stage (r14, r13
     # verdict item 3 — the cap probe measured the old single-partition
@@ -629,14 +726,9 @@ def _blocked_inter_counts(
     # dictionary's n_vocab and a collision (P ~ vocab²/2^65, ~4e-7 at
     # the 4M cap) falls back to the join path — never a silent wrong
     # answer.
-    capped = posting
-    if max_shingle_freq is not None and (stats["n_hot"] or 0) > 0:
-        # == the join path's broadcast anti-join of over-cap shingles
-        # (only evaluated when the stats proved hot shingles exist)
-        hot = dict_all.filter(
-            F.col("df_s") > max_shingle_freq
-        ).select("s")
-        capped = posting.join(F.broadcast(hot), "s", "left_anti")
+    # the join path's hot cap, evaluated only when the stats proved
+    # hot shingles exist
+    capped = _drop_hot(posting, max_shingle_freq) if stats["n_hot"] else posting
     hp = (
         capped.select("id", F.xxhash64("s").alias("h"))
         .orderBy("h", "id")
@@ -645,17 +737,15 @@ def _blocked_inter_counts(
     harr = hp["h"].to_numpy(np.int64)
     pids = hp["id"].to_numpy(np.int64)
     if len(harr) == 0:
-        return spark.createDataFrame([], out_schema)
+        return spark.createDataFrame([], out_schema), guarded
     code0 = np.concatenate(
         ([0], np.cumsum((harr[1:] != harr[:-1]).astype(np.int64)))
     )
     if int(code0[-1]) + 1 != n_vocab:
-        logger.info(
-            "%s: pairing kernel declined (xxhash64 shingle collision, "
-            "%d dense codes vs %d vocab) — join path",
-            guard_op, int(code0[-1]) + 1, n_vocab,
+        return declined(
+            f"xxhash64 shingle collision, {int(code0[-1]) + 1} dense "
+            f"codes vs {n_vocab} vocab"
         )
-        return None
     if sh is None:
         # sizeless (count-mode) caller: the doc universe and per-doc
         # counts fall out of the collected posting — it is distinct
@@ -664,17 +754,14 @@ def _blocked_inter_counts(
         ids, sizes = np.unique(pids, return_counts=True)
         n_docs = len(ids)
         if n_docs > NGRAM_KERNEL_MAX_DOCS:
-            logger.info(
-                "%s: pairing kernel declined post-collect (n_docs=%d > "
-                "cap %d) — join path", guard_op, n_docs,
-                NGRAM_KERNEL_MAX_DOCS,
+            return declined(
+                f"post-collect n_docs={n_docs} > cap {NGRAM_KERNEL_MAX_DOCS}"
             )
-            return None
     else:
         sizes_pdf = sh.select("id", F.size("shingles").alias("n")).toPandas()
         ids_raw = sizes_pdf["id"].to_numpy(np.int64)
         if len(np.unique(ids_raw)) != len(ids_raw):
-            return None  # duplicate doc ids: keep the join path's semantics
+            return declined("duplicate doc ids")  # keep join semantics
         order = np.argsort(ids_raw)
         ids = ids_raw[order]  # ascending, so index order == id order
         sizes = sizes_pdf["n"].to_numpy(np.int64)[order]
@@ -852,7 +939,7 @@ def _blocked_inter_counts(
     )
     return spark.range(0, n_blocks, 1, max(npart, 1)).mapInPandas(
         _kernel, out_schema
-    )
+    ), guarded
 
 
 def ngram_jaccard_pairs(
@@ -886,11 +973,11 @@ def ngram_jaccard_pairs(
     shuffle; the prefix form pays it only over prefix postings.
     (r13: within the documented caps the direct path no longer
     shuffles that mass at all — ``_blocked_inter_counts`` computes the
-    identical counts in a blocked numpy kernel over a broadcast
-    integer-coded posting, which rebalances the prefix-vs-direct
-    trade: the uniform-df corpora where direct already won now run
-    ~10x faster, while the prefix path remains the open-ended-scale
-    fallback beyond the kernel caps.)
+    identical counts in a blocked numpy kernel over an integer-coded
+    posting shipped as one mmap'd file, which rebalances the
+    prefix-vs-direct trade: the uniform-df corpora where direct
+    already won now run ~10x faster, while the prefix path remains the
+    open-ended-scale fallback beyond the kernel caps.)
 
     ``max_shingle_freq`` remains the lossy 100 TB backstop: shingles
     shared by more than N docs are dropped from the inverted index,
@@ -975,24 +1062,6 @@ def ngram_jaccard_pairs(
     """
     sh = with_shingles(df, text_col, id_col, k).persist(StorageLevel.MEMORY_AND_DISK)
     posting = sh.select("id", F.explode("shingles").alias("s"))
-    hot = None
-    if max_shingle_freq is not None:
-        # stop-shingle set is small (only over-cap postings) → broadcast
-        # anti-join, lazy — costs one aggregation over the cached shingle
-        # frame inside the main job, not a separate action.
-        hot = (
-            posting.groupBy("s")
-            .count()
-            .filter(F.col("count") > max_shingle_freq)
-            .select("s")
-        )
-        if logger.isEnabledFor(logging.DEBUG):
-            logger.debug(
-                "ngram_jaccard_pairs: %d stop-shingles shared by more than %d "
-                "docs dropped from the inverted index",
-                hot.count(),
-                max_shingle_freq,
-            )
     n_docs_hint = None
     if prefix_filter == "auto":
         # Dispatch on the statistic that predicts the winner (see the
@@ -1000,13 +1069,10 @@ def ngram_jaccard_pairs(
         # Σc_s² pairing cost carried by hot shingles, computed over
         # the index the direct path would actually pair on (i.e. after
         # the lossy cap, which removes hot shingles by itself).
-        idx = (
-            posting.join(F.broadcast(hot), "s", "left_anti")
-            if hot is not None
-            else posting
-        )
         n_docs_hint = sh.count()
-        ratio = hot_shingle_mass_ratio(idx, n_docs_hint)
+        ratio = hot_shingle_mass_ratio(
+            _drop_hot(posting, max_shingle_freq), n_docs_hint
+        )
         prefix_filter = ratio >= 0.5
         logger.info(
             "ngram_jaccard_pairs auto dispatch: hot-shingle mass ratio "
@@ -1015,115 +1081,62 @@ def ngram_jaccard_pairs(
             "prefix" if prefix_filter else "direct",
         )
     if not prefix_filter:
-        # r13 optimization: the direct path's pairing self-join +
-        # pair-keyed count shuffles Σc_s² mostly-singleton rows; the
-        # blocked kernel computes the same exact counts on an integer
-        # proxy and moves only qualifying pairs. Identical results
-        # (see _blocked_inter_counts); ineligible corpora (huge, or
-        # non-numeric ids) fall through to the join path below. The
-        # kernel re-checks the pair-mass guard with the same value and
-        # message the join path would have raised.
-        kern = _blocked_inter_counts(
-            posting,
-            sh,
-            n_docs=n_docs_hint,
-            max_shingle_freq=max_shingle_freq,
-            max_pair_rows=max_pair_rows,
-            guard_op="ngram_jaccard_pairs (direct path)",
-            keep_mode="jaccard",
-            threshold=threshold,
+        return _with_jaccard(
+            _exact_pair_counts(
+                posting,
+                sh,
+                n_docs=n_docs_hint,
+                max_shingle_freq=max_shingle_freq,
+                max_pair_rows=max_pair_rows,
+                guard_op="ngram_jaccard_pairs (direct path)",
+                keep_mode="jaccard",
+                threshold=threshold,
+            ),
+            threshold,
         )
-        if kern is not None:
-            # the same in-plan arithmetic as the join path: double
-            # division of the exact integer counts, then the filter.
-            return (
-                kern.withColumn(
-                    "jaccard",
-                    F.col("inter").cast("double")
-                    / (
-                        F.col("n_a") + F.col("n_b") - F.col("inter")
-                    ).cast("double"),
-                )
-                .filter(F.col("jaccard") >= threshold)
-                .select("id_a", "id_b", "jaccard")
-            )
-    if prefix_filter:
-        # Prefix lengths/ranks derive from the FULL posting (hot
-        # shingles still present); hot removal happens on the selected
-        # prefixes below. Hot shingles have strictly the largest df so
-        # they sort last — see the docstring's recall-contract proof.
-        freq = posting.groupBy("s").agg(F.count(F.lit(1)).alias("df_s"))
-        w = Window.partitionBy("id")
-        ranked = (
-            posting.join(freq, "s")
-            .withColumn("rn", F.row_number().over(w.orderBy("df_s", "s")))
-            .withColumn("n", F.count(F.lit(1)).over(w))
-        )
-        # ceil with a tiny epsilon: float t·n landing a hair ABOVE an
-        # exact integer would shorten the prefix and lose pairs at
-        # exactly the threshold; under-shooting only lengthens it.
-        alpha = F.ceil(F.lit(threshold) * F.col("n") - F.lit(1e-9))
-        # (rn, n) ride along for the PPJoin positional filter at the
-        # candidate join below.
-        posting = ranked.filter(F.col("rn") <= F.col("n") - alpha + 1).select(
-            "id", "s", "rn", "n"
-        )
-    if hot is not None:
-        posting = posting.join(F.broadcast(hot), "s", "left_anti")
-    if prefix_filter:
-        # Persist the prefix posting: deriving it costs a freq join plus
-        # two per-doc window passes, and THREE consumers read it — the
-        # pair-budget guard's count action below and both sides of the
-        # candidate self-join. Without the persist the guard re-derives
-        # the whole ranked pipeline as a throwaway job (measured ~40% of
-        # the kcore query's pairs phase at sf0.1). The frame is strictly
-        # smaller than the full posting (prefixes only), MEMORY_AND_DISK
-        # spills rather than pins, and the guard's action doubles as the
-        # materializing pass. The direct path stays unpersisted: its
-        # posting is one explode over the already-cached shingle frame,
-        # cheaper re-derived than double-cached.
-        # NOTE (r14, r13 verdict item 4): eager localCheckpoint was
-        # tried HERE and measured 3x SLOWER warm (2.3 -> 7.3s at
-        # sf0.1, consistent across sessions): the checkpointed RDD is
-        # row-serialized blocks with no column pruning, so the guard
-        # count and both candidate-join sides each deserialize every
-        # column of every row, where the columnar InMemoryRelation
-        # serves each consumer only the columns it reads. The
-        # truncation lever is for REPEATED DERIVATION seams (kcore's
-        # per-round plans), not for a multi-consumer cache of a
-        # wide-ish frame. Reverted; persist stands.
-        posting = posting.persist(StorageLevel.MEMORY_AND_DISK)
-    # Fail-fast at the exactness boundary (r10 verdict item 3): the
-    # r10 probe proved both exact paths die past ~150k closed-vocab
-    # docs — the direct path's pairing aggregate by heap, the prefix
-    # path's candidate re-verify by shuffle disk — and a caller used
-    # to discover that as a dead executor an hour in. Σc_s² over the
-    # posting each branch actually pairs on (post-prefix, post-cap) is
-    # the exact pairing-row count, and it is one cheap count-shuffle
-    # over the already-cached shingle frame, so raise HERE, in
-    # seconds, with the remediations spelled out. Pass None to waive
-    # (e.g. a probe run with a 24g heap).
+    # Prefix lengths/ranks derive from the FULL posting (hot shingles
+    # still present); hot removal happens on the selected prefixes
+    # below. Hot shingles have strictly the largest df so they sort
+    # last — see the docstring's recall-contract proof.
+    freq = posting.groupBy("s").agg(F.count(F.lit(1)).alias("df_s"))
+    w = Window.partitionBy("id")
+    ranked = (
+        posting.join(freq, "s")
+        .withColumn("rn", F.row_number().over(w.orderBy("df_s", "s")))
+        .withColumn("n", F.count(F.lit(1)).over(w))
+    )
+    # ceil with a tiny epsilon: float t·n landing a hair ABOVE an
+    # exact integer would shorten the prefix and lose pairs at
+    # exactly the threshold; under-shooting only lengthens it.
+    alpha = F.ceil(F.lit(threshold) * F.col("n") - F.lit(1e-9))
+    # (rn, n) ride along for the PPJoin positional filter at the
+    # candidate join below.
+    prefixes = ranked.filter(F.col("rn") <= F.col("n") - alpha + 1).select(
+        "id", "s", "rn", "n"
+    )
+    # Persist the prefix posting: deriving it costs a freq join plus
+    # two per-doc window passes, and THREE consumers read it — the
+    # pair-budget guard's count action below and both sides of the
+    # candidate self-join. Without the persist the guard re-derives the
+    # whole ranked pipeline as a throwaway job (measured ~40% of the
+    # kcore query's pairs phase at sf0.1). The frame is strictly
+    # smaller than the full posting (prefixes only), MEMORY_AND_DISK
+    # spills rather than pins, and the guard's action doubles as the
+    # materializing pass. The columnar cache serves each consumer only
+    # the columns it reads.
+    posting = _drop_hot(prefixes, max_shingle_freq, index=posting).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    # Fail-fast at the exactness boundary (r10 verdict item 3): Σc_s²
+    # over the prefix posting is the exact pairing-row count, one cheap
+    # count-shuffle over the cached frame — raise HERE, in seconds,
+    # instead of a dead executor an hour in. None waives it.
     if max_pair_rows is not None:
-        pair_rows = (
-            posting.groupBy("s")
-            .agg(F.count(F.lit(1)).cast("double").alias("c"))
-            .agg(F.sum(F.col("c") * F.col("c")).alias("pr"))
-            .first()["pr"]
-        )
-        path = "prefix" if prefix_filter else "direct"
-        check_candidate_mass(
-            f"ngram_jaccard_pairs ({path} path)",
-            pair_rows,
+        _check_pair_mass(
+            "ngram_jaccard_pairs (prefix path)", _pair_mass(posting),
             max_pair_rows,
-            knob="max_pair_rows",
-            law="pairing mass sum_s c_s^2 over the inverted index; the "
-            "r10 probe's measured infeasibility boundary for EXACT "
-            "pairwise similarity on this engine's standard heap",
-            remediations="cap hot shingles with max_shingle_freq "
-            "(lossy, documented recall contract) or switch to banded "
-            "minhash_lsh_pairs",
         )
-    elif prefix_filter:
+    else:
         # r12 ADVICE item 2: with the guard waived the persist above is
         # lazy and its first consumers are BOTH sides of the candidate
         # self-join — two references to a persisted-but-unmaterialized
@@ -1132,71 +1145,50 @@ def ngram_jaccard_pairs(
         # The guard's count normally doubles as the materializing
         # action; run it explicitly when the guard is off.
         posting.count()
-    if prefix_filter:
-        a = posting.select(
-            F.col("id").alias("id_a"),
-            "s",
-            F.col("rn").alias("rn_a"),
-            F.col("n").alias("n_a"),
-        )
-        b = posting.select(
-            F.col("id").alias("id_b"),
-            "s",
-            F.col("rn").alias("rn_b"),
-            F.col("n").alias("n_b"),
-        )
-        # PPJoin positional filter (Xiao et al. 2008), LOSSLESS: J >= t
-        # iff the intersection O >= ceil(t/(1+t)·(n_a+n_b)) =: o_min
-        # (rearrange O/(n_a+n_b-O) >= t; O integral). For a shared
-        # shingle at full-set ranks (rn_a, rn_b), every OTHER common
-        # element the order-minimal match admits sits strictly after it
-        # in both orders, so O <= 1 + min(n_a-rn_a, n_b-rn_b). A
-        # qualifying pair's order-minimal common element is in both
-        # prefixes (the prefix guarantee) and has no earlier common
-        # element, so that occurrence always passes — keeping pairs
-        # where ANY occurrence passes (then distinct) loses nothing,
-        # while hopeless candidates (648k -> the low thousands at
-        # sf0.1/t=0.3) never reach the array-intersect verify. Epsilon
-        # on the ceil can only LOWER the bound — the safe direction.
-        o_min = F.ceil(
-            F.lit(threshold / (1.0 + threshold)) * (F.col("n_a") + F.col("n_b"))
-            - F.lit(1e-9)
-        )
-        cand = (
-            a.join(b, "s")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .filter(
-                F.lit(1)
-                + F.least(
-                    F.col("n_a") - F.col("rn_a"), F.col("n_b") - F.col("rn_b")
-                )
-                >= o_min
-            )
-            .select("id_a", "id_b")
-            .distinct()
-        )
-        return _jaccard_on_pairs(cand, sh, n_docs=sh.count()).filter(
-            F.col("jaccard") >= threshold
-        )
-    a = posting.select(F.col("id").alias("id_a"), "s")
-    b = posting.select(F.col("id").alias("id_b"), "s")
-    inter = (
+    a = posting.select(
+        F.col("id").alias("id_a"),
+        "s",
+        F.col("rn").alias("rn_a"),
+        F.col("n").alias("n_a"),
+    )
+    b = posting.select(
+        F.col("id").alias("id_b"),
+        "s",
+        F.col("rn").alias("rn_b"),
+        F.col("n").alias("n_b"),
+    )
+    # PPJoin positional filter (Xiao et al. 2008), LOSSLESS: J >= t
+    # iff the intersection O >= ceil(t/(1+t)·(n_a+n_b)) =: o_min
+    # (rearrange O/(n_a+n_b-O) >= t; O integral). For a shared
+    # shingle at full-set ranks (rn_a, rn_b), every OTHER common
+    # element the order-minimal match admits sits strictly after it
+    # in both orders, so O <= 1 + min(n_a-rn_a, n_b-rn_b). A
+    # qualifying pair's order-minimal common element is in both
+    # prefixes (the prefix guarantee) and has no earlier common
+    # element, so that occurrence always passes — keeping pairs
+    # where ANY occurrence passes (then distinct) loses nothing,
+    # while hopeless candidates (648k -> the low thousands at
+    # sf0.1/t=0.3) never reach the array-intersect verify. Epsilon
+    # on the ceil can only LOWER the bound — the safe direction.
+    o_min = F.ceil(
+        F.lit(threshold / (1.0 + threshold)) * (F.col("n_a") + F.col("n_b"))
+        - F.lit(1e-9)
+    )
+    cand = (
         a.join(b, "s")
         .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sizes = sh.select("id", F.size("shingles").alias("n"))
-    return (
-        inter.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n", "n_a"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n", "n_b"), "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("inter").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("inter")).cast("double"),
+        .filter(
+            F.lit(1)
+            + F.least(
+                F.col("n_a") - F.col("rn_a"), F.col("n_b") - F.col("rn_b")
+            )
+            >= o_min
         )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+        .select("id_a", "id_b")
+        .distinct()
+    )
+    return _jaccard_on_pairs(cand, sh, n_docs=sh.count()).filter(
+        F.col("jaccard") >= threshold
     )
 
 
@@ -1236,12 +1228,13 @@ def ngram_containment_dropped(
     """
     sh = with_shingles(df, text_col, id_col, k).persist(StorageLevel.MEMORY_AND_DISK)
     posting = sh.select("id", F.explode("shingles").alias("s"))
-    # r13 optimization: same blocked-kernel replacement as the jaccard
-    # direct path — `both` is exactly the kernel's output shape, and
-    # the containment keep-rule (inter/min(n_a,n_b) >= threshold, the
-    # max of the two directional containments) makes the kernel frame
-    # a superset of every row the directional filters below can keep.
-    both = _blocked_inter_counts(
+    # The containment keep-rule (inter/min(n_a,n_b) >= threshold, the
+    # max of the two directional containments) keeps every pair the
+    # directional filters below can keep. This caller never raises
+    # (max_pair_rows=None), so the kernel's soft mass cap (r13 ADVICE
+    # item 1) bounds its memory at the family budget and over-mass
+    # corpora take the join tier instead.
+    both = _exact_pair_counts(
         posting,
         sh,
         max_shingle_freq=max_shingle_freq,
@@ -1249,36 +1242,8 @@ def ngram_containment_dropped(
         guard_op="ngram_containment_dropped",
         keep_mode="containment",
         threshold=threshold,
-        # r13 ADVICE item 1: this caller's classic path never raises
-        # (max_pair_rows=None), so without a soft cap the kernel's
-        # per-task allocations were unguarded within the doc/vocab/
-        # posting caps (Σc² can reach ~1e11 with max_shingle_freq
-        # left None by a caller). Over-mass corpora now fall back to
-        # the join path, preserving the never-raises contract while
-        # bounding kernel memory at the family budget.
         fallback_over_mass=NGRAM_PAIR_ROW_BUDGET,
     )
-    if both is None:
-        if max_shingle_freq is not None:
-            hot = (
-                posting.groupBy("s")
-                .count()
-                .filter(F.col("count") > max_shingle_freq)
-                .select("s")
-            )
-            posting = posting.join(F.broadcast(hot), "s", "left_anti")
-        a = posting.select(F.col("id").alias("id_a"), "s")
-        b = posting.select(F.col("id").alias("id_b"), "s")
-        inter = (
-            a.join(b, "s")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
-        sizes = sh.select("id", F.size("shingles").alias("n"))
-        both = inter.join(
-            sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n", "n_a"), "id_a"
-        ).join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n", "n_b"), "id_b")
     sided = both.select(
         F.col("id_a").alias("doc_id"),
         F.col("id_b").alias("container_id"),
@@ -1525,71 +1490,58 @@ def connected_components(
     # scheduler latency per round. Near-dup pair graphs are tiny at
     # any corpus scale (pairs, not docs); corpora whose pair set
     # exceeds the cap run the distributed loop below unchanged. The
-    # anti-join guard keeps the distributed semantics for callers
-    # whose pairs mention ids outside the universe (propagation is
-    # restricted to ``ids`` there — no repo caller does this, but the
-    # kernel must not widen it).
-    from chapterhouseqe_spark.operators.graph import (
-        SMALL_GRAPH_MAX_EDGES,
-        _collect_int_edges,
+    # kernel also declines pairs that mention ids outside ``ids``:
+    # the distributed loop restricts propagation to ``ids`` there (no
+    # repo caller does this, but the kernel must not widen it).
+    import numpy as np
+    import pandas as pd
+
+    from chapterhouseqe_spark.operators.graph import _small_graph
+
+    spark = pairs.sparkSession
+
+    def within_ids(small, _n_edges):
+        node_ids, _, _, np_id, id_ddl = small
+        touched = spark.createDataFrame(
+            pd.DataFrame({"id": node_ids.astype(np_id)}), f"id {id_ddl}"
+        )
+        return touched.join(ids, "id", "left_anti").count() == 0
+
+    _, small = _small_graph(
+        pairs, "id_a", "id_b", "connected_components", fits=within_ids
     )
-
-    n_pairs = pairs.count()  # cheap: checkpointed
-    if n_pairs <= SMALL_GRAPH_MAX_EDGES:
-        small = _collect_int_edges(pairs, "id_a", "id_b")
-        if small is None:
-            # dispatch visibility (r13 verdict item 7)
-            logger.info(
-                "connected_components: small-graph kernel declined "
-                "(non-integral ids) — distributed loop"
+    if small is not None:
+        node_ids, ai, bi, np_id, id_ddl = small
+        lbl = np.arange(len(node_ids), dtype=np.int64)
+        converged = len(node_ids) == 0
+        for _ in range(max_iterations):
+            if converged:
+                break
+            nm = lbl.copy()
+            np.minimum.at(nm, ai, lbl[bi])
+            np.minimum.at(nm, bi, lbl[ai])
+            upd = np.minimum(nm, nm[nm])  # hop + pointer jump
+            converged = np.array_equal(upd, lbl)
+            lbl = upd
+        if not converged:
+            raise RuntimeError(
+                f"connected_components: no convergence after "
+                f"{max_iterations} rounds (graph diameter "
+                "exceeds the iteration cap)"
             )
-        if small is not None:
-            logger.info(
-                "connected_components: small-graph kernel engaged "
-                "(n_pairs=%d)", n_pairs,
-            )
-            import numpy as np
-            import pandas as pd
-
-            node_ids, ai, bi, np_id, id_ddl = small
-            spark = pairs.sparkSession
-            touched = spark.createDataFrame(
-                pd.DataFrame({"id": node_ids.astype(np_id)}), f"id {id_ddl}"
-            )
-            if touched.join(ids, "id", "left_anti").count() == 0:
-                lbl = np.arange(len(node_ids), dtype=np.int64)
-                converged = len(node_ids) == 0
-                for _ in range(max_iterations):
-                    if converged:
-                        break
-                    nm = lbl.copy()
-                    np.minimum.at(nm, ai, lbl[bi])
-                    np.minimum.at(nm, bi, lbl[ai])
-                    upd = np.minimum(nm, nm[nm])  # hop + pointer jump
-                    if np.array_equal(upd, lbl):
-                        converged = True
-                    lbl = upd
-                if not converged:
-                    raise RuntimeError(
-                        f"connected_components: no convergence after "
-                        f"{max_iterations} rounds (graph diameter "
-                        "exceeds the iteration cap)"
-                    )
-                comp = spark.createDataFrame(
-                    pd.DataFrame(
-                        {
-                            "id": node_ids.astype(np_id),
-                            "component": node_ids[lbl].astype(np_id),
-                        }
-                    ),
-                    f"id {id_ddl}, component {id_ddl}",
-                )
-                return ids.join(F.broadcast(comp), "id", "left").select(
-                    "id",
-                    F.coalesce(F.col("component"), F.col("id")).alias(
-                        "component"
-                    ),
-                )
+        comp = spark.createDataFrame(
+            pd.DataFrame(
+                {
+                    "id": node_ids.astype(np_id),
+                    "component": node_ids[lbl].astype(np_id),
+                }
+            ),
+            f"id {id_ddl}, component {id_ddl}",
+        )
+        return ids.join(F.broadcast(comp), "id", "left").select(
+            "id",
+            F.coalesce(F.col("component"), F.col("id")).alias("component"),
+        )
     edges = (
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionAll(
@@ -1612,12 +1564,6 @@ def connected_components(
     # each generation's cache before the parent is unpersisted.
     label_sum = F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
     prev_sum = labels.agg(label_sum).first()["s"]
-    # NOTE (r13 optimization round): a size-adaptive broadcast of the
-    # node-sized labels/neighbor_min/jump frames was tried here and
-    # REVERTED — same-session A/B measured no win (AQE already
-    # converts these joins at runtime), and the per-round broadcast
-    # residue (hash relations are not unpersistable from the API)
-    # regressed queries later in the bench's shared-session tier.
     try:
         for i in range(max_iterations):
             neighbor_min = (
@@ -2569,74 +2515,34 @@ def winnow_overlap_pairs(
     kernel caps the pairing join + pair-keyed count dispatch to the
     same blocked numpy kernel as the n-gram family —
     :func:`_blocked_inter_counts` with the exact integer
-    ``inter >= min_shared`` keep rule (``keep_mode="count"``). The
-    fingerprint posting is already integer-keyed (60-bit BIGINT fps),
-    so the kernel skips nothing but the string dictionary; ``inter``
-    is counted over the capped posting exactly as the join's
-    ``n_shared`` was, and the same fail-fast raises with this
-    operator's documented message. Over-cap corpora run the classic
-    join below unchanged.
+    ``inter >= min_shared`` keep rule (``keep_mode="count"``), through
+    the shared :func:`_exact_pair_counts` dispatch. The fingerprint
+    posting is already integer-keyed (60-bit BIGINT fps), so the
+    kernel skips nothing but the string dictionary; ``inter`` is
+    counted over the capped posting exactly as the join's
+    ``n_shared``, and the same fail-fast raises with this operator's
+    documented message on either tier. Over-cap corpora run the
+    classic join.
     """
     fps = winnow_fingerprints(df, text_col, id_col, k, w).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    posting = fps.select(F.col(id_col).alias("id"), "fp")
-    kern = _blocked_inter_counts(
-        posting.withColumnRenamed("fp", "s"),
-        None,
-        max_shingle_freq=max_fp_freq,
-        max_pair_rows=max_pair_rows,
-        guard_op="winnow_overlap_pairs",
-        keep_mode="count",
-        threshold=float(min_shared),
-        guard_law="pairing mass sum_fp c_fp^2 over the fingerprint "
-        "index",
-        guard_remediations="lower max_fp_freq (drops boilerplate "
-        "fingerprints), raise w (sparser fingerprint selection), "
-        "or switch to minhash_lsh_pairs",
-    )
-    if kern is not None:
-        # same in-plan shape as the join path's tail: the exact
-        # integer count filtered by the caller's floor.
-        return (
-            kern.select(
-                "id_a",
-                "id_b",
-                F.col("inter").cast("long").alias("n_shared"),
-            )
-            .filter(F.col("n_shared") >= min_shared)
-        )
-    if max_fp_freq is not None:
-        hot = (
-            posting.groupBy("fp")
-            .count()
-            .filter(F.col("count") > max_fp_freq)
-            .select("fp")
-        )
-        posting = posting.join(F.broadcast(hot), "fp", "left_anti")
-    if max_pair_rows is not None:
-        pair_rows = (
-            posting.groupBy("fp")
-            .agg(F.count(F.lit(1)).cast("double").alias("c"))
-            .agg(F.sum(F.col("c") * F.col("c")).alias("pr"))
-            .first()["pr"]
-        )
-        check_candidate_mass(
-            "winnow_overlap_pairs",
-            pair_rows,
-            max_pair_rows,
-            knob="max_pair_rows",
-            law="pairing mass sum_fp c_fp^2 over the fingerprint index",
-            remediations="lower max_fp_freq (drops boilerplate "
+    posting = fps.select(F.col(id_col).alias("id"), F.col("fp").alias("s"))
+    return (
+        _exact_pair_counts(
+            posting,
+            None,
+            max_shingle_freq=max_fp_freq,
+            max_pair_rows=max_pair_rows,
+            guard_op="winnow_overlap_pairs",
+            guard_law="pairing mass sum_fp c_fp^2 over the fingerprint "
+            "index",
+            guard_remediations="lower max_fp_freq (drops boilerplate "
             "fingerprints), raise w (sparser fingerprint selection), "
             "or switch to minhash_lsh_pairs",
+            keep_mode="count",
+            threshold=float(min_shared),
         )
-    a = posting.select(F.col("id").alias("id_a"), "fp")
-    b = posting.select(F.col("id").alias("id_b"), "fp")
-    return (
-        a.join(b, "fp")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
+        .select("id_a", "id_b", F.col("inter").cast("long").alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )

@@ -34,31 +34,53 @@ logger = logging.getLogger(__name__)
 SMALL_GRAPH_MAX_EDGES = 2_000_000
 
 
-def _collect_int_edges(e: DataFrame, src: str, dst: str):
-    """(ids, src_idx, dst_idx, numpy id dtype, ddl) for an integral
-    edge frame known to be under SMALL_GRAPH_MAX_EDGES, else None.
-    Caller must have materialized/persisted ``e`` (the collect is one
-    cache read)."""
+def _small_graph(e: DataFrame, src: str, dst: str, op: str, fits=None):
+    """The small-graph dispatch of every iterative graph operator here
+    and ``connected_components``: ``(n_edges, small)``.
+
+    Counts ``e`` — the caller's persisted or checkpointed edge frame,
+    so the count is also its materializing action — and, at or under
+    SMALL_GRAPH_MAX_EDGES with integral ``src``/``dst`` columns,
+    collects it as ``small = (ids, src_idx, dst_idx, numpy id dtype,
+    ddl)`` for the caller's numpy kernel. ``fits(small, n_edges)`` lets
+    a kernel add its own precondition (a work bound, an id universe).
+    ``small`` is None when the caller
+    must run its distributed loop; the path taken is logged either way.
+    """
     import numpy as np
     from pyspark.sql import types as T
 
-    idt = e.schema[src].dataType
-    # both endpoint columns must be integral (r13 ADVICE item 4): all
-    # current callers pass same-typed columns, but a non-integral dst
-    # would otherwise pass the gate and die inside to_numpy instead of
-    # falling back to the distributed loop.
-    _ints = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
-    if not isinstance(idt, _ints) or not isinstance(
-        e.schema[dst].dataType, _ints
-    ):
-        return None
-    pdf = e.select(src, dst).toPandas()
-    s = pdf[src].to_numpy(np.int64)
-    d = pdf[dst].to_numpy(np.int64)
-    ids = np.unique(np.concatenate([s, d]))
-    np_id = {"bigint": np.int64, "int": np.int32, "smallint": np.int16,
-             "tinyint": np.int8}[idt.simpleString()]
-    return ids, np.searchsorted(ids, s), np.searchsorted(ids, d), np_id, idt.simpleString()
+    n_edges = e.count()
+    ints = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
+    small = None
+    if n_edges > SMALL_GRAPH_MAX_EDGES:
+        why = f"n_edges={n_edges} > cap {SMALL_GRAPH_MAX_EDGES}"
+    elif not all(isinstance(e.schema[c].dataType, ints) for c in (src, dst)):
+        # both endpoints: a non-integral dst would otherwise die inside
+        # to_numpy instead of falling back to the distributed loop
+        why = "non-integral ids"
+    else:
+        pdf = e.select(src, dst).toPandas()
+        s = pdf[src].to_numpy(np.int64)
+        d = pdf[dst].to_numpy(np.int64)
+        ids = np.unique(np.concatenate([s, d]))
+        ddl = e.schema[src].dataType.simpleString()
+        np_id = {"bigint": np.int64, "int": np.int32, "smallint": np.int16,
+                 "tinyint": np.int8}[ddl]
+        small = (ids, np.searchsorted(ids, s), np.searchsorted(ids, d),
+                 np_id, ddl)
+        why = f"kernel precondition not met, n_nodes={len(ids)}"
+        if fits is not None and not fits(small, n_edges):
+            small = None
+    if small is None:
+        logger.info(
+            "%s: small-graph kernel declined (%s) — distributed loop", op, why
+        )
+    else:
+        logger.info(
+            "%s: small-graph kernel engaged (n_edges=%d)", op, n_edges
+        )
+    return n_edges, small
 
 
 def pagerank_fixed_point(
@@ -111,46 +133,29 @@ def pagerank_fixed_point(
     # recurrence runs in numpy on the collected integer edge list — the
     # arithmetic is exact int64 (adds, floor divisions), so the result
     # is bit-identical to the distributed loop's, without 3 rounds x
-    # (join + agg + join) of sub-second Spark jobs. The count below
+    # (join + agg + join) of sub-second Spark jobs. The gate's count
     # materializes the persist either way.
-    n_edges = e.count()
-    if n_edges <= SMALL_GRAPH_MAX_EDGES:
-        small = _collect_int_edges(e, "src", "dst")
-        if small is None:
-            # dispatch visibility (r13 verdict item 7): a silent
-            # fallback here would quietly restore the per-round job
-            # cost with no signal in the bench.
-            logger.info(
-                "pagerank_fixed_point: small-graph kernel declined "
-                "(non-integral ids) — distributed loop"
-            )
-        if small is not None:
-            logger.info(
-                "pagerank_fixed_point: small-graph kernel engaged "
-                "(n_edges=%d)", n_edges,
-            )
-            import numpy as np
-            import pandas as pd
+    _, small = _small_graph(e, "src", "dst", "pagerank_fixed_point")
+    if small is not None:
+        import numpy as np
+        import pandas as pd
 
-            node_ids, si, di, np_id, id_ddl = small
-            n = len(node_ids)
-            base_v = (100 - damping_pct) * scale // 100
-            schema = f"id {id_ddl}, rank bigint"
-            if n == 0:
-                return edges.sparkSession.createDataFrame([], schema)
-            odeg = np.bincount(si, minlength=n)
-            r = np.full(n, scale, np.int64)
-            for _ in range(n_iter):
-                share = r[si] // odeg[si]  # ranks/degrees nonnegative
-                contrib = np.zeros(n, np.int64)
-                np.add.at(contrib, di, share)  # int64-exact
-                r = base_v + (damping_pct * contrib) // 100
-            return edges.sparkSession.createDataFrame(
-                pd.DataFrame(
-                    {"id": node_ids.astype(np_id), "rank": r}
-                ),
-                schema,
-            )
+        node_ids, si, di, np_id, id_ddl = small
+        n = len(node_ids)
+        base_v = (100 - damping_pct) * scale // 100
+        schema = f"id {id_ddl}, rank bigint"
+        if n == 0:
+            return edges.sparkSession.createDataFrame([], schema)
+        odeg = np.bincount(si, minlength=n)
+        r = np.full(n, scale, np.int64)
+        for _ in range(n_iter):
+            share = r[si] // odeg[si]  # ranks/degrees nonnegative
+            contrib = np.zeros(n, np.int64)
+            np.add.at(contrib, di, share)  # int64-exact
+            r = base_v + (damping_pct * contrib) // 100
+        return edges.sparkSession.createDataFrame(
+            pd.DataFrame({"id": node_ids.astype(np_id), "rank": r}), schema
+        )
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     e_deg = e.join(deg, "src").persist(StorageLevel.MEMORY_AND_DISK)
     nodes = (
@@ -166,13 +171,6 @@ def pagerank_fixed_point(
     # per subtree instance (the kcore lesson, PLANS.md round 12).
     e_deg.count()
     nodes.count()
-    # NOTE (r13 optimization round): size-adaptively broadcasting the
-    # node-sized ranks/contrib frames here was tried and REVERTED —
-    # the bench measured a consistent +0.4s (spread 0.15) WITH the
-    # broadcasts: AQE already converts these joins at runtime where
-    # profitable, and per-iteration broadcast hash relations are not
-    # unpersistable from the API, so they only add heap residue in
-    # long-lived sessions.
     base = (100 - damping_pct) * scale // 100
     ranks = nodes.select("id", F.lit(scale).cast("long").alias("rank"))
     for _ in range(n_iter):
@@ -311,89 +309,62 @@ def triangle_count(
     # row): under the shared small-graph cap the whole count runs in
     # numpy on the collected canonical edge list. n_triangles is ONE
     # exact integer — any correct algorithm returns the identical row —
-    # and the kernel replays the same degree-ordered wedge formulation
-    # (low-(degree,id) orientation, wedges against the undirected edge
-    # set). The wedge mass Σ outdeg² is computed exactly BEFORE any
-    # allocation and over-mass graphs fall back to the distributed
-    # edge-iterator below, which keeps the arboricity-bounded 100 TB
-    # posture; so do non-integral ids and over-cap edge counts.
-    n_edges_precount = und.count()
-    if n_edges_precount <= SMALL_GRAPH_MAX_EDGES:
-        small = _collect_int_edges(und, "a", "b")
-        if small is not None:
-            import numpy as np
+    # and the kernel replays the same degree-ordered formulation
+    # (low-(degree,id) orientation). Bitset edge-iterator: for every
+    # oriented edge (u,w) the contribution is |N+(u) ∩ N+(w)| — one
+    # AND + popcount over nw words, so total work is n_edges · nw
+    # SEQUENTIAL word ops, independent of the Σoutdeg² wedge mass
+    # (indirect gathers defeat the prefetcher; the bitset form touches
+    # memory linearly). The adjacency matrix (n·nw·8 bytes) and the AND
+    # work (n_edges·nw words) are both bounded before any allocation;
+    # over-bound graphs, over-cap edge counts and non-integral ids run
+    # the distributed arboricity-bounded iterator below.
+    def bitset_fits(small, n_edges):
+        n = len(small[0])
+        nw = (n + 63) // 64  # bitset words per adjacency row
+        return n * nw * 8 <= 128_000_000 and n_edges * nw <= 400_000_000
 
-            node_ids, ai, bi, _np_id, _id_ddl = small
-            n = len(node_ids)
-            if n == 0:
-                return edges.sparkSession.createDataFrame(
-                    [(0, 0, 0)],
-                    "n_nodes long, n_edges long, n_triangles long",
-                )
-            nw = (n + 63) // 64  # bitset words per adjacency row
-            # bitset edge-iterator: for every oriented edge (u,w) the
-            # triangle contribution is |N+(u) ∩ N+(w)| — one AND +
-            # popcount over nw words, so total work is n_edges · nw
-            # SEQUENTIAL word ops, independent of the Σoutdeg² wedge
-            # mass. (A gather-based wedge materialization was measured
-            # first on this class of VM and rejected: 31M random
-            # gathers/searchsorteds ran ~25x slower than their op
-            # count — indirect access defeats the prefetcher; the
-            # bitset form touches memory linearly.) Bounded: the
-            # adjacency matrix is n·nw·8 bytes and the AND work
-            # n_edges·nw words; both gated below, with fallback to the
-            # distributed arboricity-bounded iterator.
-            if n * nw * 8 <= 128_000_000 and (
-                n_edges_precount * nw <= 400_000_000
-            ):
-                logger.info(
-                    "triangle_count: small-graph bitset kernel engaged "
-                    "(n=%d, n_edges=%d)", n, n_edges_precount,
-                )
-                deg_v = np.bincount(ai, minlength=n) + np.bincount(
-                    bi, minlength=n
-                )
-                # total order (degree, id): id index breaks ties —
-                # exactly the distributed orientation's (d, id) rule
-                okey = deg_v.astype(np.int64) * n + np.arange(
-                    n, dtype=np.int64
-                )
-                low_first = okey[ai] < okey[bi]
-                u = np.where(low_first, ai, bi)
-                w = np.where(low_first, bi, ai)
-                adj = np.zeros((n, nw), np.uint64)
-                np.bitwise_or.at(
-                    adj,
-                    (u, w >> 6),
-                    np.uint64(1) << (w & 63).astype(np.uint64),
-                )
-                acc = adj[u] & adj[w]  # (n_edges, nw), row-wise AND
-                # SWAR popcount — elementwise arithmetic, no lookups
-                m1 = np.uint64(0x5555555555555555)
-                m2 = np.uint64(0x3333333333333333)
-                m4 = np.uint64(0x0F0F0F0F0F0F0F0F)
-                h01 = np.uint64(0x0101010101010101)
-                acc -= (acc >> np.uint64(1)) & m1
-                acc = (acc & m2) + ((acc >> np.uint64(2)) & m2)
-                acc = (acc + (acc >> np.uint64(4))) & m4
-                n_tri = int(
-                    ((acc * h01) >> np.uint64(56)).sum(dtype=np.uint64)
-                )
-                return edges.sparkSession.createDataFrame(
-                    [(int(n), int(n_edges_precount), n_tri)],
-                    "n_nodes long, n_edges long, n_triangles long",
-                )
-            logger.info(
-                "triangle_count: small-graph kernel declined "
-                "(n=%d, nw=%d work bound) — distributed edge-iterator",
-                n, nw,
+    n_edges, small = _small_graph(
+        und, "a", "b", "triangle_count", fits=bitset_fits
+    )
+    if small is not None:
+        import numpy as np
+
+        node_ids, ai, bi, _np_id, _id_ddl = small
+        n = len(node_ids)
+        n_tri = 0
+        if n:
+            nw = (n + 63) // 64
+            deg_v = np.bincount(ai, minlength=n) + np.bincount(bi, minlength=n)
+            # total order (degree, id): id index breaks ties — exactly
+            # the distributed orientation's (d, id) rule
+            okey = deg_v.astype(np.int64) * n + np.arange(n, dtype=np.int64)
+            low_first = okey[ai] < okey[bi]
+            u = np.where(low_first, ai, bi)
+            w = np.where(low_first, bi, ai)
+            adj = np.zeros((n, nw), np.uint64)
+            np.bitwise_or.at(
+                adj, (u, w >> 6), np.uint64(1) << (w & 63).astype(np.uint64)
             )
-    # Materialize both caches before the wedge job references und 4x
-    # (deg twice, the membership join, the edge-count leg) and e twice
-    # — lazy persists multiply referenced in one job race their own
-    # block computation (the kcore lesson, PLANS.md round 12). und's
-    # count doubles as the n_edges the result needs anyway.
-    n_edges = und.count()
+            acc = adj[u] & adj[w]  # (n_edges, nw), row-wise AND
+            # SWAR popcount — elementwise arithmetic, no lookups
+            m1 = np.uint64(0x5555555555555555)
+            m2 = np.uint64(0x3333333333333333)
+            m4 = np.uint64(0x0F0F0F0F0F0F0F0F)
+            h01 = np.uint64(0x0101010101010101)
+            acc -= (acc >> np.uint64(1)) & m1
+            acc = (acc & m2) + ((acc >> np.uint64(2)) & m2)
+            acc = (acc + (acc >> np.uint64(4))) & m4
+            n_tri = int(((acc * h01) >> np.uint64(56)).sum(dtype=np.uint64))
+        return edges.sparkSession.createDataFrame(
+            [(int(n), int(n_edges), n_tri)],
+            "n_nodes long, n_edges long, n_triangles long",
+        )
+    # Materialize both remaining caches before the wedge job references
+    # deg twice and e twice — lazy persists multiply referenced in one
+    # job race their own block computation (the kcore lesson, PLANS.md
+    # round 12). The gate's count already materialized und and is the
+    # n_edges the result needs.
     n_nodes = deg.count()
     e.count()
     # Edge-iterator form of the same degree-ordered count (r13
@@ -425,13 +396,9 @@ def triangle_count(
         .agg(F.sum("c").alias("n_triangles"))
     )
     # n_nodes/n_edges as plan literals: the counts above already
-    # materialized the caches (und.count() doubled as n_edges from the
-    # start; deg.count() both materializes deg's cache — which the two
-    # orientation joins and the counts consumed independently before —
-    # and IS n_nodes), so the old two-crossJoin tail re-aggregating
-    # und and deg inside broadcast subtrees collapses to two literal
-    # columns on the 1-row triangle aggregate (r13 optimization round;
-    # guide §2.4 — same values, three fewer jobs / re-aggregations).
+    # materialized the caches and ARE those values, so no tail
+    # re-aggregates und and deg inside broadcast subtrees (r13
+    # optimization round; guide §2.4).
     return tri.select(
         F.lit(n_nodes).cast("long").alias("n_nodes"),
         F.lit(n_edges).cast("long").alias("n_edges"),

@@ -94,6 +94,12 @@ class _Handler(BaseHTTPRequestHandler):
             # engine's unknown-id KeyError (404 below) must stay
             # distinguishable so client retry loops don't spin on it
             return self._reply(400, {"error": "missing query_id parameter"})
+        paging = (q.get("offset", "0"), q.get("limit", "1000"))
+        if parsed.path == "/data" and not all(v.isdecimal() for v in paging):
+            # malformed paging is the caller's error, not a server fault
+            return self._reply(
+                400, {"error": "offset and limit must be non-negative integers"}
+            )
         try:
             if parsed.path == "/status":
                 st = self.engine.status(q["query_id"])
@@ -109,8 +115,7 @@ class _Handler(BaseHTTPRequestHandler):
                     return self._reply(
                         409, {"error": f"query not complete: {st.value}"}
                     )
-                offset = int(q.get("offset", "0"))
-                limit = int(q.get("limit", "1000"))
+                offset, limit = map(int, paging)
                 rows = self.engine.fetch(
                     q["query_id"],
                     offset=offset,

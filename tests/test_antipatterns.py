@@ -37,14 +37,14 @@ COLLECT_ALLOWLIST = {
 FIRST_ALLOWLIST = {
     # single-row aggregates driving fail-fast guards / dispatch
     "operators/dedup.py": (
-        6,
-        "1-row aggs: auto-dispatch ratio, jaccard pair budget, "
-        "winnowing pair budget + the CC label-sum convergence check "
-        "(one 1-row agg per round, replacing a join back to the "
-        "previous generation — r13 optimization) + the pairing-kernel "
-        "dictionary stats (n_vocab / pair mass / posting rows in one "
-        "row, driving the same budget guard and the kernel "
-        "eligibility caps — r13 optimization)",
+        5,
+        "1-row aggs: the auto-dispatch ratio; the one pair-mass budget "
+        "aggregate (_pair_mass, shared by the prefix path and the "
+        "exact-pairing join tier); the pairing-kernel dictionary stats "
+        "(vocab / pair mass / posting rows / hot count in one row, "
+        "driving the same budget guard and the kernel eligibility "
+        "caps); the CC label-sum convergence check (initial sum + one "
+        "per round, replacing a join back to the previous generation)",
     ),
     "operators/corpus.py": (
         4,
@@ -80,20 +80,20 @@ def test_no_row_at_a_time_python_udfs():
     assert not bad, f"row-at-a-time F.udf found (use pandas_udf): {bad}"
 
 
-# toPandas is legitimate ONLY to build a broadcast from a frame
+# toPandas is legitimate ONLY to feed a driver-side kernel from a frame
 # bounded by construction — the guide-§8 "decide with small rows"
 # pattern — never to materialize results. Same allowlist discipline
 # as .collect()/.first(): enumerate the site WITH its bound.
 TOPANDAS_ALLOWLIST = {
-    # the exact-pairing kernel's broadcast inputs: the integer-coded
-    # posting (12 B/row, <= NGRAM_KERNEL_MAX_POSTING rows) and the
-    # per-doc size table (<= NGRAM_KERNEL_MAX_DOCS rows); over-cap
-    # corpora never reach either site (kernel falls back to the
-    # inverted-index join) — r13 optimization
-    "operators/dedup.py": (2, "coded-posting/sizes broadcast proxy, "
+    # the exact-pairing kernel's inputs, shipped to the workers as one
+    # mmap'd .npy file via addFile: the hashed posting (16 B/row,
+    # <= NGRAM_KERNEL_MAX_POSTING rows) and the per-doc size table
+    # (<= NGRAM_KERNEL_MAX_DOCS rows); over-cap corpora never reach
+    # either site (the dispatch takes the inverted-index join)
+    "operators/dedup.py": (2, "hashed-posting/sizes kernel proxy, "
                               "capped by NGRAM_KERNEL_MAX_*"),
-    # the small-graph iterative kernels' edge-list collect: bounded by
-    # SMALL_GRAPH_MAX_EDGES (checked before the collect) — r13
+    # the small-graph gate's edge-list collect: bounded by
+    # SMALL_GRAPH_MAX_EDGES (checked before the collect)
     "operators/graph.py": (1, "small-graph edge list, capped by "
                               "SMALL_GRAPH_MAX_EDGES"),
 }

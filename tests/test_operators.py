@@ -396,6 +396,57 @@ def test_minhash_kernel_verify_matches_broadcast_verify(docs, monkeypatch):
     ) == expected
 
 
+def test_pairing_kernel_matches_inverted_index_join(docs, monkeypatch):
+    # Both tiers of the exact-pairing dispatch — the blocked kernel and
+    # the inverted-index join it falls back to — must return identical
+    # rows (values included) for every caller, with and without a hot
+    # cap that actually drops postings, and must fail fast with the
+    # same message. Zeroing a kernel cap forces the join tier: the doc
+    # cap declines before the kernel has evaluated the pair-mass guard,
+    # the vocabulary cap after it.
+    from chapterhouseqe_spark.operators import dedup as d
+
+    rows = lambda df: sorted(tuple(r) for r in df.collect())
+
+    def run_all():
+        out = []
+        for cap in (None, 2):
+            out.append(rows(d.ngram_jaccard_pairs(
+                docs, "text", "doc_id", threshold=0.03, max_shingle_freq=cap
+            )))
+            out.append(rows(d.ngram_containment_dropped(
+                docs, "text", "doc_id", threshold=0.03, max_shingle_freq=cap
+            )))
+            out.append(rows(d.winnow_overlap_pairs(
+                docs, "text", "doc_id", k=3, w=2, min_shared=1,
+                max_fp_freq=cap,
+            )))
+        return out
+
+    def guard_messages():
+        msgs = []
+        for call in (
+            lambda: d.ngram_jaccard_pairs(
+                docs, "text", "doc_id", max_pair_rows=1
+            ),
+            lambda: d.winnow_overlap_pairs(
+                docs, "text", "doc_id", k=3, w=2, max_pair_rows=1
+            ),
+        ):
+            with pytest.raises(ValueError) as ei:
+                call()
+            msgs.append(str(ei.value))
+        return msgs
+
+    kernel, kernel_msgs = run_all(), guard_messages()
+    assert all(kernel)  # every caller finds rows, capped or not
+    for cap in ("NGRAM_KERNEL_MAX_DOCS", "NGRAM_KERNEL_MAX_VOCAB"):
+        with monkeypatch.context() as m:
+            m.setattr(d, cap, 0)
+            assert run_all() == kernel
+            assert guard_messages() == kernel_msgs
+
+
 def test_near_dedup_keep_canonical(docs):
     from chapterhouseqe_spark.operators.dedup import near_dedup_keep
 
@@ -440,12 +491,13 @@ def test_small_graph_kernels_match_distributed_loops(spark, monkeypatch):
     # operators run an exact numpy replica of their integer recurrences.
     # Force the distributed loops by zeroing the cap and pin that both
     # paths produce identical rows (values included) for CC, k-core,
-    # and pagerank on graphs with chains, cliques, and isolated nodes.
+    # pagerank and the bitset triangle count on graphs with chains,
+    # cliques, and isolated nodes.
     from chapterhouseqe_spark.operators import graph as g
     from chapterhouseqe_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (5, 6), (5, 7), (6, 7), (6, 8)],
+        [(1, 2), (2, 3), (5, 6), (5, 7), (6, 7), (6, 8), (5, 8), (7, 8)],
         "id_a long, id_b long",
     )
     ids = spark.createDataFrame(
@@ -455,18 +507,16 @@ def test_small_graph_kernels_match_distributed_loops(spark, monkeypatch):
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     )
     rows = lambda df: sorted(tuple(r) for r in df.collect())
-    kernel = (
+    run = lambda: (
         rows(connected_components(pairs, ids)),
         rows(g.kcore_survivors(edges, k=2, n_rounds=3)),
         rows(g.pagerank_fixed_point(edges, n_iter=3)),
+        rows(g.triangle_count(edges)),
     )
+    kernel = run()
+    assert kernel[3] == [(7, 8, 4)]  # the K4 on {5,6,7,8}
     monkeypatch.setattr(g, "SMALL_GRAPH_MAX_EDGES", -1)
-    dist = (
-        rows(connected_components(pairs, ids)),
-        rows(g.kcore_survivors(edges, k=2, n_rounds=3)),
-        rows(g.pagerank_fixed_point(edges, n_iter=3)),
-    )
-    assert kernel == dist
+    assert run() == kernel
 
 
 def test_connected_components_iteration_guard(spark):

@@ -3,6 +3,10 @@
 
 from __future__ import annotations
 
+import json
+import urllib.error
+import urllib.request
+
 import pytest
 
 from chapterhouseqe_spark import (
@@ -90,6 +94,22 @@ def test_missing_query_id_is_not_query_not_found(client):
         client._call("/status")
     assert not isinstance(ei.value, QueryNotFound)
     assert "missing query_id" in str(ei.value)
+
+
+def test_bad_paging_is_a_400(service, client):
+    """A non-integer or negative offset/limit is a malformed request
+    (400), not a server error (500)."""
+    qid = client.run_query("select * from read_files('region.parquet')")
+    client.wait_for_query_to_finish(qid, max_wait=60)
+    for bad in ("offset=x", "offset=-1", "limit=1.5", "limit=-3"):
+        with pytest.raises(urllib.error.HTTPError) as ei:
+            urllib.request.urlopen(
+                f"{service.address}/data?query_id={qid}&{bad}", timeout=10
+            )
+        assert ei.value.code == 400, bad
+        assert "non-negative integers" in json.loads(ei.value.read())["error"]
+    rows, _ = client.get_query_data(qid, offset=0, limit=2)
+    assert len(rows) == 2
 
 
 def test_transport_failure_is_service_error():
