@@ -1365,8 +1365,7 @@ def chunk_ann_topk(
     from chapterhouseqe_spark.operators.similarity import (
         _hyperplanes,
         _signature,
-        cosine_hoisted,
-        exact_dot,
+        cosine,
         vec_norm,
     )
     from chapterhouseqe_spark.operators.util import ensure_parallelism
@@ -1375,8 +1374,8 @@ def chunk_ann_topk(
     # the candidate-side chunking/pooling/scoring is narrow-but-
     # expensive and inherits the scan's split count — a small or
     # single-file corpus arrives near-single-partition and
-    # single-threads the whole scoring stage (measured 33s -> 4s at
-    # sf1 on 2 scan splits); at real scale this is a no-op.
+    # single-threads the whole scoring stage; at real scale this is a
+    # no-op.
     chunks = chunk_token_windows(
         ensure_parallelism(docs), text_col, id_col, size, stride
     )
@@ -1442,9 +1441,7 @@ def chunk_ann_topk(
             "probe_id",
             "doc_id",
             "chunk_idx",
-            cosine_hoisted(
-                exact_dot(F.col("va"), F.col("vb")), F.col("na"), F.col("nb")
-            ).alias("sim"),
+            cosine("va", "vb", "na", "nb").alias("sim"),
         )
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)

@@ -1689,10 +1689,9 @@ def semantic_dedup_candidates(
     because the graded corpus is.
     """
     from chapterhouseqe_spark.operators.similarity import (
-        cosine_hoisted,
-        exact_dot,
+        cosine,
         kmeans_lloyd,
-        vec_norm,
+        normed,
     )
 
     _, assign = kmeans_lloyd(
@@ -1713,28 +1712,13 @@ def semantic_dedup_candidates(
     cand = a.join(b, "cid").filter(F.col("id_a") < F.col("id_b"))
     # per-vector norms hoisted into the attach projections: each emb
     # row's norm folds once per side, not once per within-cluster pair
-    # (bit-identical — see similarity.vec_norm)
-    ea = emb.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("__ea"),
-        vec_norm(F.col(vec_col)).alias("__na"),
-    )
-    eb = emb.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("__eb"),
-        vec_norm(F.col(vec_col)).alias("__nb"),
-    )
+    ea = emb.select(F.col(id_col).alias("id_a"), *normed(vec_col, "__ea", "__na"))
+    eb = emb.select(F.col(id_col).alias("id_b"), *normed(vec_col, "__eb", "__nb"))
     return (
         cand.join(ea, "id_a")
         .join(eb, "id_b")
         .select(
-            "id_a",
-            "id_b",
-            cosine_hoisted(
-                exact_dot(F.col("__ea"), F.col("__eb")),
-                F.col("__na"),
-                F.col("__nb"),
-            ).alias("sim"),
+            "id_a", "id_b", cosine("__ea", "__eb", "__na", "__nb").alias("sim")
         )
         .filter(F.col("sim") >= threshold)
     )

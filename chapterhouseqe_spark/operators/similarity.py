@@ -9,6 +9,26 @@ fold over the array (``F.aggregate`` here, ``list_reduce`` in the
 DuckDB oracle) — identical IEEE op order on both engines makes the
 doubles bit-exact; ranking ties break on the neighbor id.
 
+Shared stages — each step of the family has one owner here, and every
+operator (plus the pair scorers in ``dedup``, ``corpus`` and the query
+registry) goes through it:
+
+- :func:`cosine` is the one exact cosine: the :func:`exact_dot` fold
+  over the two norms, which pair scorers hoist into per-row columns
+  with :func:`normed`. A zero-norm vector has no direction, so its
+  similarity is NULL (``try_divide``; DuckDB's ``x / 0.0`` is NULL
+  too) rather than an ANSI ``DIVIDE_BY_ZERO`` abort.
+- :func:`_top_k` is the per-key ``row_number`` cut. Ranked over a
+  whole corpus of more than :data:`SALTED_TOPK_MIN_ROWS` rows it runs
+  salted two-stage (still exact): k survivors per probe and
+  ``id_b mod TOPK_SALTS`` bucket first, so no single task funnels the
+  corpus's candidates for one probe.
+- ANN stages: :func:`_probe_buckets` (IVF probe-bucket choice),
+  :func:`_subvectors` (PQ subvector explode), :func:`_adc_tables` and
+  :func:`_adc_top_k` (ADC distance tables, and the lookup fold that
+  ranks by them), :func:`_int_dot` (SQ integer dot) and :func:`_l2sq`
+  (squared-L2 fold).
+
 100 TB execution shapes:
 
 - ``cosine_topk``: probes broadcast (small), corpus scanned once,
@@ -38,44 +58,85 @@ from chapterhouseqe_spark.operators.guards import (
 )
 from chapterhouseqe_spark.operators.util import ensure_parallelism
 
-def exact_dot(a: Column, b: Column) -> Column:
+# _top_k over more corpus rows than this runs salted two-stage; below
+# it the extra exchange costs more than the funnel it avoids
+SALTED_TOPK_MIN_ROWS = 20_000
+TOPK_SALTS = 32
+
+
+def exact_dot(a: Column | str, b: Column | str) -> Column:
     """Deterministic dot product of two float arrays (as double).
 
     float32×float32 products are exact in double (24+24 ≤ 53 mantissa
     bits); the sum is a sequential left fold in array order, so any
     engine folding the same way (DuckDB ``list_reduce``) gets the same
-    bits. 64-element arrays — the fold is register-resident, not a
-    bottleneck.
+    bits.
     """
     prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
     return F.aggregate(prods, F.lit(0.0), lambda acc, v: acc + v)
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return exact_dot(a, b) / (F.sqrt(exact_dot(a, a)) * F.sqrt(exact_dot(b, b)))
-
-
-def vec_norm(a: Column) -> Column:
+def vec_norm(a: Column | str) -> Column:
     """``sqrt(self-dot)`` — the per-vector denominator factor of
-    :func:`cosine`.
-
-    Pairwise scorers hoist this into the per-ROW projection that
-    aliases the vector (before the pairing join), so each side's norm
-    fold runs once per vector instead of once per PAIR —
-    ``dot/(na*nb)`` then performs the exact same double operations in
-    the same order as the inline :func:`cosine`, so results are
-    bit-identical (the ann_rerank DuckDB oracle already replays this
-    hoisted ``dot / (na.nrm * nb.nrm)`` form against the inline Spark
-    side), while the per-pair fold work drops 3x (guide §2.3: compute
-    on the small per-row side, not inside the quadratic pair set).
-    """
+    :func:`cosine`."""
     return F.sqrt(exact_dot(a, a))
 
 
-def cosine_hoisted(dot_ab: Column, na: Column, nb: Column) -> Column:
-    """``cosine`` assembled from a per-pair dot and two hoisted
-    per-row norms — see :func:`vec_norm` for the equivalence argument."""
-    return dot_ab / (na * nb)
+def normed(vec: Column | str, alias: str, norm: str) -> tuple[Column, Column]:
+    """A vector column and its norm, for the per-row projection that
+    feeds a pairing join: each norm then folds once per vector instead
+    of once per pair (pass ``alias``/``norm`` to :func:`cosine`)."""
+    vec = F.col(vec) if isinstance(vec, str) else vec
+    return vec.alias(alias), vec_norm(vec).alias(norm)
+
+
+def cosine(
+    a: Column | str,
+    b: Column | str,
+    na: str | None = None,
+    nb: str | None = None,
+) -> Column:
+    """Exact cosine of two float arrays; NULL when either norm is 0.
+
+    ``na``/``nb`` name per-row norm columns hoisted with :func:`normed`;
+    without them the norms fold inline. Either way the doubles go
+    through the same operations in the same order, so the two forms
+    are bit-identical (the DuckDB oracles replay the hoisted
+    ``dot / (na.nrm * nb.nrm)`` form).
+    """
+    norms = vec_norm(a) * vec_norm(b) if na is None else F.col(na) * F.col(nb)
+    return F.try_divide(exact_dot(a, b), norms)
+
+
+def _top_k(
+    frame: DataFrame,
+    keys: list,
+    order: list,
+    k: int,
+    cols: list | None = None,
+    rank: str | None = None,
+    n_rows: int | None = None,
+) -> DataFrame:
+    """The first ``k`` rows per ``keys`` under ``order`` (a total
+    order: every caller ends it on a unique id).
+
+    The ``row_number`` lands in ``rank`` as a BIGINT output column, or,
+    when ``rank`` is None, in a scratch ``rn`` that ``cols`` may read
+    and that is dropped. ``k == 1`` keeps the argmin form ``rn = 1``.
+    ``n_rows`` is the size of the corpus being ranked: above
+    :data:`SALTED_TOPK_MIN_ROWS` a first pass keeps ``k`` rows per
+    ``keys`` and ``id_b mod TOPK_SALTS`` bucket. That is still exact —
+    every true top-k row wins its own bucket — and bounds the final
+    window at ``k * TOPK_SALTS`` rows per key.
+    """
+    if n_rows is not None and n_rows > SALTED_TOPK_MIN_ROWS:
+        salt = F.pmod(F.col("id_b"), F.lit(TOPK_SALTS))
+        frame = _top_k(frame, [*keys, salt], order, k)
+    rn = F.row_number().over(Window.partitionBy(*keys).orderBy(*order))
+    name = rank or "rn"
+    ranked = frame.withColumn(name, rn.cast("bigint") if rank else rn)
+    kept = ranked.filter(F.col(name) == 1 if k == 1 else F.col(name) <= k)
+    return kept.select(*cols) if cols else kept.drop(name)
 
 
 def cosine_topk(
@@ -84,7 +145,6 @@ def cosine_topk(
     k: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    two_stage: bool | None = None,
     max_candidate_rows: int | None = CANDIDATE_MASS_BUDGET,
 ) -> DataFrame:
     """Top-k cosine neighbors for every probe row (brute-force baseline).
@@ -98,43 +158,20 @@ def cosine_topk(
     (``ivf_topk``/``pq_topk``/``ivfpq_topk``/``sq_topk``) — linear
     scans per probe do not survive a 100× corpus.
 
-    The top-k itself is TWO-STAGE above ~20k corpus rows (still
-    exact): stage 1 takes the top-k within each of 32 salt buckets per
-    probe, stage 2 ranks the ≤32k survivors per probe. A single
-    ``Window.partitionBy(probe_id)`` would funnel the ENTIRE corpus's
-    candidate rows for one probe into one task (the r6 verdict's
-    flagged hotspot); salting bounds the final task at 32k rows per
-    probe while the heavy stage-1 windows parallelize across
-    probe × salt. Exactness: every true top-k row wins its own salt
-    bucket (row_number is per-bucket, k survivors per bucket ⊇ the
-    global top k). SIZE-ADAPTIVE like the minhash verify join: below
-    the threshold the extra exchange costs more than it saves
-    (measured +0.6s at 2k rows vs −1.5s at 100k), so small corpora
-    keep the single window; the sizing count is a metadata-cheap
-    parquet count. Pass ``two_stage`` explicitly to pin either plan.
+    The top-k is :func:`_top_k` sized by the corpus count (a
+    metadata-cheap parquet count): salted two-stage above
+    :data:`SALTED_TOPK_MIN_ROWS` rows, one window below.
 
-    ``max_candidate_rows`` is the candidate-mass fail-fast (r12
-    verdict item 1, shared helper in ``operators/guards.py``): the
-    scored-pair mass is exactly |probes| × (|corpus| − 1), and a
-    SELF-PROBE filter (``id % m == r``) grows |probes| with the
-    corpus — the same law the retrieval and chunk-ANN probes measured
-    going superlinear with the modulus held fixed. Both counts are
-    cheap (the corpus count is already paid for two-stage sizing; the
-    probe count is a column-pruned filtered scan). Results-neutral:
-    counts only, never filters. ``None`` waives for probe runs.
+    ``max_candidate_rows`` is the candidate-mass fail-fast (shared
+    helper in ``operators/guards.py``): the scored-pair mass is exactly
+    |probes| × (|corpus| − 1), and a SELF-PROBE filter
+    (``id % m == r``) grows |probes| with the corpus. The probe count
+    is a column-pruned filtered scan. Results-neutral: counts only,
+    never filters. ``None`` waives for probe runs.
     """
-    n_corpus = (
-        emb.count()
-        if two_stage is None or max_candidate_rows is not None
-        else None
-    )
-    if two_stage is None:
-        two_stage = n_corpus > 20_000
-    n_salts = 32
+    n_corpus = emb.count()
     probes = emb.filter(probe_filter).select(
-        F.col(id_col).alias("probe_id"),
-        F.col(vec_col).alias("ea"),
-        vec_norm(F.col(vec_col)).alias("na"),
+        F.col(id_col).alias("probe_id"), *normed(vec_col, "ea", "na")
     )
     if max_candidate_rows is not None:
         check_candidate_mass(
@@ -152,32 +189,15 @@ def cosine_topk(
             "lsh_multiprobe_topk)",
         )
     corpus = ensure_parallelism(emb).select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("eb"),
-        vec_norm(F.col(vec_col)).alias("nb"),
+        F.col(id_col).alias("id_b"), *normed(vec_col, "eb", "nb")
     )
     pairs = F.broadcast(probes).crossJoin(corpus).filter(F.col("probe_id") != F.col("id_b"))
     scored = pairs.select(
-        "probe_id",
-        "id_b",
-        cosine_hoisted(
-            exact_dot(F.col("ea"), F.col("eb")), F.col("na"), F.col("nb")
-        ).alias("sim"),
+        "probe_id", "id_b", cosine("ea", "eb", "na", "nb").alias("sim")
     )
-    if two_stage:
-        w1 = Window.partitionBy(
-            "probe_id", F.pmod(F.col("id_b"), F.lit(n_salts))
-        ).orderBy(F.col("sim").desc(), F.col("id_b"))
-        scored = (
-            scored.withColumn("rn", F.row_number().over(w1))
-            .filter(F.col("rn") <= k)
-            .drop("rn")
-        )
-    w2 = Window.partitionBy("probe_id").orderBy(F.col("sim").desc(), F.col("id_b"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w2))
-        .filter(F.col("rn") <= k)
-        .select("probe_id", "id_b", "sim")
+    return _top_k(
+        scored, ["probe_id"], [F.col("sim").desc(), F.col("id_b")], k,
+        ["probe_id", "id_b", "sim"], n_rows=n_corpus,
     )
 
 
@@ -199,8 +219,8 @@ def cosine_pairs(
 
     VERIFICATION BASELINE ONLY — O(n²) crossJoin. Refuses frames above
     :data:`COSINE_PAIRS_MAX_ROWS` (50k rows ≈ 1.25e9 scored pairs)
-    with a ValueError unless ``force=True`` (r10 verdict item 4,
-    mirroring ``ngram_jaccard_pairs``' fail-fast): the count is one
+    with a ValueError unless ``force=True`` (mirroring
+    ``ngram_jaccard_pairs``' fail-fast): the count is one
     metadata-cheap action, and failing in seconds beats a
     week-long cross-join a caller aimed at a real corpus by mistake.
     The scale paths are the graded ANN family
@@ -220,25 +240,13 @@ def cosine_pairs(
                 "oversized audit run."
             )
     a = ensure_parallelism(emb).select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("ea"),
-        vec_norm(F.col(vec_col)).alias("na"),
+        F.col(id_col).alias("id_a"), *normed(vec_col, "ea", "na")
     )
-    b = emb.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("eb"),
-        vec_norm(F.col(vec_col)).alias("nb"),
-    )
+    b = emb.select(F.col(id_col).alias("id_b"), *normed(vec_col, "eb", "nb"))
     return (
         a.crossJoin(b)
         .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            cosine_hoisted(
-                exact_dot(F.col("ea"), F.col("eb")), F.col("na"), F.col("nb")
-            ).alias("sim"),
-        )
+        .select("id_a", "id_b", cosine("ea", "eb", "na", "nb").alias("sim"))
         .filter(F.col("sim") >= threshold)
     )
 
@@ -250,7 +258,6 @@ def hard_negatives(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     label_col: str = "label",
-    two_stage: bool | None = None,
 ) -> DataFrame:
     """Hard-negative mining for contrastive training: for each anchor,
     the ``k`` nearest-by-cosine corpus vectors carrying a DIFFERENT
@@ -259,60 +266,41 @@ def hard_negatives(
     negatives miss exactly these).
 
     Same plan discipline as :func:`cosine_topk` (broadcast anchors ×
-    corpus, no corpus shuffle for candidate generation; size-adaptive
-    two-stage salted top-k above ~20k rows so no single task funnels
-    the corpus) with one extra scan-stage predicate: ``label_b !=
-    label_a``, applied BEFORE scoring so mismatched rows never pay the
-    dot product. Exact by construction — for a mined training set,
-    audit-grade exactness matters more than ANN speed; at 100 TB run
-    the same shape over ANN candidates (``ivf_topk`` output) instead
-    of the raw corpus. Returns (anchor_id, id_b, label_b, sim, rnk),
-    rnk <= k, ties broken on smaller id_b.
+    corpus, no corpus shuffle for candidate generation; the same
+    size-selected salted top-k) with one extra scan-stage predicate:
+    ``label_b != label_a``, applied BEFORE scoring so mismatched rows
+    never pay the dot product. Exact by construction — for a mined
+    training set, audit-grade exactness matters more than ANN speed;
+    at 100 TB run the same shape over ANN candidates (``ivf_topk``
+    output) instead of the raw corpus. Returns (anchor_id, id_b,
+    label_b, sim, rnk), rnk <= k, ties broken on smaller id_b.
     """
-    if two_stage is None:
-        two_stage = emb.count() > 20_000
-    n_salts = 32
+    n_corpus = emb.count()
     anchors = emb.filter(anchor_filter).select(
         F.col(id_col).alias("anchor_id"),
         F.col(vec_col).alias("ea"),
         F.col(label_col).alias("label_a"),
-        vec_norm(F.col(vec_col)).alias("na"),
+        vec_norm(vec_col).alias("na"),
     )
     corpus = ensure_parallelism(emb).select(
         F.col(id_col).alias("id_b"),
         F.col(vec_col).alias("eb"),
         F.col(label_col).alias("label_b"),
-        vec_norm(F.col(vec_col)).alias("nb"),
+        vec_norm(vec_col).alias("nb"),
     )
     scored = (
         F.broadcast(anchors)
         .crossJoin(corpus)
         .filter(F.col("label_b") != F.col("label_a"))
         .select(
-            "anchor_id",
-            "id_b",
-            "label_b",
-            cosine_hoisted(
-                exact_dot(F.col("ea"), F.col("eb")), F.col("na"), F.col("nb")
-            ).alias("sim"),
+            "anchor_id", "id_b", "label_b",
+            cosine("ea", "eb", "na", "nb").alias("sim"),
         )
     )
-    if two_stage:
-        w1 = Window.partitionBy(
-            "anchor_id", F.pmod(F.col("id_b"), F.lit(n_salts))
-        ).orderBy(F.col("sim").desc(), F.col("id_b"))
-        scored = (
-            scored.withColumn("rn", F.row_number().over(w1))
-            .filter(F.col("rn") <= k)
-            .drop("rn")
-        )
-    w2 = Window.partitionBy("anchor_id").orderBy(
-        F.col("sim").desc(), F.col("id_b")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w2).cast("bigint"))
-        .filter(F.col("rnk") <= k)
-        .select("anchor_id", "id_b", "label_b", "sim", "rnk")
+    return _top_k(
+        scored, ["anchor_id"], [F.col("sim").desc(), F.col("id_b")], k,
+        ["anchor_id", "id_b", "label_b", "sim", "rnk"], rank="rnk",
+        n_rows=n_corpus,
     )
 
 
@@ -386,12 +374,7 @@ def _signature(vec_col: str, planes: list[list[float]]):
     plane j) — the shared primitive of the LSH tiers."""
     sig = None
     for j, p in enumerate(planes):
-        plane = F.array(*[F.lit(v) for v in p])
-        dot = F.aggregate(
-            F.zip_with(F.col(vec_col), plane, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
+        dot = exact_dot(vec_col, F.array(*[F.lit(v) for v in p]))
         bit = F.when(dot > 0, F.lit(1 << j)).otherwise(F.lit(0))
         sig = bit if sig is None else sig + bit
     return sig
@@ -434,16 +417,14 @@ def lsh_multiprobe_topk(
         ensure_parallelism(emb)
         .select(
             F.col(id_col).alias("id_b"),
-            F.col(vec_col).alias("eb"),
-            vec_norm(F.col(vec_col)).alias("nb"),
+            *normed(vec_col, "eb", "nb"),
             sig.cast("int").alias("bucket"),
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     probes = emb.filter(F.col(id_col) < n_probe_ids).select(
         F.col(id_col).alias("probe_id"),
-        F.col(vec_col).alias("ea"),
-        vec_norm(F.col(vec_col)).alias("na"),
+        *normed(vec_col, "ea", "na"),
         sig.cast("int").alias("psig"),
     )
     probed = probes.select(
@@ -460,15 +441,12 @@ def lsh_multiprobe_topk(
     cand = probed.join(corpus, "bucket").filter(
         F.col("id_b") != F.col("probe_id")
     )
-    sim = cosine_hoisted(
-        exact_dot(F.col("ea"), F.col("eb")), F.col("na"), F.col("nb")
+    scored = cand.select(
+        "probe_id", "id_b", cosine("ea", "eb", "na", "nb").alias("sim")
     )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("sim"), F.col("id_b"))
-    return (
-        cand.select("probe_id", "id_b", sim.alias("sim"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("probe_id", "id_b", "sim")
+    return _top_k(
+        scored, ["probe_id"], [F.desc("sim"), F.col("id_b")], k,
+        ["probe_id", "id_b", "sim"],
     )
 
 
@@ -543,30 +521,35 @@ def ivf_assign(
             .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
         )
     corpus = ensure_parallelism(emb).select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        vec_norm(F.col(vec_col)).alias("nv"),
+        F.col(id_col).alias("id"), *normed(vec_col, "vec", "nv")
     )
     # centroid norms ride the broadcast (n_centroids rows); the corpus
     # row's norm folds once instead of once per centroid
-    cent_n = centroids.select(
-        "cid", "cvec", vec_norm(F.col("cvec")).alias("nc")
-    )
+    cent_n = centroids.select("cid", "cvec", vec_norm("cvec").alias("nc"))
     scored = corpus.crossJoin(F.broadcast(cent_n)).select(
-        "id",
-        "vec",
-        "cid",
-        cosine_hoisted(
-            exact_dot(F.col("vec"), F.col("cvec")), F.col("nv"), F.col("nc")
-        ).alias("csim"),
+        "id", "vec", "cid", cosine("vec", "cvec", "nv", "nc").alias("csim")
     )
-    w = Window.partitionBy("id").orderBy(F.col("csim").desc(), F.col("cid"))
-    assignments = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("id", "vec", "cid")
+    assignments = _top_k(
+        scored, ["id"], [F.col("csim").desc(), F.col("cid")], 1,
+        ["id", "vec", "cid"],
     )
     return centroids, assignments
+
+
+def _probe_buckets(
+    probes: DataFrame, centroids: DataFrame, nprobe: int, *carry: str
+) -> DataFrame:
+    """IVF probe-bucket choice: each probe's ``nprobe`` nearest
+    centroids by cosine of ``pvec`` to ``cvec`` (ties to the smaller
+    ``cid``), as (probe_id, *carry, cid). Probes and centroids are both
+    small, so both sides broadcast."""
+    scored = F.broadcast(probes).crossJoin(F.broadcast(centroids)).select(
+        "probe_id", *carry, "cid", cosine("pvec", "cvec").alias("csim")
+    )
+    return _top_k(
+        scored, ["probe_id"], [F.col("csim").desc(), F.col("cid")], nprobe,
+        ["probe_id", *carry, "cid"],
+    )
 
 
 def ivf_topk(
@@ -592,37 +575,22 @@ def ivf_topk(
         emb, n_centroids, id_col, vec_col, centroid_method
     )
     probes = emb.filter(probe_filter).select(
-        F.col(id_col).alias("probe_id"),
-        F.col(vec_col).alias("pvec"),
-        vec_norm(F.col(vec_col)).alias("pn"),
+        F.col(id_col).alias("probe_id"), *normed(vec_col, "pvec", "pn")
     )
-    pscored = F.broadcast(probes).crossJoin(F.broadcast(centroids)).select(
-        "probe_id", "pvec", "pn", "cid",
-        cosine(F.col("pvec"), F.col("cvec")).alias("csim"),
-    )
-    wp = Window.partitionBy("probe_id").orderBy(F.col("csim").desc(), F.col("cid"))
-    probe_buckets = (
-        pscored.withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= nprobe)
-        .select("probe_id", "pvec", "pn", "cid")
-    )
+    probe_buckets = _probe_buckets(probes, centroids, nprobe, "pvec", "pn")
     # corpus-side norm folds once per assignment row, not once per
     # (probe, candidate) pair
     cand = probe_buckets.join(
-        assignments.withColumn("vn", vec_norm(F.col("vec"))), "cid"
+        assignments.withColumn("vn", vec_norm("vec")), "cid"
     ).filter(F.col("probe_id") != F.col("id"))
     scored = cand.select(
         "probe_id",
         F.col("id").alias("id_b"),
-        cosine_hoisted(
-            exact_dot(F.col("pvec"), F.col("vec")), F.col("pn"), F.col("vn")
-        ).alias("sim"),
+        cosine("pvec", "vec", "pn", "vn").alias("sim"),
     )
-    w = Window.partitionBy("probe_id").orderBy(F.col("sim").desc(), F.col("id_b"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("probe_id", "id_b", "sim")
+    return _top_k(
+        scored, ["probe_id"], [F.col("sim").desc(), F.col("id_b")], k,
+        ["probe_id", "id_b", "sim"],
     )
 
 
@@ -684,7 +652,7 @@ def pq_codebooks(
     )
 
 
-def _l2sq(a: Column, b: Column) -> Column:
+def _l2sq(a: Column | str, b: Column | str) -> Column:
     """Sequential-fold squared L2 distance (bit-exact across engines,
     same convention as :func:`exact_dot`)."""
     diffs = F.zip_with(
@@ -692,6 +660,62 @@ def _l2sq(a: Column, b: Column) -> Column:
         * (x.cast("double") - y.cast("double"))
     )
     return F.aggregate(diffs, F.lit(0.0), lambda acc, v: acc + v)
+
+
+def _ordered_values(key: str, val: str) -> Column:
+    """Aggregate: the group's ``val`` values as an array ordered by
+    ``key``."""
+    return F.transform(
+        F.array_sort(F.collect_list(F.struct(key, val))), lambda x: x[val]
+    )
+
+
+def _subvectors(
+    frame: DataFrame, key: str, name: str, vec: str, m_sub: int, dim: int
+) -> DataFrame:
+    """PQ subvector explode: one (name, m, sv) row per subspace ``m``,
+    ``sv`` the m-th ``dim/m_sub`` slice of ``vec``, keyed by ``key``
+    renamed to ``name``."""
+    d = dim // m_sub
+    return frame.select(
+        F.col(key).alias(name),
+        F.explode(F.sequence(F.lit(0), F.lit(m_sub - 1))).alias("m"),
+        F.col(vec).alias("__v"),
+    ).select(name, "m", F.slice(F.col("__v"), F.col("m") * d + 1, d).alias("sv"))
+
+
+def _adc_tables(psub: DataFrame, codebooks: DataFrame) -> DataFrame:
+    """ADC distance tables for probe subvectors ``psub`` (from
+    :func:`_subvectors`): (probe_id, tbl) with ``tbl[m][k]`` the exact
+    squared L2 from the probe's m-th subvector to sub-centroid k."""
+    pdists = psub.join(F.broadcast(codebooks), "m").select(
+        "probe_id", "m", "k", _l2sq("sv", "cvec").alias("pd")
+    )
+    per_m = pdists.groupBy("probe_id", "m").agg(
+        _ordered_values("k", "pd").alias("row")
+    )
+    return per_m.groupBy("probe_id").agg(
+        _ordered_values("m", "row").alias("tbl")
+    )
+
+
+def _adc_top_k(cand: DataFrame, m_sub: int, k: int) -> DataFrame:
+    """Per-probe top-k of (probe_id, id, codes, tbl) candidates by ADC
+    distance, ties to the smaller id: (probe_id, id_b, adist). The
+    distance is m_sub table lookups summed as a sequential fold over m,
+    so it is bit-exact vs the oracle."""
+    adist = F.aggregate(
+        F.sequence(F.lit(0), F.lit(m_sub - 1)),
+        F.lit(0.0),
+        lambda acc, m: acc + F.col("tbl")[m][F.col("codes")[m]],
+    )
+    scored = cand.select(
+        "probe_id", F.col("id").alias("id_b"), adist.alias("adist")
+    )
+    return _top_k(
+        scored, ["probe_id"], [F.col("adist").asc(), F.col("id_b")], k,
+        ["probe_id", "id_b", "adist"],
+    )
 
 
 def pq_encode(
@@ -713,28 +737,15 @@ def pq_encode(
     reason PQ exists: a 100 TB float corpus becomes ~3 TB of codes that
     fit a much smaller cluster tier for serving.
     """
-    d = dim // m_sub
-    sub = ensure_parallelism(emb).select(
-        F.col(id_col).alias("id"),
-        F.explode(F.sequence(F.lit(0), F.lit(m_sub - 1))).alias("m"),
-        F.col(vec_col).alias("__v"),
-    ).select(
-        "id", "m", F.slice(F.col("__v"), F.col("m") * d + 1, d).alias("sv")
-    )
+    sub = _subvectors(ensure_parallelism(emb), id_col, "id", vec_col, m_sub, dim)
     scored = sub.join(F.broadcast(codebooks), "m").select(
-        "id", "m", "k", _l2sq(F.col("sv"), F.col("cvec")).alias("dist")
+        "id", "m", "k", _l2sq("sv", "cvec").alias("dist")
     )
-    wmn = Window.partitionBy("id", "m").orderBy(F.col("dist").asc(), F.col("k").asc())
-    best = (
-        scored.withColumn("rn", F.row_number().over(wmn))
-        .filter(F.col("rn") == 1)
-        .select("id", "m", "k")
+    best = _top_k(
+        scored, ["id", "m"], [F.col("dist").asc(), F.col("k").asc()], 1,
+        ["id", "m", "k"],
     )
-    return best.groupBy("id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("m", "k"))), lambda x: x.k
-        ).alias("codes")
-    )
+    return best.groupBy("id").agg(_ordered_values("m", "k").alias("codes"))
 
 
 def pq_topk(
@@ -765,47 +776,15 @@ def pq_topk(
     Returns (probe_id, id_b, adist) — smaller adist = nearer; ties
     break on id_b.
     """
-    d = dim // m_sub
     codebooks = pq_codebooks(emb, m_sub, k_codes, dim, id_col, vec_col)
     codes = pq_encode(emb, codebooks, m_sub, dim, id_col, vec_col)
-    probes = emb.filter(probe_filter).select(
-        F.col(id_col).alias("probe_id"),
-        F.explode(F.sequence(F.lit(0), F.lit(m_sub - 1))).alias("m"),
-        F.col(vec_col).alias("__v"),
-    ).select(
-        "probe_id", "m", F.slice(F.col("__v"), F.col("m") * d + 1, d).alias("sv")
+    psub = _subvectors(
+        emb.filter(probe_filter), id_col, "probe_id", vec_col, m_sub, dim
     )
-    pdists = probes.join(F.broadcast(codebooks), "m").select(
-        "probe_id", "m", "k", _l2sq(F.col("sv"), F.col("cvec")).alias("pd")
-    )
-    per_m = pdists.groupBy("probe_id", "m").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("k", "pd"))), lambda x: x.pd
-        ).alias("row")
-    )
-    tables = per_m.groupBy("probe_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("m", "row"))), lambda x: x.row
-        ).alias("tbl")
-    )
-    cand = codes.crossJoin(F.broadcast(tables)).filter(
+    cand = codes.crossJoin(F.broadcast(_adc_tables(psub, codebooks))).filter(
         F.col("id") != F.col("probe_id")
     )
-    adist = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m_sub - 1)),
-        F.lit(0.0),
-        lambda acc, m: acc
-        + F.col("tbl")[m][F.col("codes")[m]],
-    )
-    scored = cand.select(
-        "probe_id", F.col("id").alias("id_b"), adist.alias("adist")
-    )
-    wtop = Window.partitionBy("probe_id").orderBy(F.col("adist").asc(), F.col("id_b"))
-    return (
-        scored.withColumn("rn", F.row_number().over(wtop))
-        .filter(F.col("rn") <= k)
-        .select("probe_id", "id_b", "adist")
-    )
+    return _adc_top_k(cand, m_sub, k)
 
 
 def ivfpq_topk(
@@ -845,60 +824,16 @@ def ivfpq_topk(
     )
     codebooks = pq_codebooks(emb, m_sub, k_codes, dim, id_col, vec_col)
     codes = pq_encode(emb, codebooks, m_sub, dim, id_col, vec_col)
-    d = dim // m_sub
-
     probes = emb.filter(probe_filter).select(
         F.col(id_col).alias("probe_id"), F.col(vec_col).alias("pvec")
     )
-    pscored = F.broadcast(probes).crossJoin(F.broadcast(centroids)).select(
-        "probe_id", "pvec", "cid",
-        cosine(F.col("pvec"), F.col("cvec")).alias("csim"),
-    )
-    wp = Window.partitionBy("probe_id").orderBy(F.col("csim").desc(), F.col("cid"))
-    probe_buckets = (
-        pscored.withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= nprobe)
-        .select("probe_id", "cid")
-    )
-    cand_ids = probe_buckets.join(
+    cand_ids = _probe_buckets(probes, centroids, nprobe).join(
         assignments.select("id", "cid"), "cid"
     ).filter(F.col("id") != F.col("probe_id")).select("probe_id", "id")
-
-    psub = probes.select(
-        "probe_id",
-        F.explode(F.sequence(F.lit(0), F.lit(m_sub - 1))).alias("m"),
-        F.col("pvec").alias("__v"),
-    ).select(
-        "probe_id", "m", F.slice(F.col("__v"), F.col("m") * d + 1, d).alias("sv")
-    )
-    pdists = psub.join(F.broadcast(codebooks), "m").select(
-        "probe_id", "m", "k", _l2sq(F.col("sv"), F.col("cvec")).alias("pd")
-    )
-    per_m = pdists.groupBy("probe_id", "m").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("k", "pd"))), lambda x: x.pd
-        ).alias("row")
-    )
-    tables = per_m.groupBy("probe_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("m", "row"))), lambda x: x.row
-        ).alias("tbl")
-    )
+    psub = _subvectors(probes, "probe_id", "probe_id", "pvec", m_sub, dim)
+    tables = _adc_tables(psub, codebooks)
     cand = cand_ids.join(codes, "id").join(F.broadcast(tables), "probe_id")
-    adist = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m_sub - 1)),
-        F.lit(0.0),
-        lambda acc, m: acc + F.col("tbl")[m][F.col("codes")[m]],
-    )
-    scored = cand.select(
-        "probe_id", F.col("id").alias("id_b"), adist.alias("adist")
-    )
-    wtop = Window.partitionBy("probe_id").orderBy(F.col("adist").asc(), F.col("id_b"))
-    return (
-        scored.withColumn("rn", F.row_number().over(wtop))
-        .filter(F.col("rn") <= k)
-        .select("probe_id", "id_b", "adist")
-    )
+    return _adc_top_k(cand, m_sub, k)
 
 
 def pq_codebooks_kmeans(
@@ -1027,40 +962,22 @@ def kmeans_lloyd(
         if train_max_id is not None
         else subs
     )
-    w_init = Window.partitionBy("m").orderBy("id")
-    cent = (
-        subs_train.withColumn("rn", F.row_number().over(w_init))
-        .filter(F.col("rn") <= n_centroids)
-        .select(
+    cent = _top_k(
+        subs_train, ["m"], ["id"], n_centroids,
+        [
             "m",
             (F.col("rn") - 1).alias("cid"),
             F.transform("qv", lambda x: x.cast("double")).alias("cvec"),
-        )
+        ],
     )
 
     def _assign(cent: DataFrame, frame: DataFrame = subs) -> DataFrame:
         scored = frame.join(F.broadcast(cent), "m").select(
-            "id",
-            "m",
-            "qv",
-            "cid",
-            F.aggregate(
-                F.zip_with(
-                    "qv",
-                    "cvec",
-                    lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("dist"),
+            "id", "m", "qv", "cid", _l2sq("qv", "cvec").alias("dist")
         )
-        w = Window.partitionBy("id", "m").orderBy(
-            F.col("dist").asc(), F.col("cid").asc()
-        )
-        return (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("id", "m", "qv", "cid")
+        return _top_k(
+            scored, ["id", "m"], [F.col("dist").asc(), F.col("cid").asc()], 1,
+            ["id", "m", "qv", "cid"],
         )
 
     def _update(assigned: DataFrame) -> DataFrame:
@@ -1231,6 +1148,16 @@ def sq_quantize(vec: Column, lo: list[float], hi: list[float]) -> Column:
     )
 
 
+def _int_dot(a: Column | str, b: Column | str) -> Column:
+    """BIGINT dot product of two SQ code arrays — exact integer
+    arithmetic, so order-insensitive."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x * y).cast("bigint")),
+        F.lit(0).cast("bigint"),
+        lambda acc, v: acc + v,
+    )
+
+
 def sq_topk(
     emb: DataFrame,
     probe_filter: Column,
@@ -1238,7 +1165,6 @@ def sq_topk(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    two_stage: bool | None = None,
 ) -> DataFrame:
     """Approximate top-k neighbors by quantized integer dot product.
 
@@ -1256,10 +1182,7 @@ def sq_topk(
     compose with IVF bucketing instead (:func:`ivf_sq_topk`, the FAISS
     ``IVFx,SQ8`` tier), which ranks only nprobe buckets per probe.
     """
-    if two_stage is None:
-        # same size-adaptive rule as cosine_topk: below ~20k corpus
-        # rows the extra salt exchange costs more than it saves
-        two_stage = emb.count() > 20_000
+    n_corpus = emb.count()
     lo, hi = sq_bounds(emb, dim=dim, vec_col=vec_col)
     probes = emb.filter(probe_filter).select(
         F.col(id_col).alias("probe_id"),
@@ -1269,35 +1192,15 @@ def sq_topk(
         F.col(id_col).alias("id_b"),
         sq_quantize(F.col(vec_col), lo, hi).alias("qb"),
     )
-    score = F.aggregate(
-        F.zip_with("qa", "qb", lambda x, y: (x * y).cast("bigint")),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: acc + v,
-    )
     pairs = (
         F.broadcast(probes)
         .crossJoin(corpus)
         .filter(F.col("probe_id") != F.col("id_b"))
-        .select("probe_id", "id_b", score.alias("score_q"))
+        .select("probe_id", "id_b", _int_dot("qa", "qb").alias("score_q"))
     )
-    if two_stage:
-        # two-stage exact top-k (same salting as cosine_topk): per-
-        # probe rank over the full corpus would funnel into one task
-        w1 = Window.partitionBy(
-            "probe_id", F.pmod(F.col("id_b"), F.lit(32))
-        ).orderBy(F.col("score_q").desc(), F.col("id_b"))
-        pairs = (
-            pairs.withColumn("rn", F.row_number().over(w1))
-            .filter(F.col("rn") <= k)
-            .drop("rn")
-        )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("score_q").desc(), F.col("id_b")
-    )
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rnk") <= k)
-        .select("probe_id", "id_b", "score_q", "rnk")
+    return _top_k(
+        pairs, ["probe_id"], [F.col("score_q").desc(), F.col("id_b")], k,
+        ["probe_id", "id_b", "score_q", "rnk"], rank="rnk", n_rows=n_corpus,
     )
 
 
@@ -1314,8 +1217,7 @@ def ivf_sq_topk(
     prebuilt: tuple | None = None,
 ) -> DataFrame:
     """IVF bucket restriction + scalar-quantized integer ranking — the
-    FAISS ``IVFx,SQ8`` tier. Closes the gap the r6 verdict flagged on
-    :func:`sq_topk`: SQ alone compresses the scan 4x but still touches
+    FAISS ``IVFx,SQ8`` tier. Closes the gap of :func:`sq_topk`: SQ alone compresses the scan 4x but still touches
     every corpus vector per probe; composed with IVF, each probe ranks
     only its ``nprobe`` buckets (~nprobe/n_centroids of the corpus) AND
     does so on uint8 codes with BIGINT dot products.
@@ -1337,11 +1239,10 @@ def ivf_sq_topk(
     lo, hi = sq_bounds(emb, dim=dim, vec_col=vec_col)
     if prebuilt is not None:
         # Index build (coarse assignment = one corpus x n_centroids
-        # pass) amortizes across queries in production — the r7 20k
-        # probe measured the INLINE build dominating search 7:1, so a
-        # query path that rebuilds per call would throw the IVF win
-        # away. Pass (centroids, assignments) from ivf_assign, built
-        # once and persisted.
+        # pass) amortizes across queries in production, so a query
+        # path that rebuilds per call throws the IVF win away. Pass
+        # (centroids, assignments) from ivf_assign, built once and
+        # persisted.
         centroids, assignments = prebuilt
     else:
         centroids, assignments = ivf_assign(
@@ -1357,38 +1258,15 @@ def ivf_sq_topk(
         F.col(vec_col).alias("pvec"),
         sq_quantize(F.col(vec_col), lo, hi).alias("qa"),
     )
-    pscored = F.broadcast(probes).crossJoin(F.broadcast(centroids)).select(
-        "probe_id",
-        "qa",
-        "cid",
-        cosine(F.col("pvec"), F.col("cvec")).alias("csim"),
-    )
-    wp = Window.partitionBy("probe_id").orderBy(
-        F.col("csim").desc(), F.col("cid")
-    )
-    probe_buckets = (
-        pscored.withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= nprobe)
-        .select("probe_id", "qa", "cid")
-    )
-    score = F.aggregate(
-        F.zip_with("qa", "qb", lambda x, y: (x * y).cast("bigint")),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: acc + v,
-    )
     cand = (
-        F.broadcast(probe_buckets)
+        F.broadcast(_probe_buckets(probes, centroids, nprobe, "qa"))
         .join(corpus, "cid")
         .filter(F.col("probe_id") != F.col("id_b"))
-        .select("probe_id", "id_b", score.alias("score_q"))
+        .select("probe_id", "id_b", _int_dot("qa", "qb").alias("score_q"))
     )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("score_q").desc(), F.col("id_b")
-    )
-    return (
-        cand.withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rnk") <= k)
-        .select("probe_id", "id_b", "score_q", "rnk")
+    return _top_k(
+        cand, ["probe_id"], [F.col("score_q").desc(), F.col("id_b")], k,
+        ["probe_id", "id_b", "score_q", "rnk"], rank="rnk",
     )
 
 
@@ -1422,33 +1300,20 @@ def mmr_diversified_topk(
     corpus size after candidate generation.
     """
     probes = emb.filter(F.col(id_col) < n_probe_ids).select(
-        F.col(id_col).alias("probe_id"),
-        F.col(vec_col).alias("ea"),
-        vec_norm(F.col(vec_col)).alias("na"),
+        F.col(id_col).alias("probe_id"), *normed(vec_col, "ea", "na")
     )
-    allv = emb.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("eb"),
-        vec_norm(F.col(vec_col)).alias("nb"),
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("simq"), F.col("id_b"))
+    allv = emb.select(F.col(id_col).alias("id_b"), *normed(vec_col, "eb", "nb"))
     # probe side is n_probe_ids rows by construction — broadcast so the
-    # labeled exact tier can never plan a shuffle cross (r9 verdict 6)
-    cand = (
+    # labeled exact tier can never plan a shuffle cross
+    scored = (
         F.broadcast(probes).crossJoin(allv)
         .filter(F.col("id_b") != F.col("probe_id"))
         .select(
-            "probe_id",
-            "id_b",
-            "eb",
-            cosine_hoisted(
-                exact_dot(F.col("ea"), F.col("eb")), F.col("na"), F.col("nb")
-            ).alias("simq"),
+            "probe_id", "id_b", "eb",
+            cosine("ea", "eb", "na", "nb").alias("simq"),
         )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= n_cand)
-        .drop("rn")
     )
+    cand = _top_k(scored, ["probe_id"], [F.desc("simq"), F.col("id_b")], n_cand)
     return mmr_from_candidates(cand, k=k, lam=lam)
 
 
@@ -1472,7 +1337,7 @@ def mmr_from_candidates(
             "probe_id",
             F.col("x.id_b").alias("ca"),
             F.col("y.id_b").alias("cb"),
-            cosine(F.col("x.eb"), F.col("y.eb")).alias("sim_cc"),
+            cosine("x.eb", "y.eb").alias("sim_cc"),
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
@@ -1495,19 +1360,16 @@ def mmr_from_candidates(
                 F.col("simq") * F.lit(lam)
                 - F.coalesce(F.col("maxsel"), F.lit(0.0)) * F.lit(1.0 - lam),
             )
-        ww = Window.partitionBy("probe_id").orderBy(F.desc("mmr"), F.col("id_b"))
-        # Eager localCheckpoint per round (the kcore/connected_components
-        # iteration-hygiene discipline): round r's pick feeds BOTH the
+        # Eager localCheckpoint per round: round r's pick feeds BOTH the
         # next round's max-sim-to-selected join (via sel) and the
         # remaining-pool anti-join, so without materialization the final
-        # plan nests every earlier round's subtree exponentially — the
-        # analyzer alone took whole seconds per round at sf0.1, and the
-        # single final job re-derived each pick many times. Each pick is
-        # n_probes rows; k tiny jobs beat one exponential one.
+        # plan nests every earlier round's subtree exponentially. Each
+        # pick is n_probes rows; k tiny jobs beat one exponential one.
         pick = (
-            scored.withColumn("rr", F.row_number().over(ww))
-            .filter(F.col("rr") == 1)
-            .select("probe_id", "id_b", "simq")
+            _top_k(
+                scored, ["probe_id"], [F.desc("mmr"), F.col("id_b")], 1,
+                ["probe_id", "id_b", "simq"],
+            )
             .withColumn("rank", F.lit(r))
             .localCheckpoint(eager=True)
         )

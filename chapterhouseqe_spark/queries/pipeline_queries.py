@@ -1754,11 +1754,7 @@ def embedding_ivfpq_topk(spark, sf_dir):
     "cheap, rerank exact); corpus pairs never leave the bucket join",
 )
 def embedding_ann_rerank(spark, sf_dir):
-    from chapterhouseqe_spark.operators.similarity import (
-        cosine_hoisted,
-        exact_dot,
-        vec_norm,
-    )
+    from chapterhouseqe_spark.operators.similarity import cosine, normed
 
     emb = t(spark, sf_dir, "embeddings")
     cand = lsh_bucket_candidates(emb, dim=64, n_planes=6, seed=42)
@@ -1770,26 +1766,12 @@ def embedding_ann_rerank(spark, sf_dir):
     ).filter(F.col("probe_id") < 8)
     # norms hoisted into the attach projections (the oracle's own
     # norms-CTE form): one fold per vector side, not three per pair
-    pa = emb.select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("embedding").alias("pa"),
-        vec_norm(F.col("embedding")).alias("npa"),
-    )
-    pb = emb.select(
-        F.col("vec_id").alias("id_b"),
-        F.col("embedding").alias("pb"),
-        vec_norm(F.col("embedding")).alias("npb"),
-    )
+    pa = emb.select(F.col("vec_id").alias("probe_id"), *normed("embedding", "pa", "npa"))
+    pb = emb.select(F.col("vec_id").alias("id_b"), *normed("embedding", "pb", "npb"))
     scored = (
         sym.join(F.broadcast(pa), "probe_id")
         .join(pb, "id_b")
-        .select(
-            "probe_id",
-            "id_b",
-            cosine_hoisted(
-                exact_dot(F.col("pa"), F.col("pb")), F.col("npa"), F.col("npb")
-            ).alias("sim"),
-        )
+        .select("probe_id", "id_b", cosine("pa", "pb", "npa", "npb").alias("sim"))
     )
     w = Window.partitionBy("probe_id").orderBy(F.col("sim").desc(), F.col("id_b"))
     return (
@@ -3942,11 +3924,10 @@ def dedup_sparse_tf_cosine(spark, sf_dir):
     "pass, one bounded aggregate",
 )
 def embedding_norm_audit(spark, sf_dir):
-    from chapterhouseqe_spark.operators.similarity import exact_dot
+    from chapterhouseqe_spark.operators.similarity import vec_norm
 
     emb = t(spark, sf_dir, "embeddings")
-    nrm = F.sqrt(exact_dot(F.col("embedding"), F.col("embedding")))
-    return emb.select(nrm.alias("nrm")).agg(
+    return emb.select(vec_norm("embedding").alias("nrm")).agg(
         F.count(F.lit(1)).alias("n_vectors"),
         F.sum((F.col("nrm") < 1e-6).cast("bigint")).alias("n_near_zero"),
         F.percentile("nrm", 0.5).alias("p50_norm"),
@@ -4285,11 +4266,7 @@ def multimodal_image_patches(spark, sf_dir):
     "corpus twice",
 )
 def embedding_matryoshka_overlap(spark, sf_dir):
-    from chapterhouseqe_spark.operators.similarity import (
-        cosine_hoisted,
-        exact_dot,
-        vec_norm,
-    )
+    from chapterhouseqe_spark.operators.similarity import cosine, vec_norm
 
     emb = t(spark, sf_dir, "embeddings")
     # both the 16-dim slices and all four norms hoist into the per-row
@@ -4316,14 +4293,8 @@ def embedding_matryoshka_overlap(spark, sf_dir):
         .select(
             "probe_id",
             "id_b",
-            cosine_hoisted(
-                exact_dot(F.col("ea"), F.col("eb")), F.col("naf"), F.col("nbf")
-            ).alias("sim_full"),
-            cosine_hoisted(
-                exact_dot(F.col("ea16"), F.col("eb16")),
-                F.col("nat"),
-                F.col("nbt"),
-            ).alias("sim_trunc"),
+            cosine("ea", "eb", "naf", "nbf").alias("sim_full"),
+            cosine("ea16", "eb16", "nat", "nbt").alias("sim_trunc"),
         )
     )
     wf = Window.partitionBy("probe_id").orderBy(

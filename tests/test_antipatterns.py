@@ -129,3 +129,15 @@ def test_collect_sites_are_allowlisted():
 
 def test_first_sites_are_allowlisted():
     _check_sites(_FIRST, FIRST_ALLOWLIST, ".first()")
+
+
+def test_exact_dot_stays_in_similarity():
+    """Exact cosine has one owner, ``similarity.cosine`` (the fold over
+    hoisted norms); other modules score pairs through it, so the fold
+    can later be replaced in one place."""
+    bad = [
+        rel for rel, src in _sources()
+        if rel != os.path.join("operators", "similarity.py")
+        and re.search(r"\bexact_dot\b", src)
+    ]
+    assert not bad, f"exact_dot used outside operators/similarity.py: {bad}"

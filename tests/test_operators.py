@@ -238,6 +238,69 @@ def test_cosine_pairs_threshold(vectors):
     assert got == {(0, 1), (2, 3)}
 
 
+def test_zero_vector_gives_null_similarity(spark):
+    """An all-zero embedding has no direction: every cosine scorer
+    returns a NULL similarity for its pairs (as DuckDB's ``x / 0.0``
+    does) instead of failing the whole query with DIVIDE_BY_ZERO under
+    ANSI mode."""
+    from chapterhouseqe_spark.operators.similarity import hard_negatives
+
+    rows = [
+        (0, [1.0, 0.0], 0),
+        (1, [0.0, 0.0], 1),  # zero vector
+        (2, [0.6, 0.8], 1),
+        (3, [0.0, 1.0], 0),
+    ]
+    emb = spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int"
+    )
+    top = {
+        (r["probe_id"], r["id_b"]): r["sim"]
+        for r in cosine_topk(emb, F.col("vec_id") <= 1, k=3).collect()
+    }
+    assert top[(0, 1)] is None and top[(1, 0)] is None
+    assert top[(0, 2)] == pytest.approx(0.6)
+    pairs = {
+        (r["id_a"], r["id_b"]): r["sim"]
+        for r in cosine_pairs(emb, -1.0, force=True).collect()
+    }
+    # NULL fails the threshold, so zero-vector pairs drop out
+    assert set(pairs) == {(0, 2), (0, 3), (2, 3)}
+    neg = {
+        (r["anchor_id"], r["id_b"]): r["sim"]
+        for r in hard_negatives(emb, F.col("vec_id") == 0, k=2).collect()
+    }
+    assert neg[(0, 2)] == pytest.approx(0.6) and neg[(0, 1)] is None
+
+
+def test_salted_topk_matches_single_window(spark, sf_dir, monkeypatch):
+    """The salted two-stage top-k (taken above SALTED_TOPK_MIN_ROWS
+    corpus rows) returns exactly the single window's rows for all three
+    callers. The sf0.001 corpus sits below the threshold, so lowering
+    it forces the salted tier."""
+    from chapterhouseqe_spark.operators import similarity as sim
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    probe = F.col("vec_id") < 6
+
+    def run():
+        frames = [
+            sim.cosine_topk(emb, probe, k=4),
+            sim.hard_negatives(emb, probe, k=3),
+            sim.sq_topk(emb, probe, k=4),
+        ]
+        salted = ["pmod(" in df._jdf.queryExecution().optimizedPlan().toString()
+                  for df in frames]
+        return salted, [sorted(map(tuple, df.collect())) for df in frames]
+
+    single_salted, single = run()
+    monkeypatch.setattr(sim, "SALTED_TOPK_MIN_ROWS", 0)
+    salted_salted, salted = run()
+    assert single_salted == [False] * 3 and salted_salted == [True] * 3
+    assert salted == single
+    assert all(len(rows) == 6 * k for rows, k in zip(single, (4, 3, 4)))
+
+
 def test_cosine_pairs_row_count_guard(vectors, monkeypatch):
     """r10 verdict item 4: the O(n²) baseline refuses frames above the
     documented bound unless force=True — failing in seconds beats a
@@ -836,6 +899,7 @@ def test_ivf_sq_prebuilt_matches_inline(spark, sf_dir):
     from chapterhouseqe_spark.operators.similarity import (
         ivf_assign,
         ivf_sq_topk,
+        sq_topk,
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -850,6 +914,15 @@ def test_ivf_sq_prebuilt_matches_inline(spark, sf_dir):
     )
     assert sorted(map(tuple, inline.collect()), key=lambda t: (t[0], t[3])) == \
         sorted(map(tuple, pre.collect()), key=lambda t: (t[0], t[3]))
+    # probing every bucket ranks the whole corpus: the shared probe-bucket
+    # choice and integer dot then reproduce the flat SQ scan exactly
+    full = ivf_sq_topk(
+        emb, F.col("vec_id") < 4, k=3, n_centroids=8, nprobe=8,
+        centroid_method="first",
+    )
+    flat = sq_topk(emb, F.col("vec_id") < 4, k=3)
+    assert sorted(map(tuple, full.collect())) == \
+        sorted(map(tuple, flat.collect()))
 
 
 def test_ivf_sq_prebuilt_query_warm_reuse(spark, sf_dir, tmp_path, monkeypatch):
