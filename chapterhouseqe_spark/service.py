@@ -20,11 +20,13 @@ Design notes:
   shared storage, not a row stream through the driver — same posture
   as the reference, whose ``GetQueryData`` pages single row groups).
 - The reference addresses pages by (file_idx, row_group_idx, row_idx)
-  because results live in row groups; this engine addresses by one
-  flat row offset, which row-group stats still prune (engine.py:fetch
-  filters a row-id range). The iterator therefore carries one offset
-  instead of a triple — ``get_next_offset`` keeps the same
-  forward/reverse advance-and-stop logic.
+  because results live in row groups. This engine keeps that cursor
+  inside ``QueryEngine.fetch``: the ``__row_id`` statistics in the
+  result's Parquet footers map a flat row offset to the
+  ``(file, row_group)`` pairs holding it, and a row-id filter inside
+  those groups plays the part of ``row_idx``. The client therefore
+  carries one offset instead of a triple — ``get_next_offset`` keeps
+  the same forward/reverse advance-and-stop logic.
 """
 
 from __future__ import annotations

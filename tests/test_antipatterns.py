@@ -31,8 +31,13 @@ COLLECT_ALLOWLIST = {
     "operators/corpus.py": (1, "4096-bucket importance model"),
     # per-dimension quantization stats: dim-bounded (<= 64 rows)
     "operators/similarity.py": (1, "per-dimension SQ stats"),
-    # partition counts for paging + one bounded result page
-    "engine.py": (2, "partition-count frame; one LIMITed page"),
+    # one row per partition; result pages are read from parquet
+    # footers on the driver, except for results not on the driver's
+    # disk, with a variant column or with row groups above the cap,
+    # whose pages are one row-id-bounded Spark read
+    "engine.py": (2, "per-partition row counts for row ids; one "
+                     "row-id-bounded page of a result the footer "
+                     "reader declines"),
 }
 FIRST_ALLOWLIST = {
     # single-row aggregates driving fail-fast guards / dispatch

@@ -236,3 +236,220 @@ def test_materialize_partitioned(engine, sf_dir, tmp_path):
         pruned._jdf.queryExecution(), "formatted"
     )
     assert "PartitionFilters" in plan
+
+
+# --------------------------------------------------------------------
+# footer page reader ≡ the Spark read it replaced
+# --------------------------------------------------------------------
+TYPED_SQL = (
+    "select n_nationkey as k, "
+    "timestamp'2021-06-01 12:34:56.789' + make_dt_interval(0, n_nationkey) as ts, "
+    "timestamp'2500-01-01 00:00:00' as ts_far, "
+    "timestamp_ntz'2021-03-14 02:30:00.5' as ntz, "
+    "date_add(date'2020-02-29', n_nationkey) as d, "
+    "cast(n_nationkey / 3 as decimal(12, 4)) as dec, "
+    "cast(n_name as binary) as bin, "
+    "array(n_nationkey, null) as arr, "
+    "map(n_name, n_regionkey) as m, "
+    "named_struct('a', n_nationkey, 'b', n_name, 'c', array(1.5d)) as st, "
+    "case when n_nationkey % 3 = 0 then null else n_name end as maybe, "
+    "cast(null as timestamp) as ts_null "
+    "from read_files('{sf}/nation.parquet')"
+)
+
+
+def _spark_page(engine, qid, lo, hi):
+    from pyspark.sql import functions as F
+
+    df = engine.spark.read.parquet(f"{engine.results_root}/{qid}")
+    page = (
+        df.filter((F.col("__row_id") >= lo) & (F.col("__row_id") < hi))
+        .orderBy("__row_id")
+        .drop("__row_id")
+    )
+    return [r.asDict() for r in page.collect()]
+
+
+def _assert_pages_match(engine, qid):
+    n = engine.num_rows(qid)
+    for off in range(0, n + 8, 7):  # forward, incl. a page past the end
+        assert engine.fetch(qid, off, 7) == _spark_page(engine, qid, off, off + 7)
+    for off in (0, 3, 10, n - 1):  # reverse pages ending at `off`
+        lo = max(0, off - 5)
+        assert engine.fetch(qid, off, 6, forward=False) == _spark_page(
+            engine, qid, lo, off + 1
+        )
+    over = engine.fetch(qid, 2, 10, forward=False, allow_overflow=True)
+    assert over == _spark_page(engine, qid, 0, min(10, n))
+    assert engine.fetch(qid, n + 100, 10) == []
+
+
+def test_footer_pages_match_spark_read(engine, sf_dir):
+    engine.max_records_per_file = 4  # 20 rows → at least 5 files
+    qid = engine.run_query_sync(
+        f"select * from read_files('{sf_dir}/nation.parquet') "
+        "where n_nationkey % 2 = 0 or n_nationkey > 10"
+    )
+    assert engine.status(qid) is QueryStatus.COMPLETE, engine.error(qid)
+    _assert_pages_match(engine, qid)
+    assert len(engine._state(qid).pages.files) > 1
+    empty = engine.run_query_sync(
+        f"select * from read_files('{sf_dir}/nation.parquet') where n_nationkey < 0"
+    )
+    assert engine.status(empty) is QueryStatus.COMPLETE, engine.error(empty)
+    assert engine.fetch(empty, 0, 10) == _spark_page(engine, empty, 0, 10) == []
+    assert engine.fetch(empty, 0, 10, forward=False, allow_overflow=True) == []
+
+
+def test_file_uri_results_root_pages_from_footers(spark, sf_dir, tmp_path):
+    eng = QueryEngine(
+        spark,
+        results_root=f"file://{tmp_path}/results",
+        registry=ConnectionRegistry(default_base=sf_dir),
+    )
+    qid = eng.run_query_sync(f"select * from read_files('{sf_dir}/region.parquet')")
+    assert eng.status(qid) is QueryStatus.COMPLETE, eng.error(qid)
+    assert eng.fetch(qid, 1, 3) == _spark_page(eng, qid, 1, 4)
+    assert eng._state(qid).pages is not False  # served by the footer reader
+
+
+def test_results_spark_may_not_have_written_locally_page_through_spark(
+    engine, spark, sf_dir, monkeypatch
+):
+    """A root without a scheme resolves against ``fs.defaultFS``; when
+    that is not ``file:``, or the master is not local, the footer reader
+    steps aside and pages come from a Spark read."""
+    from chapterhouseqe_spark.engine import _local_dir
+
+    # session settings reach the Hadoop conf Spark writes with
+    spark.conf.set("fs.defaultFS", "hdfs://localhost:9")
+    try:
+        assert _local_dir(spark, "/tmp/chqe_query_results/q") is None
+        assert _local_dir(spark, "file:/tmp/chqe_query_results/q") == (
+            "/tmp/chqe_query_results/q"
+        )
+    finally:
+        spark.conf.unset("fs.defaultFS")
+    assert _local_dir(spark, "/tmp/chqe_query_results/q") == (
+        "/tmp/chqe_query_results/q"
+    )
+    assert _local_dir(spark, "hdfs://localhost:9/r") is None
+
+    class ClusterContext:
+        master = "spark://localhost:7077"
+
+    class ClusterSession:
+        sparkContext = ClusterContext()
+
+    assert _local_dir(ClusterSession(), "/tmp/chqe_query_results/q") is None
+
+    from chapterhouseqe_spark import engine as engine_mod
+
+    monkeypatch.setattr(engine_mod, "_local_dir", lambda spark, path: None)
+    qid = engine.run_query_sync(f"select * from read_files('{sf_dir}/region.parquet')")
+    assert engine.status(qid) is QueryStatus.COMPLETE, engine.error(qid)
+    assert engine.fetch(qid, 3, 3, forward=False) == _spark_page(engine, qid, 1, 4)
+    assert engine._state(qid).pages is False
+
+
+@pytest.mark.parametrize("tz", [None, "America/Los_Angeles"])
+def test_footer_pages_match_spark_read_typed(engine, sf_dir, tz):
+    """Every value type comes back as ``collect()`` gives it, also when
+    the Python process is not in UTC (Spark-written timestamps are UTC
+    instants that both paths turn into naive local datetimes)."""
+    import os
+    import time
+
+    old = os.environ.get("TZ")
+    if tz is not None:
+        os.environ["TZ"] = tz
+        time.tzset()
+    try:
+        engine.max_records_per_file = 4
+        qid = engine.run_query_sync(TYPED_SQL.format(sf=sf_dir))
+        assert engine.status(qid) is QueryStatus.COMPLETE, engine.error(qid)
+        _assert_pages_match(engine, qid)
+        row = engine.fetch(qid, 1, 1)[0]
+        assert isinstance(row["bin"], bytearray) and row["maybe"] is not None
+        assert row["ts_null"] is None and row["st"]["c"] == [1.5]
+    finally:
+        if old is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old
+        time.tzset()
+
+
+def test_failed_query_releases_persisted_frame(engine, spark):
+    """The row-id frame is persisted; a query that fails in its counts
+    job, after it or in its write must still release it."""
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return set(jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    for sql in (
+        "select raise_error('boom') as x from range(10)",  # counts job fails
+        "select 1 as `a.b`, 2 as a",  # fails after the counts job
+        "select make_interval(0, 0, 0, 1) as i from range(3)",  # write fails
+    ):
+        qid = engine.run_query_sync(sql)
+        assert engine.status(qid) is QueryStatus.ERROR
+        assert engine.error(qid)
+    assert persisted() <= before
+
+
+def test_row_groups_without_statistics_are_read_for_every_page(tmp_path):
+    """A row group whose footer has no row-id statistics is read for
+    every page; pages stay exact."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from chapterhouseqe_spark.engine import _read_page
+
+    def part(ids):
+        return pa.table({"v": [f"r{i}" for i in ids], "__row_id": ids})
+
+    # two files, three-row groups, one with statistics and one without
+    pq.write_table(part(list(range(0, 7))), tmp_path / "part-0.parquet", row_group_size=3)
+    pq.write_table(
+        part(list(range(7, 12))),
+        tmp_path / "part-1.parquet",
+        row_group_size=3,
+        write_statistics=False,
+    )
+    (tmp_path / "_SUCCESS").write_text("")
+    dataset = ds.dataset(str(tmp_path), format="parquet")
+    schema = StructType([StructField("v", StringType())])
+    for lo, hi in ((0, 12), (2, 9), (8, 10), (11, 40), (12, 20)):
+        rows = _read_page(dataset, schema, lo, hi)
+        assert rows == [{"v": f"r{i}"} for i in range(lo, min(hi, 12))]
+
+
+def test_large_row_groups_page_through_spark(engine, sf_dir, monkeypatch):
+    """Pyarrow decodes whole row groups; a result whose row groups are
+    larger than the cap is paged by a Spark read."""
+    from chapterhouseqe_spark import engine as engine_mod
+
+    monkeypatch.setattr(engine_mod, "FOOTER_PAGE_MAX_GROUP_BYTES", 100)
+    qid = engine.run_query_sync(f"select * from read_files('{sf_dir}/nation.parquet')")
+    assert engine.status(qid) is QueryStatus.COMPLETE, engine.error(qid)
+    assert engine.fetch(qid, 5, 4) == _spark_page(engine, qid, 5, 9)
+    assert engine._state(qid).pages is False
+
+
+def test_variant_results_page_through_spark(engine):
+    """pyarrow cannot read a variant column's footer; such results are
+    paged by a Spark read of the same row-id range."""
+    engine.max_records_per_file = 2
+    qid = engine.run_query_sync(
+        "select id, parse_json(concat('{\"a\": ', id, '}')) as v from range(5)"
+    )
+    assert engine.status(qid) is QueryStatus.COMPLETE, engine.error(qid)
+    rows = engine.fetch(qid, 3, 3, forward=False)
+    assert [(r["id"], r["v"].toJson()) for r in rows] == [
+        (i, f'{{"a":{i}}}') for i in (1, 2, 3)
+    ]
