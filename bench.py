@@ -213,18 +213,6 @@ def core_tier(all_names: list[str]) -> list[str]:
     return [n for n in all_names if n not in timed]
 
 
-def _relieve(spark) -> None:
-    """Drop inter-query residue: cached operator intermediates, then a
-    Python GC (py4j holds the JVM-side broadcasts alive until their
-    Python wrappers are collected) so the JVM GC + ContextCleaner can
-    actually reclaim them."""
-    import gc
-
-    spark.catalog.clearCache()
-    gc.collect()
-    spark.sparkContext._jvm.System.gc()
-
-
 def run_single(tiers: set[str]) -> dict:
     """One full bench session in THIS process's (fresh) JVM, running
     only the requested tiers. Returns the per-tier per-query second
@@ -236,15 +224,16 @@ def run_single(tiers: set[str]) -> dict:
         sf = 0.0
 
     from chapterhouseqe_spark.queries.registry import get_queries
-    from chapterhouseqe_spark.session import get_spark
+    from chapterhouseqe_spark.session import get_spark, released
 
     # 6g, not the session default 4g: the bench is the one consumer
     # that runs ALL 200+ registered queries through a single local
-    # JVM, and the steady-state residue (broadcast payloads + cached
-    # operator intermediates awaiting ContextCleaner) needs headroom
-    # the per-test sessions don't — two full runs OOMed late in the
-    # core tier at 4g. 6g stays under the knee where the session.py
-    # A/B measured young-gen pause cost (that was at 16g).
+    # JVM, and the steady-state residue (broadcast payloads awaiting
+    # the ContextCleaner) needs headroom the per-test sessions don't —
+    # two full runs OOMed late in the core tier at 4g, back when cached
+    # operator intermediates outlived their query. Whether 4g now
+    # suffices is unmeasured. 6g stays under the knee where the
+    # session.py A/B measured young-gen pause cost (that was at 16g).
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
     spark = get_spark("chqe-bench")
     queries = get_queries()
@@ -354,26 +343,20 @@ def run_single(tiers: set[str]) -> dict:
         spark.catalog.dropTempView(_wname)
 
     def run_tier(names) -> dict[str, float]:
-        # One shared local JVM times 200+ queries back-to-back;
-        # operators persist() intermediates (LSH shingle tables, CC
-        # frontiers, IVF codebooks...) and every broadcast join leaves
-        # a payload behind until the ContextCleaner's own GC cycle
-        # catches up — which, on the deliberately-small heap it does
-        # not: two full bench runs died with Java-heap OOM late in the
-        # core tier / sf1 warm-up. Dropping the cache and nudging a
-        # driver GC BETWEEN tiers keeps the steady-state footprint
-        # flat — the local-mode analog of per-job executor lifetime on
-        # a cluster — without touching any timed region.
+        # One shared local JVM times 200+ queries back-to-back; each
+        # query's scope releases the intermediates its operators
+        # persisted (LSH shingle tables, CC frontiers, IVF codebooks...)
+        # after its timed write, so the cache does not grow across the
+        # tier — the local-mode analog of per-job executor lifetime on
+        # a cluster.
         out: dict[str, float] = {}
-        for i, name in enumerate(names):
+        for name in names:
             build = queries[name]
-            t0 = time.time()
-            df = build(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            out[name] = round(time.time() - t0, 3)
-            if (i + 1) % 40 == 0:  # the 100+-query core tier OOMs
-                _relieve(spark)  # without mid-tier relief
-        _relieve(spark)
+            with released():
+                t0 = time.time()
+                df = build(spark, sf_dir)
+                df.write.format("noop").mode("overwrite").save()
+                out[name] = round(time.time() - t0, 3)
         return out
 
     timings = run_tier(BENCH_QUERIES) if "headline" in tiers else {}
@@ -429,9 +412,10 @@ def run_single(tiers: set[str]) -> dict:
             # pin added upstream bumps its first run ~+0.7s (r11 0.55
             # -> r12 0.70 with the minhash pin -> r13 1.38 with the
             # ngram pin) — a LASTING JVM effect of the extra JIT churn
-            # that _relieve cannot undo (bisected: reps1 0.585s /
-            # current 1.42s / relief-before 1.47s), while its warm
-            # steady state is unchanged at ~0.6-0.8s. The row measures
+            # that dropping the session's cache cannot undo (bisected:
+            # reps1 0.585s / current 1.42s / cache dropped before it
+            # 1.47s), while its warm steady state is unchanged at
+            # ~0.6-0.8s. The row measures
             # the mapInPandas decode, not the JIT lottery of whatever
             # ran before it, so record ITS warm floor too.
             reps = (
@@ -446,10 +430,11 @@ def run_single(tiers: set[str]) -> dict:
             )
             best = None
             for _ in range(reps):
-                t0 = time.time()
-                df = build(spark, sf1_dir)
-                df.write.format("noop").mode("overwrite").save()
-                dt = time.time() - t0
+                with released():
+                    t0 = time.time()
+                    df = build(spark, sf1_dir)
+                    df.write.format("noop").mode("overwrite").save()
+                    dt = time.time() - t0
                 best = dt if best is None else min(best, dt)
             sf1[name] = round(best, 3)
 

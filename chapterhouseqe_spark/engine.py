@@ -32,11 +32,14 @@ import threading
 import uuid
 from dataclasses import dataclass, field
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, MapType, StructType, VariantType
+from pyspark.sql.types import YearMonthIntervalType
 
 from chapterhouseqe_spark.connections import ConnectionRegistry
+from chapterhouseqe_spark.session import keep, released
 from chapterhouseqe_spark.sql.compiler import compile_expression, project
 from chapterhouseqe_spark.sql.parser import (
     ReadFilesSource,
@@ -81,50 +84,47 @@ def with_row_ids(df: DataFrame, col_name: str = ROW_ID) -> DataFrame:
     holds at 100k partitions; the persist is DISK_ONLY so a 100 TB result
     never pins executor memory (VERDICT r1 "What's wrong" #4).
 
-    The returned frame carries ``_chqe_total_rows`` (summed from the
-    per-partition counts — no post-write re-scan needed) and
-    ``_chqe_unpersist`` for the caller to release the intermediate.
+    The persisted intermediate is kept in the caller's
+    :func:`~chapterhouseqe_spark.session.released` scope, which releases
+    it once the caller's action is done. The returned frame carries
+    ``_chqe_total_rows`` (summed from the per-partition counts — no
+    post-write re-scan needed).
     """
-    from pyspark import StorageLevel
-
     spark = df.sparkSession
     tagged = df.withColumn("__mid", F.monotonically_increasing_id()).withColumn(
         "__pid", F.spark_partition_id()
     )
-    tagged.persist(StorageLevel.DISK_ONLY)
-    try:
-        # one row per partition — small by construction, so the order
-        # is set on the driver rather than by a Spark sort
-        counts = sorted(tagged.groupBy("__pid").count().collect())
-        offsets: list[tuple[int, int]] = []
-        running = 0
-        for pid, count in counts:
-            offsets.append((pid, running))
-            running += count
-        if offsets:
-            off_df = spark.createDataFrame(offsets, "__pid int, __offset long")
-            joined = tagged.join(F.broadcast(off_df), "__pid", "inner")
-        else:
-            # empty result: no rows to number, but the expression must still
-            # pass analysis (an empty create_map() is VOID-typed and fails —
-            # ADVICE r1 high-severity finding).
-            joined = tagged.withColumn("__offset", F.lit(0).cast("long"))
-        # local offset = mid - (pid << 33); monotonically_increasing_id puts
-        # the partition id in the upper 31 bits.
-        out = joined.withColumn(
-            col_name,
-            (
-                F.col("__mid")
-                - (F.col("__pid").cast("long") * F.lit(1 << 33).cast("long"))
-                + F.col("__offset")
-            ).cast("long"),
-        ).drop("__mid", "__pid", "__offset")
-        # preserve the caller's column order (the join moved __pid first)
-        out = out.select(*df.columns, col_name)
-    except BaseException:
-        tagged.unpersist()
-        raise
-    out._chqe_unpersist = tagged.unpersist  # caller may release after its action
+    keep(tagged, StorageLevel.DISK_ONLY)
+    # one row per partition — small by construction, so the order is set
+    # on the driver rather than by a Spark sort
+    counts = sorted(tagged.groupBy("__pid").count().collect())
+    offsets: list[tuple[int, int]] = []
+    running = 0
+    for pid, count in counts:
+        offsets.append((pid, running))
+        running += count
+    if offsets:
+        off_df = spark.createDataFrame(offsets, "__pid int, __offset long")
+        joined = tagged.join(F.broadcast(off_df), "__pid", "inner")
+    else:
+        # empty result: no rows to number, but the expression must still
+        # pass analysis (an empty create_map() is VOID-typed and fails —
+        # ADVICE r1 high-severity finding).
+        joined = tagged.withColumn("__offset", F.lit(0).cast("long"))
+    # local offset = mid - (pid << 33); monotonically_increasing_id puts
+    # the partition id in the upper 31 bits.
+    out = joined.withColumn(
+        col_name,
+        (
+            F.col("__mid")
+            - (F.col("__pid").cast("long") * F.lit(1 << 33).cast("long"))
+            + F.col("__offset")
+        ).cast("long"),
+    ).drop("__mid", "__pid", "__offset")
+    # preserve the caller's column order (the join moved __pid first);
+    # names are quoted so a dot in one is not read as a field access
+    quoted = ["`" + c.replace("`", "``") + "`" for c in df.columns]
+    out = out.select(*quoted, col_name)
     out._chqe_total_rows = running
     return out
 
@@ -273,18 +273,17 @@ class QueryEngine:
         def _run() -> None:
             state.status = QueryStatus.RUNNING
             try:
-                df = self.dataframe_for(sql, mode)
-                path = f"{self.results_root}/{query_id}"
-                ided = with_row_ids(df)
-                try:
+                with released():
+                    df = self.dataframe_for(sql, mode)
+                    _check_pageable(df.schema)
+                    path = f"{self.results_root}/{query_id}"
+                    ided = with_row_ids(df)
                     writer = ided.write.mode("overwrite")
                     if self.max_records_per_file:
                         writer = writer.option(
                             "maxRecordsPerFile", self.max_records_per_file
                         )
                     writer.parquet(path)
-                finally:
-                    ided._chqe_unpersist()
                 # row count comes from with_row_ids' per-partition counts —
                 # no second full read of the result (VERDICT r1 #5).
                 state.num_rows = ided._chqe_total_rows
@@ -343,17 +342,18 @@ class QueryEngine:
         from pyspark.sql import Observation
 
         obs = Observation()
-        df = self.dataframe_for(sql, mode).observe(
-            obs, F.count(F.lit(1)).alias("rows_written")
-        )
-        writer = df.write.mode(save_mode)
-        if max_records_per_file or self.max_records_per_file:
-            writer = writer.option(
-                "maxRecordsPerFile", max_records_per_file or self.max_records_per_file
+        with released():
+            df = self.dataframe_for(sql, mode).observe(
+                obs, F.count(F.lit(1)).alias("rows_written")
             )
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
+            writer = df.write.mode(save_mode)
+            if max_records_per_file or self.max_records_per_file:
+                writer = writer.option(
+                    "maxRecordsPerFile", max_records_per_file or self.max_records_per_file
+                )
+            if partition_by:
+                writer = writer.partitionBy(*partition_by)
+            writer.parquet(path)
         return int(obs.get["rows_written"])
 
     # ---------------------------------------------------------- status
@@ -443,16 +443,36 @@ class QueryEngine:
             return self._queries[query_id]
 
 
-def _has_variant(dt) -> bool:
-    if isinstance(dt, VariantType):
-        return True
+def _field_of_type(dt, kind, path: str = "") -> str | None:
+    """The path of the first field of ``dt``, nested ones included, whose
+    type is a ``kind`` (``col``, ``col.field``, ``col.element``,
+    ``col.key``, ``col.value``), or None."""
+    if isinstance(dt, kind):
+        return path
     if isinstance(dt, StructType):
-        return any(_has_variant(f.dataType) for f in dt.fields)
-    if isinstance(dt, ArrayType):
-        return _has_variant(dt.elementType)
-    if isinstance(dt, MapType):
-        return _has_variant(dt.keyType) or _has_variant(dt.valueType)
-    return False
+        parts = [(f.name, f.dataType) for f in dt.fields]
+    elif isinstance(dt, ArrayType):
+        parts = [("element", dt.elementType)]
+    elif isinstance(dt, MapType):
+        parts = [("key", dt.keyType), ("value", dt.valueType)]
+    else:
+        return None
+    for name, child in parts:
+        found = _field_of_type(child, kind, f"{path}.{name}" if path else name)
+        if found is not None:
+            return found
+    return None
+
+
+def _check_pageable(schema: StructType) -> None:
+    """Reject a result no page could return: neither the footer reader's
+    Arrow conversion nor ``collect()`` converts a year-month interval."""
+    bad = _field_of_type(schema, YearMonthIntervalType)
+    if bad is not None:
+        raise TypeError(
+            f"result column {bad!r} is a year-month interval, which result "
+            "pages cannot return; cast it to a string or a number"
+        )
 
 
 def _local_dir(spark: SparkSession, path: str) -> str | None:
@@ -484,7 +504,7 @@ def _footer_dataset(spark: SparkSession, state: _QueryState):
     import pyarrow.dataset as ds
 
     local = _local_dir(spark, state.result_path)
-    if local is None or _has_variant(state.schema):
+    if local is None or _field_of_type(state.schema, VariantType) is not None:
         return None
     # INT96 timestamps in microseconds: nanoseconds overflow past 2262
     fmt = ds.ParquetFileFormat(

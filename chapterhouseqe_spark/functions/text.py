@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from chapterhouseqe_spark.session import keep
+
 # tiny per-language stopword marker sets for the n-gram/stopword heuristic
 LANG_MARKERS: dict[str, tuple[str, ...]] = {
     "en": ("the", "a", "of", "and", "is"),
@@ -416,12 +418,10 @@ def bpe_apply_top_merge(docs, text_col: str = "text", k: int = 20):
     :func:`bpe_pair_counts` (corpus → word-freq collapse first); the
     applied merge is a 1-row broadcast.
     """
-    from pyspark import StorageLevel
-
     w = F.col("w")
     # ONE corpus scan: the word-frequency frame feeds both the top-1
     # pair choice and the symbol-table rewrite (persist, vocab-sized)
-    wf = word_freqs(docs, text_col).persist(StorageLevel.MEMORY_AND_DISK)
+    wf = keep(word_freqs(docs, text_col))
     sym = F.concat(
         F.lit("  "),
         F.array_join(
@@ -508,10 +508,8 @@ def bpe_train_merges(docs, text_col: str = "text", n_merges: int = 3):
     """
     from functools import reduce
 
-    from pyspark import StorageLevel
-
     w = F.col("w")
-    wf = word_freqs(docs, text_col).persist(StorageLevel.MEMORY_AND_DISK)
+    wf = keep(word_freqs(docs, text_col))
     sym = F.concat(
         F.lit("  "),
         F.array_join(
@@ -522,9 +520,7 @@ def bpe_train_merges(docs, text_col: str = "text", n_merges: int = 3):
         ),
         F.lit("  </w>  "),
     )
-    state = wf.select("freq", sym.alias("s")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    state = keep(wf.select("freq", sym.alias("s")))
     steps = []
     for step in range(1, n_merges + 1):
         top1 = pair_counts_from_symbols(state, k=1)
@@ -540,10 +536,9 @@ def bpe_train_merges(docs, text_col: str = "text", n_merges: int = 3):
         replacement = F.concat(
             F.lit(" "), F.replace(F.col("p"), F.lit(" "), F.lit("")), F.lit(" ")
         )
-        state = (
+        state = keep(
             state.crossJoin(F.broadcast(p))
             .select("freq", F.replace(F.col("s"), pattern, replacement).alias("s"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
     return reduce(lambda a, b: a.unionAll(b), steps)
 
@@ -564,10 +559,8 @@ def bpe_encode_stats(docs, text_col: str = "text", n_merges: int = 3):
     the word, which is the entire reason production BPE encoders
     memoize per word.
     """
-    from pyspark import StorageLevel
-
     w = F.col("w")
-    wf = word_freqs(docs, text_col).persist(StorageLevel.MEMORY_AND_DISK)
+    wf = keep(word_freqs(docs, text_col))
     sym = F.concat(
         F.lit("  "),
         F.array_join(
@@ -578,9 +571,9 @@ def bpe_encode_stats(docs, text_col: str = "text", n_merges: int = 3):
         ),
         F.lit("  </w>  "),
     )
-    state = wf.select(
+    state = keep(wf.select(
         "freq", F.length(w).alias("n_chars"), sym.alias("s")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
     for _ in range(n_merges):
         top1 = pair_counts_from_symbols(state, k=1).select(
             F.col("pair").alias("p")
@@ -591,14 +584,13 @@ def bpe_encode_stats(docs, text_col: str = "text", n_merges: int = 3):
         replacement = F.concat(
             F.lit(" "), F.replace(F.col("p"), F.lit(" "), F.lit("")), F.lit(" ")
         )
-        state = (
+        state = keep(
             state.crossJoin(F.broadcast(top1))
             .select(
                 "freq",
                 "n_chars",
                 F.replace(F.col("s"), pattern, replacement).alias("s"),
             )
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
     n_tok = F.size(F.split(F.trim(F.col("s")), r"\s+"))
     return state.agg(
@@ -673,9 +665,7 @@ def bigram_prob_scores(docs, text_col: str = "text", id_col: str = "doc_id"):
     # materialization (the count doubles as the action so the two
     # aggregations below never race the lazy persist): 22.8s -> 15.5s
     # at sf1, r13 optimization.
-    from pyspark import StorageLevel
-
-    bigrams = bigrams.persist(StorageLevel.MEMORY_AND_DISK)
+    bigrams = keep(bigrams)
     bigrams.count()
     joint = bigrams.groupBy("g").agg(F.count(F.lit(1)).alias("cnt_bg"))
     prefix = bigrams.groupBy("g1").agg(F.count(F.lit(1)).alias("cnt_w1"))

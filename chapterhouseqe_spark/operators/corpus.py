@@ -14,12 +14,12 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from chapterhouseqe_spark.operators.guards import (
     CANDIDATE_MASS_BUDGET,
     check_candidate_mass,
 )
+from chapterhouseqe_spark.session import checkpoint, keep
 
 
 def chunk_documents(
@@ -171,7 +171,7 @@ def pack_sequences(
     # the ranged frame ONCE; both branches then read the same blocks.
     # (eager=False keeps it lazy — it still materializes exactly once,
     # at the first action, and both branches share it.)
-    ranged = ranged.localCheckpoint(eager=False)
+    ranged = checkpoint(ranged, eager=False)
     in_part = Window.partitionBy("__pid").orderBy("__k")
     local = ranged.withColumn(
         "__local_before",
@@ -507,7 +507,7 @@ def source_overlap_matrix(
 
     # persist: three consumers (both self-join sides + sizes) would
     # otherwise each re-run the corpus explode + distinct
-    posting = (
+    posting = keep(
         ensure_parallelism(docs)
         .filter(F.size(F.split(F.trim(F.col(text_col)), r"\s+")) >= k)
         .select(
@@ -515,7 +515,6 @@ def source_overlap_matrix(
             F.explode(word_shingles(F.col(text_col), k)).alias("s"),
         )
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     sizes = posting.groupBy("src").agg(F.count(F.lit(1)).alias("n"))
     pairs = (
@@ -578,7 +577,7 @@ def source_novelty(
         word_shingles,
     )
 
-    posting = (
+    posting = keep(
         ensure_parallelism(docs)
         .filter(F.size(F.split(F.trim(F.col(text_col)), r"\s+")) >= k)
         .select(
@@ -586,7 +585,6 @@ def source_novelty(
             F.col(source_col).alias("src"),
             F.explode(word_shingles(F.col(text_col), k)).alias("s"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     first = posting.groupBy("s").agg(
         F.expr("min_by(src, id)").alias("first_src")
@@ -864,10 +862,9 @@ def source_divergence_matrix(
     fb = dsir_hashed_features(
         df, text_col, id_col, n_buckets, passthrough=(source_col,)
     )
-    hist = (
+    hist = keep(
         fb.groupBy(F.col(source_col).alias("src"), "b")
         .agg(F.count(F.lit(1)).alias("c"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     tot = hist.groupBy("src").agg(F.sum("c").cast("long").alias("t"))
     # Overflow guard (see magnitude note): l1_scaled ≤ 2·Ta·Tb must
@@ -985,7 +982,7 @@ def token_coverage_curve(
     # both branches (per-partition ranks + partition row counts) must
     # see the same physical partitioning — same localCheckpoint
     # rationale as pack_sequences
-    ranged = ranged.localCheckpoint(eager=False)
+    ranged = checkpoint(ranged, eager=False)
     in_part = Window.partitionBy("__pid").orderBy(
         F.col("c").desc(), F.col("tok")
     )
@@ -1202,13 +1199,13 @@ def token_budget_plan(
         .groupBy("source")
         .agg(F.sum("__n").cast("long").alias("avail_tokens"))
     )
-    s = avail.select(
+    s = keep(avail.select(
         "source",
         "avail_tokens",
         F.floor(F.sqrt(F.col("avail_tokens").cast("double")))
         .cast("long")
         .alias("weight_num"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
     bound = s.agg(
         F.max("weight_num").alias("mx"),
         F.sum("weight_num").cast("long").alias("den"),
@@ -1406,7 +1403,7 @@ def chunk_ann_topk(
         # chunk+pool+sign pass runs once whether or not the guard is
         # on. The probe lineage re-evaluates once for its histogram —
         # it is the deliberately human-sized side.
-        corpus = corpus.persist(StorageLevel.MEMORY_AND_DISK)
+        corpus = keep(corpus)
         pb = probes.groupBy("bucket").agg(
             F.count(F.lit(1)).cast("double").alias("pc")
         )
@@ -1560,14 +1557,13 @@ def perceptron_train(
 
     if dim < 1 or epochs < 1:
         raise ValueError("need dim >= 1 and epochs >= 1")
-    feats = (
+    feats = keep(
         ensure_parallelism(df)
         .select(
             F.col(id_col),
             label.cast("long").alias("y"),
             hashed_bow_embedding(F.col(text_col), dim).alias("c"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     feats.count()  # materialize at the seam: epochs jobs read the cache
     try:

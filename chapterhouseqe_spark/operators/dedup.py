@@ -36,7 +36,6 @@ from __future__ import annotations
 
 import logging
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -45,6 +44,7 @@ from chapterhouseqe_spark.operators.guards import (
     check_candidate_mass,
 )
 from chapterhouseqe_spark.operators.util import ensure_parallelism
+from chapterhouseqe_spark.session import checkpoint, keep
 
 logger = logging.getLogger(__name__)
 
@@ -261,7 +261,7 @@ def minhash_lsh_pairs(
     # once — MEMORY_AND_DISK spills rather than pins at 100 TB, and the
     # frame is (id, shingles), ~corpus-sized, the standard cache point
     # in dedup pipelines.
-    sh = with_shingles(df, text_col, id_col, k).persist(StorageLevel.MEMORY_AND_DISK)
+    sh = keep(with_shingles(df, text_col, id_col, k))
     sig = minhash_signatures(sh, num_perm, seed)
     band_rows = sig.select(
         "id",
@@ -1060,7 +1060,7 @@ def ngram_jaccard_pairs(
     into a 100 TB run. Default :data:`NGRAM_PAIR_ROW_BUDGET` (1e9);
     ``None`` waives the check for oversized-heap probe runs.
     """
-    sh = with_shingles(df, text_col, id_col, k).persist(StorageLevel.MEMORY_AND_DISK)
+    sh = keep(with_shingles(df, text_col, id_col, k))
     posting = sh.select("id", F.explode("shingles").alias("s"))
     n_docs_hint = None
     if prefix_filter == "auto":
@@ -1124,9 +1124,7 @@ def ngram_jaccard_pairs(
     # spills rather than pins, and the guard's action doubles as the
     # materializing pass. The columnar cache serves each consumer only
     # the columns it reads.
-    posting = _drop_hot(prefixes, max_shingle_freq, index=posting).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    posting = keep(_drop_hot(prefixes, max_shingle_freq, index=posting))
     # Fail-fast at the exactness boundary (r10 verdict item 3): Σc_s²
     # over the prefix posting is the exact pairing-row count, one cheap
     # count-shuffle over the cached frame — raise HERE, in seconds,
@@ -1226,7 +1224,7 @@ def ngram_containment_dropped(
     not the index shuffle; the final per-doc argmax window sees only
     that doc's qualifying containers, bounded by its posting overlap.
     """
-    sh = with_shingles(df, text_col, id_col, k).persist(StorageLevel.MEMORY_AND_DISK)
+    sh = keep(with_shingles(df, text_col, id_col, k))
     posting = sh.select("id", F.explode("shingles").alias("s"))
     # The containment keep-rule (inter/min(n_a,n_b) >= threshold, the
     # max of the two directional containments) keeps every pair the
@@ -1480,7 +1478,7 @@ def connected_components(
     # the pair pipeline twice inside that job (union branches don't
     # share exchanges). The checkpoint also truncates lineage, so each
     # round's plan is a block scan, not the pair derivation.
-    pairs = pairs.localCheckpoint(eager=True)
+    pairs = checkpoint(pairs)
     # r13 optimization: under the small-graph cap the min-label
     # fixpoint runs in numpy on the collected pair list — the SAME
     # round schedule (hop + pointer jump per round, converged when a
@@ -1542,16 +1540,13 @@ def connected_components(
             "id",
             F.coalesce(F.col("component"), F.col("id")).alias("component"),
         )
-    edges = (
+    edges = keep(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionAll(
             pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    labels = ids.select(F.col("id"), F.col("id").alias("component")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    labels = keep(ids.select(F.col("id"), F.col("id").alias("component")))
     # Convergence via the label-sum invariant (r13 optimization round,
     # guide §2.4): every update takes a least() of the old label and
     # candidate mins, so per-row labels are monotonically non-increasing
@@ -1597,9 +1592,9 @@ def connected_components(
             if (i + 1) % checkpoint_every == 0:
                 # eager localCheckpoint: materializes AND truncates
                 # lineage — plan depth resets here.
-                updated = updated.localCheckpoint(eager=True)
+                updated = checkpoint(updated)
             else:
-                updated = updated.persist(StorageLevel.MEMORY_AND_DISK)
+                updated = keep(updated)
             # full aggregation (not limit(1)) so `updated` is
             # materialized into its cache before the previous generation
             # is unpersisted — otherwise later rounds would silently
@@ -1613,7 +1608,7 @@ def connected_components(
                 # only writes the cached blocks — and it guarantees the
                 # RETURNED plan is one scan deep regardless of where the
                 # last periodic checkpoint fell in the round cycle.
-                return labels.localCheckpoint(eager=True)
+                return checkpoint(labels)
             prev_sum = new_sum
         raise RuntimeError(
             f"connected_components: no convergence after {max_iterations} rounds "
@@ -1706,7 +1701,7 @@ def semantic_dedup_candidates(
     # the self-join consumes the assignment twice; persist so Lloyd's
     # iterations run once, not once per join side (same pattern as the
     # shingle frame in minhash_lsh_pairs)
-    assign = assign.persist(StorageLevel.MEMORY_AND_DISK)
+    assign = keep(assign)
     a = assign.select(F.col("id").alias("id_a"), "cid")
     b = assign.select(F.col("id").alias("id_b"), "cid")
     cand = a.join(b, "cid").filter(F.col("id_a") < F.col("id_b"))
@@ -2508,9 +2503,7 @@ def winnow_overlap_pairs(
     documented message on either tier. Over-cap corpora run the
     classic join.
     """
-    fps = winnow_fingerprints(df, text_col, id_col, k, w).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    fps = keep(winnow_fingerprints(df, text_col, id_col, k, w))
     posting = fps.select(F.col(id_col).alias("id"), F.col("fp").alias("s"))
     return (
         _exact_pair_counts(

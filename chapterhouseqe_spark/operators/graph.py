@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from chapterhouseqe_spark.operators.util import ensure_parallelism
+from chapterhouseqe_spark.session import checkpoint, keep
 
 logger = logging.getLogger(__name__)
 
@@ -118,16 +119,13 @@ def pagerank_fixed_point(
     iterations to bound lineage (n_iter ≤ 5 here, so plan depth is
     fine without it).
     """
-    from pyspark import StorageLevel
-
     # the distinct edge frame feeds degree, the per-iteration join, AND
     # the node census — persist it once or the (possibly expensive)
     # edge derivation replays for every consumer in every iteration
-    e = (
+    e = keep(
         ensure_parallelism(edges)
         .select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     # r13 optimization: under the small-graph cap the whole fixed-point
     # recurrence runs in numpy on the collected integer edge list — the
@@ -157,12 +155,11 @@ def pagerank_fixed_point(
             pd.DataFrame({"id": node_ids.astype(np_id), "rank": r}), schema
         )
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    e_deg = e.join(deg, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    nodes = (
+    e_deg = keep(e.join(deg, "src"))
+    nodes = keep(
         e.select(F.col("src").alias("id"))
         .union(e.select(F.col("dst").alias("id")))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     # Materialize both caches BEFORE the final job references e_deg
     # n_iter times and nodes n_iter+1 times: persisted-but-lazy frames
@@ -269,9 +266,7 @@ def triangle_count(
     keyed on the low node, one membership join keyed on the wedge's
     far pair — three shuffles total, AQE-skew-managed.
     """
-    from pyspark import StorageLevel
-
-    und = (
+    und = keep(
         ensure_parallelism(edges)
         .select(
             F.least(F.col(src_col), F.col(dst_col)).alias("a"),
@@ -279,17 +274,15 @@ def triangle_count(
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    deg = (
+    deg = keep(
         und.select(F.col("a").alias("v"))
         .union(und.select(F.col("b").alias("v")))
         .groupBy("v")
         .agg(F.count(F.lit(1)).alias("d"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     # orient low (d, id) -> high (d, id)
-    e = (
+    e = keep(
         und.join(deg.select(F.col("v").alias("a"), F.col("d").alias("da")), "a")
         .join(deg.select(F.col("v").alias("b"), F.col("d").alias("db")), "b")
         .select(
@@ -302,7 +295,6 @@ def triangle_count(
             .alias("o")
         )
         .select(F.col("o.u").alias("u"), F.col("o.w").alias("w"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     # r14 optimization (r13 verdict item 4 — this query's 22 sub-second
     # jobs across three persist seams were the extended tier's largest
@@ -436,8 +428,6 @@ def kcore_survivors(
     plus one map-side-combinable groupBy — alive shrinks monotonically,
     so round cost falls; the arc frame never re-derives.
     """
-    from pyspark import StorageLevel
-
     canon = (
         ensure_parallelism(edges)
         .select(
@@ -455,12 +445,14 @@ def kcore_survivors(
     # nested deeper every round. Over an exact-jaccard pair graph at
     # sf0.1 the analyzer/optimizer cost of those growing plans was
     # 1.8-5.8s PER ROUND of a 31s run; with truncation each round is
-    # ~0.3s. The blocks live on executors for the result's lifetime —
+    # ~0.3s. The blocks live on executors until the query ends —
     # an executor loss mid-peel fails the job (no lineage to recompute
     # through), the standard iterative-graph trade.
-    arcs = canon.select(F.col("u").alias("a"), F.col("v").alias("b")).unionAll(
-        canon.select(F.col("v").alias("a"), F.col("u").alias("b"))
-    ).localCheckpoint(eager=True)
+    arcs = checkpoint(
+        canon.select(F.col("u").alias("a"), F.col("v").alias("b")).unionAll(
+            canon.select(F.col("v").alias("a"), F.col("u").alias("b"))
+        )
+    )
     # NOTE (r13 optimization, resumed session): the small-graph numpy
     # kernel that pays off for connected_components and pagerank was
     # tried HERE too and measured a consistent +0.25s (warm min-of-3
@@ -468,9 +460,7 @@ def kcore_survivors(
     # n_rounds x (one join-agg) over already-checkpointed tiny frames,
     # so the collect + createDataFrame overhead exceeds the saved
     # scheduler latency. Reverted; the distributed peel below stands.
-    alive = (
-        arcs.select(F.col("a").alias("id")).distinct().localCheckpoint(eager=True)
-    )
+    alive = checkpoint(arcs.select(F.col("a").alias("id")).distinct())
     # NOTE (r13 optimization round): broadcasting the node-sized alive
     # set here was tried and REVERTED — the shuffle plan's semi-joins
     # and the groupBy(a) share arc partitioning that the broadcast
@@ -488,23 +478,20 @@ def kcore_survivors(
             .agg(F.count(F.lit(1)).alias("deg"))
         )
         # eager: materializes this round before the next builds on it;
-        # superseded generations are reclaimed by the ContextCleaner
-        # when their frames go out of scope (never unpersist a
-        # checkpointed frame by hand — the blocks are its ONLY copy).
-        alive = (
+        # every generation is released with the query's scope, never
+        # mid-peel (the blocks are a checkpointed frame's ONLY copy).
+        alive = checkpoint(
             deg.filter(F.col("deg") >= k)
             .select(F.col("a").alias("id"))
-            .localCheckpoint(eager=True)
         )
     # The result persists + materializes so the caller's collect reads
     # cache; if evicted it recomputes from the arc/alive CHECKPOINT
     # blocks (one join-agg), never from the raw edge derivation — the
     # recompute cliff the old persist-then-unpersist shape left open
     # (measured: a ~3 min sf1 run turned into a 30-min recompute).
-    out = (
+    out = keep(
         deg.filter(F.col("deg") >= k)
         .select(F.col("a").alias("id"), F.col("deg"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     out.count()
     return out

@@ -73,8 +73,10 @@ def file_key_ranges(path: str, column: str) -> list[tuple[str, object, object]]:
     out = []
     for f in sorted(_glob.glob(os.path.join(path, "*.parquet"))):
         md = pq.ParquetFile(f).metadata
-        schema_names = md.schema.to_arrow_schema().names
-        ci = schema_names.index(column)
+        # column chunks are numbered by leaf, so a nested column before
+        # the key shifts its top-level field index: match by path
+        leaves = [md.schema.column(i).path for i in range(md.num_columns)]
+        ci = leaves.index(column)
         mins, maxs = [], []
         for rg in range(md.num_row_groups):
             st = md.row_group(rg).column(ci).statistics

@@ -42,6 +42,7 @@ from chapterhouseqe_spark.operators.guards import (
     CANDIDATE_MASS_BUDGET,
     check_candidate_mass,
 )
+from chapterhouseqe_spark.session import checkpoint, keep
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -70,15 +71,13 @@ def term_frequencies(
     """The (doc_id, term, tf) collapse — tokenize ONCE; this persisted
     frame is the inverted index every retrieval op derives dl/df/stats
     from, so the corpus is scanned a single time."""
-    from pyspark import StorageLevel
-
     toks = docs.select(
         F.col(id_col).alias("doc_id"),
         F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("term"),
     )
-    return toks.groupBy("doc_id", "term").agg(
+    return keep(toks.groupBy("doc_id", "term").agg(
         F.count(F.lit(1)).alias("tf")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
 
 
 def bm25_scores(
@@ -130,12 +129,8 @@ def bm25_scores(
     computation. ``dl``/``stats`` can be passed in by callers that run
     several scoring passes over the same tf frame (RM3).
     """
-    from pyspark import StorageLevel
-
     if dl is None:
-        dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl")).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+        dl = keep(tf.groupBy("doc_id").agg(F.sum("tf").alias("dl")))
     if stats is None:
         # one tiny collect: (n docs, avgdl) — the same two values the
         # old plan crossJoin-broadcast as a 1-row frame, now plan
@@ -153,11 +148,10 @@ def bm25_scores(
     # posting row of t is kept), then eagerly checkpoint the
     # human-sized result so the candidate-mass guard and the scoring
     # broadcast read it instead of re-aggregating the corpus.
-    dfp = (
+    dfp = checkpoint(
         tf.join(F.broadcast(queries.select("term").distinct()), "term")
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("df"))
-        .localCheckpoint(eager=True)
     )
 
     if max_candidate_rows is not None:
@@ -368,8 +362,6 @@ def bm25_self_retrieval(
     (score DESC, doc_id ASC) — one aggregation over posting-bounded
     candidates instead of a per-query global sort.
     """
-    from pyspark import StorageLevel
-
     tf = term_frequencies(docs, text_col, id_col)
     probes = probe_term_queries(tf, probe_mod, probe_rem, n_terms)
     # Persist the scored frame: it feeds BOTH the broadcast self_rows
@@ -380,17 +372,16 @@ def bm25_self_retrieval(
     # so MEMORY_AND_DISK is safe at scale. The eager self_rows
     # checkpoint below materializes the cache before the broadcast
     # references it.
-    scores = bm25_scores(
+    scores = keep(bm25_scores(
         tf, F.broadcast(probes), max_candidate_rows=max_candidate_rows
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    self_rows = (
+    ))
+    self_rows = checkpoint(
         scores.filter(F.col("query_id") == F.col("doc_id"))
         .select(
             "query_id",
             F.col("score").alias("self_score"),
             F.col("doc_id").alias("self_id"),
         )
-        .localCheckpoint(eager=True)
     )
     better = (
         scores.join(F.broadcast(self_rows), "query_id")
@@ -425,12 +416,11 @@ def probe_term_queries(
     frame is |probes| x n_terms rows, broadcast-small by construction.
     """
     w = Window.partitionBy("doc_id").orderBy(F.col("tf").desc(), F.col("term"))
-    return (
+    return checkpoint(
         tf.filter(F.col("doc_id") % probe_mod == probe_rem)
         .withColumn("tr", F.row_number().over(w))
         .filter(F.col("tr") <= n_terms)
         .select(F.col("doc_id").alias("query_id"), "term")
-        .localCheckpoint(eager=True)
     )
 
 
@@ -483,16 +473,12 @@ def rm3_expansion_retrieval(
     Returns (probe_id, doc_id, score, rank), rank 1..k_out per probe
     by (score DESC, doc_id).
     """
-    from pyspark import StorageLevel
-
     tf = term_frequencies(docs, text_col, id_col)
     probes = probe_term_queries(tf, probe_mod, probe_rem, n_terms)
     # dl/stats computed ONCE and shared by the relevance model and both
     # scoring passes (bm25_scores r13 restructure) — previously each
     # consumer re-aggregated them from tf.
-    dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    dl = keep(tf.groupBy("doc_id").agg(F.sum("tf").alias("dl")))
     stats = dl.agg(
         F.count(F.lit(1)).alias("n"),
         (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
@@ -542,7 +528,15 @@ def rm3_expansion_retrieval(
             (F.lit(RM3_LAM_EXP) * F.col("w")).alias("eqw"),
         )
     )
-    qterms = (
+    # Eager localCheckpoint: qterms' lineage embeds the ENTIRE
+    # first BM25 pass (fb window -> relevance-model fold), and the
+    # second bm25_scores call evaluates its query frame three times
+    # (candidate-mass guard, the scoring broadcast, the df-pruning
+    # broadcast) — without materialization that re-runs the first
+    # pass per evaluation (measured ~2/3 of the query's 16s at
+    # sf0.1). The frame is |probes| x (n_terms + n_exp) rows — the
+    # broadcast-small query set by construction.
+    qterms = checkpoint(
         probes.withColumn("oqw", F.lit(RM3_LAM_ORIG))
         .join(expq, ["query_id", "term"], "full_outer")
         .select(
@@ -553,15 +547,6 @@ def rm3_expansion_retrieval(
                 + F.coalesce(F.col("eqw"), F.lit(0.0))
             ).alias("qw"),
         )
-        # Eager localCheckpoint: qterms' lineage embeds the ENTIRE
-        # first BM25 pass (fb window -> relevance-model fold), and the
-        # second bm25_scores call evaluates its query frame three times
-        # (candidate-mass guard, the scoring broadcast, the df-pruning
-        # broadcast) — without materialization that re-runs the first
-        # pass per evaluation (measured ~2/3 of the query's 16s at
-        # sf0.1). The frame is |probes| x (n_terms + n_exp) rows — the
-        # broadcast-small query set by construction.
-        .localCheckpoint(eager=True)
     )
     second = bm25_scores(
         tf,

@@ -48,7 +48,6 @@ from __future__ import annotations
 
 import random
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -57,6 +56,7 @@ from chapterhouseqe_spark.operators.guards import (
     check_candidate_mass,
 )
 from chapterhouseqe_spark.operators.util import ensure_parallelism
+from chapterhouseqe_spark.session import checkpoint, keep
 
 # _top_k over more corpus rows than this runs salted two-stage; below
 # it the extra exchange costs more than the funnel it avoids
@@ -338,7 +338,7 @@ def lsh_bucket_candidates(
     if max_bucket is not None:
         # bucketed feeds the size pass + both join sides — persist so the
         # signature expressions run once.
-        bucketed = bucketed.persist(StorageLevel.MEMORY_AND_DISK)
+        bucketed = keep(bucketed)
         sizes = bucketed.groupBy("bucket").agg(F.count(F.lit(1)).alias("bsize"))
         if n_planes <= 16:
             # ≤2^n_planes observed buckets — one row each, broadcastable;
@@ -413,14 +413,13 @@ def lsh_multiprobe_topk(
     """
     planes = _hyperplanes(dim, n_planes, seed)
     sig = _signature(vec_col, planes)
-    corpus = (
+    corpus = keep(
         ensure_parallelism(emb)
         .select(
             F.col(id_col).alias("id_b"),
             *normed(vec_col, "eb", "nb"),
             sig.cast("int").alias("bucket"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     probes = emb.filter(F.col(id_col) < n_probe_ids).select(
         F.col(id_col).alias("probe_id"),
@@ -950,7 +949,7 @@ def kmeans_lloyd(
     # final full-frame assignment, and iteration plans do not share
     # subtrees — persist so it materializes once per job instead of
     # once per reference (the multi-reference-lineage seam)
-    subs = subs.persist(StorageLevel.MEMORY_AND_DISK)
+    subs = keep(subs)
 
     # Production path: train the quantizer on a deterministic id-prefix
     # SAMPLE (k-means needs ~1M vectors, not the corpus), then assign
@@ -1006,7 +1005,7 @@ def kmeans_lloyd(
         # (the plan test pins the partial-sum exchange shape there).
         cent = _update(_assign(cent, subs_train))
         if checkpoint_iters:
-            cent = cent.localCheckpoint(eager=False)
+            cent = checkpoint(cent, eager=False)
     return cent, _assign(cent).select("id", "m", "cid")
 
 
@@ -1328,8 +1327,8 @@ def mmr_from_candidates(
     swappable (exact tier, multiprobe LSH, IVF+SQ...), the k unrolled
     rounds and the n_cand² pairwise-sim frame are pool-bounded either
     way. Returns (probe_id, rank, id_b, simq)."""
-    cand = cand.persist(StorageLevel.MEMORY_AND_DISK)
-    cc = (
+    cand = keep(cand)
+    cc = keep(
         cand.alias("x")
         .join(cand.alias("y"), "probe_id")
         .filter(F.col("x.id_b") != F.col("y.id_b"))
@@ -1339,7 +1338,6 @@ def mmr_from_candidates(
             F.col("y.id_b").alias("cb"),
             cosine("x.eb", "y.eb").alias("sim_cc"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     sel = None
     remaining = cand.select("probe_id", "id_b", "simq")
@@ -1365,13 +1363,12 @@ def mmr_from_candidates(
         # remaining-pool anti-join, so without materialization the final
         # plan nests every earlier round's subtree exponentially. Each
         # pick is n_probes rows; k tiny jobs beat one exponential one.
-        pick = (
+        pick = checkpoint(
             _top_k(
                 scored, ["probe_id"], [F.desc("mmr"), F.col("id_b")], 1,
                 ["probe_id", "id_b", "simq"],
             )
             .withColumn("rank", F.lit(r))
-            .localCheckpoint(eager=True)
         )
         sel = pick if sel is None else sel.unionByName(pick)
         remaining = remaining.join(

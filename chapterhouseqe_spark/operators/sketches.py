@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from chapterhouseqe_spark.session import checkpoint
+
 
 def bloom_positions(key: Column, n_hashes: int, m_bits: int) -> Column:
     """Array of ``n_hashes`` bit positions for a key.
@@ -897,9 +899,9 @@ def source_similarity_minhash(
     # eager checkpoint is a tiny job (the minhash_lsh_pairs persist
     # discipline, hardened to a checkpoint per the r12 lazy-persist
     # race advisory).
-    sigs = minhash_group_signatures(
+    sigs = checkpoint(minhash_group_signatures(
         sh, "s", source_col, num_hashes, seed
-    ).localCheckpoint(eager=True)
+    ))
     a = sigs.select(
         F.col(source_col).alias("src_a"), F.col("sig").alias("sig_a")
     )

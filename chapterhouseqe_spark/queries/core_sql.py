@@ -18,7 +18,6 @@ from __future__ import annotations
 import hashlib
 import os
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -33,6 +32,7 @@ from chapterhouseqe_spark.queries.registry import (
     query,
     ts_str,
 )
+from chapterhouseqe_spark.session import keep
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -2222,14 +2222,13 @@ def tpch_q15_top_supplier(spark, sf_dir):
     # persist Spark plans two full fact scans (no ReusedExchange across
     # the broadcast boundary). The per-supplier frame is tiny next to
     # lineitem, so caching it halves the fact I/O at any scale.
-    rev = (
+    rev = keep(
         li.groupBy(F.col("l_suppkey").alias("supplier_no"))
         .agg(
             drevenue(F.col("l_extendedprice"), F.col("l_discount")).alias(
                 "total_revenue"
             )
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     mx = rev.agg(F.max("total_revenue").alias("mx"))
     s = t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
@@ -2274,11 +2273,10 @@ def tpch_q20_excess_supplier(spark, sf_dir):
     # per_ps feeds both the per-part rollup and the dominance join —
     # persist the (partkey, suppkey) frame so the part-pruned fact scan
     # and first aggregation run once, not twice.
-    per_ps = (
+    per_ps = keep(
         li.join(F.broadcast(p), li["l_partkey"] == p["p_partkey"])
         .groupBy("l_partkey", "l_suppkey")
         .agg(F.sum(F.col("l_quantity").cast("decimal(27,4)")).alias("q"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     per_p = per_ps.groupBy("l_partkey").agg(F.sum("q").alias("tq"))
     dominant = (
@@ -2477,12 +2475,11 @@ def tpch_q11_important_stock(spark, sf_dir):
     )
     # pv feeds both the global-total scalar subquery and the threshold
     # filter; persist the per-part frame so the fact scan + agg run once.
-    pv = (
+    pv = keep(
         t(spark, sf_dir, "lineitem")
         .join(F.broadcast(elig), F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy(F.col("l_partkey").alias("ps_partkey"))
         .agg(F.sum(F.col("l_extendedprice").cast("decimal(27,4)")).alias("value_dec"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     total = pv.agg((F.sum("value_dec").cast("double") * F.lit(0.001)).alias("thresh"))
     return (

@@ -42,6 +42,7 @@ from chapterhouseqe_spark.operators.sketches import (
 )
 from chapterhouseqe_spark.queries.core_sql import t
 from chapterhouseqe_spark.queries.registry import o_md5_int, query
+from chapterhouseqe_spark.session import checkpoint, keep
 from chapterhouseqe_spark.sources.multimodal import (
     attach_binary_payload,
     decode_features,
@@ -4877,9 +4878,7 @@ def dedup_minhash_error_audit(spark, sf_dir):
         .select("doc_id", toks.alias("w"))
         .select("doc_id", F.array_distinct(tri).alias("shingles"))
     )
-    from pyspark import StorageLevel
-
-    sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
+    sh = keep(sh)
     ex = sh.select("doc_id", F.explode("shingles").alias("s"))
     inter = (
         ex.alias("a")
@@ -4932,7 +4931,7 @@ def dedup_minhash_error_audit(spark, sf_dir):
     # shingle, and BOTH broadcast sides below would evaluate it
     # independently (broadcast exchanges don't share subtrees) —
     # checkpointing halves the md5 work. Per-doc 16 longs: tiny frame.
-    sigs = sh.select("doc_id", sig.alias("sig")).localCheckpoint(eager=True)
+    sigs = checkpoint(sh.select("doc_id", sig.alias("sig")))
     est = (
         pairs.join(
             F.broadcast(
@@ -6777,14 +6776,12 @@ def pipeline_filter_funnel(spark, sf_dir):
             F.max("c").cast("long").alias("maxc"),
         )
     )
-    from pyspark.storagelevel import StorageLevel
-
     # staged feeds BOTH the early-stage rollup and the dedup branch —
     # persist the narrow (doc, fp, stage) frame so the token-count
     # lineage runs once (unpersisted plan measured 2 scans / 11
     # exchanges; shared it is 1 scan / 6, two of them the single-row
     # report collapses).
-    staged = per_doc.select(
+    staged = keep(per_doc.select(
         "doc_id",
         "fp",
         F.when((F.col("wc") < 10) | (F.col("wc") > 5000), 1)
@@ -6792,7 +6789,7 @@ def pipeline_filter_funnel(spark, sf_dir):
         .when(F.lit(5) * F.col("maxc") >= F.col("wc"), 3)
         .otherwise(0)
         .alias("stage"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
     pass123 = staged.filter(F.col("stage") == 0).select("doc_id", "fp")
     firsts = pass123.groupBy("fp").agg(F.min("doc_id").alias("keeper"))
     final = pass123.join(firsts, "fp").select(
@@ -7401,13 +7398,11 @@ def pipeline_filter_funnel_contam(spark, sf_dir):
             F.max("c").cast("long").alias("maxc"),
         )
     )
-    from pyspark.storagelevel import StorageLevel
-
     # same sharing discipline as the base funnel: the narrow
     # (doc, fp, stage) frame feeds the early rollup AND the
     # contamination/dedup branches — persist so the token-count
     # lineage runs once.
-    staged = per_doc.select(
+    staged = keep(per_doc.select(
         "doc_id",
         "fp",
         F.when((F.col("wc") < 10) | (F.col("wc") > 5000), 1)
@@ -7415,7 +7410,7 @@ def pipeline_filter_funnel_contam(spark, sf_dir):
         .when(F.lit(5) * F.col("maxc") >= F.col("wc"), 3)
         .otherwise(0)
         .alias("stage"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
     pass123 = staged.filter(F.col("stage") == 0).select("doc_id", "fp")
     # contamination over the whole train split (one scan, broadcast
     # eval shingles); attribution to stage 4 happens on the pass123
@@ -7423,9 +7418,7 @@ def pipeline_filter_funnel_contam(spark, sf_dir):
     contam = contamination_overlap(
         train, ev, "text", "doc_id", k=3, min_overlap=3
     ).select("doc_id", F.lit(1).alias("is_contam"))
-    with4 = pass123.join(F.broadcast(contam), "doc_id", "left").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    with4 = keep(pass123.join(F.broadcast(contam), "doc_id", "left"))
     pass1234 = with4.filter(F.col("is_contam").isNull()).select(
         "doc_id", "fp"
     )

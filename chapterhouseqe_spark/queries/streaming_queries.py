@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from chapterhouseqe_spark.queries.registry import dsum, o_dsum, o_ts_str, query, ts_str
 from chapterhouseqe_spark.queries.core_sql import t
+from chapterhouseqe_spark.session import checkpoint, keep
 from chapterhouseqe_spark.streaming.windows import stream_state_partitions
 
 
@@ -1724,9 +1725,9 @@ def events_type_correlation(spark, sf_dir):
     )
     # ONE stream scan: bounds and the type list both derive from the
     # persisted (type, hour, count) collapse, not from re-reading events
-    counts = base.groupBy("event_type", "hidx").agg(
+    counts = keep(base.groupBy("event_type", "hidx").agg(
         F.count(F.lit(1)).alias("c")
-    ).persist()
+    ))
     bounds = counts.agg(F.min("hidx").alias("lo"), F.max("hidx").alias("hi"))
     types = counts.select("event_type").distinct()
     hours = bounds.select(F.explode(F.sequence("lo", "hi")).alias("hidx"))
@@ -2022,11 +2023,10 @@ def stream_decontaminate_ingest(spark, sf_dir):
     # narrow probe pass; re-deriving the eval side per batch cost
     # ~1.4s/batch of pure re-computation in the first cut (25-batch
     # sf1 run: 36.2s -> see PLANS.md for the post-pin number).
-    ev = (
+    ev = checkpoint(
         docs.filter(F.col("doc_id") < 40)
         .select(F.explode(word_shingles(F.col("text"), 8)).alias("s"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     tmp = tempfile.mkdtemp(prefix="chqe_stream_decontam_")
     out_dir = f"{tmp}/quarantine"
@@ -2087,11 +2087,10 @@ def stream_decontaminate_ingest(spark, sf_dir):
         # availableNow + finished => every input file's batch committed.
         # Materialize before the tmp cleanup (the returned frame must
         # not read a deleted sink); flagged sets are tiny by design.
-        return (
+        return checkpoint(
             spark.read.schema(sink_schema)
             .parquet(out_dir)
             .select("doc_id", "n_overlap")
-            .localCheckpoint(eager=True)
         )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

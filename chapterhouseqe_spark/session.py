@@ -6,13 +6,30 @@ re-planning, skew-join splitting, partition coalescing), broadcast-join
 threshold generous enough for dimension tables, Arrow enabled for the
 Python boundary, UTC session timezone so timestamp semantics match
 engines that store UTC-naive (the DuckDB oracle, Parquet footers).
+
+Ownership: operators persist intermediates only through :func:`keep`
+and local-checkpoint them only through :func:`checkpoint`; both record
+the frame in the innermost :func:`released` scope, and the scope
+releases what was recorded in it when it exits. So a query releases
+exactly what it persisted and never the rest of the session's cache.
+Scopes are context-local, so each ``QueryEngine`` worker thread owns
+its own. Outside any scope the two calls only persist or checkpoint,
+and nothing releases the frame. Two queries that persist the same plan
+share one cache entry, and the first scope to close releases it:
+results stay correct, but the other query may recompute the frame. A
+local checkpoint's blocks are its only copy, so no frame read from one
+may be used after its scope closes.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from contextlib import contextmanager
+from contextvars import ContextVar
 
-from pyspark.sql import SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CONFS: dict[str, str] = {
     # --- optimizer / adaptive execution -------------------------------
@@ -95,3 +112,50 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# the open scopes, innermost last; each holds the release calls of
+# what was kept in it
+_SCOPES: ContextVar[tuple[list[Callable[[], object]], ...]] = ContextVar(
+    "chqe_persist_scopes", default=()
+)
+
+
+def _own(release: Callable[[], object]) -> None:
+    scopes = _SCOPES.get()
+    if scopes:
+        scopes[-1].append(release)
+
+
+def keep(
+    df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK
+) -> DataFrame:
+    """Persist ``df`` and record it in the current :func:`released` scope."""
+    df.persist(level)
+    _own(df.unpersist)
+    return df
+
+
+def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``df.localCheckpoint(eager)``, with the checkpoint's blocks
+    recorded in the current :func:`released` scope."""
+    out = df.localCheckpoint(eager=eager)
+    rdd = out._jdf.queryExecution().analyzed().rdd()
+    _own(lambda: rdd.unpersist(False))
+    return out
+
+
+@contextmanager
+def released():
+    """Open a scope that releases everything kept in it on exit, normal
+    or by exception. Frames go last kept first: a frame is dropped
+    before the frames its plan reads, so Spark has no dependent cache
+    entry to re-plan."""
+    releases: list[Callable[[], object]] = []
+    token = _SCOPES.set(_SCOPES.get() + (releases,))
+    try:
+        yield
+    finally:
+        _SCOPES.reset(token)
+        for release in reversed(releases):
+            release()

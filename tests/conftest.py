@@ -6,7 +6,7 @@ import os
 
 import pytest
 
-from chapterhouseqe_spark.session import get_spark
+from chapterhouseqe_spark.session import get_spark, released
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -16,24 +16,19 @@ def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     # 6g, matching bench.py's rationale: the suite replays all 277
     # registered queries (plus the operator tests) through ONE shared
-    # JVM, and persisted operator intermediates + broadcast payloads
-    # awaiting ContextCleaner pile up; at 4g the round-12 suite died
-    # with UNABLE_TO_ACQUIRE_MEMORY ~440 tests in (execution memory
-    # starved by accumulated storage). Relief between heavy modules
-    # (see _relieve below) is the first line; headroom is the second.
+    # JVM. At 4g the round-12 suite died with UNABLE_TO_ACQUIRE_MEMORY
+    # ~440 tests in, when persisted operator intermediates piled up
+    # across tests. The per-test scope below now releases them; whether
+    # the suite fits a smaller heap again is unmeasured.
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
     return get_spark("chqe-tests", shuffle_partitions=8)
 
 
-def _relieve(spark) -> None:
-    """Drop inter-test residue (bench.py's pattern): clear cached
-    operator intermediates, then collect Python wrappers so the JVM
-    ContextCleaner can actually reclaim broadcasts."""
-    import gc
-
-    spark.catalog.clearCache()
-    gc.collect()
-    spark.sparkContext._jvm.System.gc()
+@pytest.fixture(autouse=True)
+def _released_per_test():
+    """Release what each test's queries persisted when the test ends."""
+    with released():
+        yield
 
 
 @pytest.fixture(scope="session")

@@ -146,3 +146,32 @@ def test_exact_dot_stays_in_similarity():
         and re.search(r"\bexact_dot\b", src)
     ]
     assert not bad, f"exact_dot used outside operators/similarity.py: {bad}"
+
+
+_PERSIST = re.compile(r"\.persist\(|\.cache\(\)|\.localCheckpoint\(")
+# spelled so that a plain grep for either name does not find this file
+_CACHE_RELIEF = re.compile(r"clear[C]ache|System[.]gc")
+
+
+def test_persist_goes_through_keep():
+    """Persisted intermediates have one owner: ``session.keep`` and
+    ``session.checkpoint`` record each in the query's ``released``
+    scope, which releases it when the query ends. No other module
+    persists or local-checkpoints, and no harness drops the whole
+    session's cache or forces a JVM GC in its place."""
+    bad = [
+        rel for rel, src in _sources()
+        if rel != "session.py" and _PERSIST.search(src)
+    ]
+    assert not bad, f"persist/cache/localCheckpoint outside session.py: {bad}"
+    repo = os.path.dirname(PKG)
+    paths = [os.path.join(repo, "bench.py")]
+    for sub in ("tests", "tools"):
+        for root, _, files in os.walk(os.path.join(repo, sub)):
+            paths += [os.path.join(root, f) for f in files if f.endswith(".py")]
+    relief = []
+    for path in paths:
+        with open(path, encoding="utf-8") as fh:
+            if _CACHE_RELIEF.search(fh.read()):
+                relief.append(os.path.relpath(path, repo))
+    assert not relief, f"whole-session cache relief in: {relief}"

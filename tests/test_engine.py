@@ -391,13 +391,48 @@ def test_failed_query_releases_persisted_frame(engine, spark):
     before = persisted()
     for sql in (
         "select raise_error('boom') as x from range(10)",  # counts job fails
-        "select 1 as `a.b`, 2 as a",  # fails after the counts job
+        "select 1 as a, 2 as a",  # fails after the counts job
         "select make_interval(0, 0, 0, 1) as i from range(3)",  # write fails
     ):
         qid = engine.run_query_sync(sql)
         assert engine.status(qid) is QueryStatus.ERROR
         assert engine.error(qid)
     assert persisted() <= before
+
+
+@pytest.mark.parametrize(
+    "sql, row",
+    [
+        ("select 1 as `a.b`, 2 as a", (1, 2)),
+        ("select 1 as `a.b`, 2 as a, 3 as `c``d`", (1, 2, 3)),
+    ],
+)
+def test_dotted_column_names_complete(engine, sql, row):
+    """Row ids re-select the result's columns by quoted name, so a dot
+    or a backtick in a name is not parsed as SQL."""
+    qid = engine.run_query_sync(sql)
+    assert engine.status(qid) is QueryStatus.COMPLETE, engine.error(qid)
+    assert [tuple(r.values()) for r in engine.fetch(qid)] == [row]
+
+
+@pytest.mark.parametrize(
+    "sql, column",
+    [
+        ("select interval '1' year as ym", "'ym'"),
+        (
+            "select 1 as k, array(named_struct('d', interval '2' month)) as s",
+            "'s.element.d'",
+        ),
+    ],
+)
+def test_year_month_interval_results_are_rejected(engine, sql, column):
+    """No page can return a year-month interval (no Arrow conversion,
+    no ``fromInternal``); the query fails and names the column instead
+    of completing with a result every fetch of which raises."""
+    qid = engine.run_query_sync(sql)
+    assert engine.status(qid) is QueryStatus.ERROR
+    assert column in engine.error(qid)
+    assert "year-month interval" in engine.error(qid)
 
 
 def test_row_groups_without_statistics_are_read_for_every_page(tmp_path):

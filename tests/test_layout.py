@@ -46,6 +46,24 @@ def test_unclustered_write_overlaps_by_contrast(spark, sf_dir, tmp_path):
     assert overlaps > 0, "random layout unexpectedly produced disjoint files"
 
 
+def test_key_ranges_after_a_nested_column(tmp_path):
+    """Parquet numbers column chunks by leaf; a struct before the key
+    must not shift the chunk whose statistics are read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = pa.table({
+        "s": pa.array(
+            [{"x": 10, "y": 200}, {"x": 20, "y": 400}],
+            pa.struct([("x", pa.int64()), ("y", pa.int64())]),
+        ),
+        "k": pa.array([1, 2], pa.int64()),
+    })
+    pq.write_table(table, tmp_path / "a.parquet")
+    assert file_key_ranges(str(tmp_path), "k") == [("a.parquet", 1, 2)]
+    assert file_key_ranges(str(tmp_path), "s.y") == [("a.parquet", 200, 400)]
+
+
 def test_zorder_write_skippable_on_both_dims(spark, tmp_path):
     from chapterhouseqe_spark.operators.layout import (
         cluster_write,

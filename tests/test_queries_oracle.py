@@ -81,13 +81,6 @@ def test_family_matches_oracle(spark, sf_dir, duck, family):
         )
         if problems:
             failures.append((name, problems[:3]))
-    # Relieve the shared session after each family: the replay
-    # persists operator intermediates (LSH shingles, IVF codebooks,
-    # funnel stage frames...) that accumulate across 277 queries and
-    # starved execution memory ~440 tests into the round-12 suite.
-    from conftest import _relieve
-
-    _relieve(spark)
     assert not failures, f"oracle mismatches: {failures}"
 
 

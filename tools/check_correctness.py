@@ -114,7 +114,7 @@ def main() -> int:
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from chapterhouseqe_spark.queries.registry import get_oracles, get_queries
-    from chapterhouseqe_spark.session import get_spark
+    from chapterhouseqe_spark.session import get_spark, released
 
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     spark = get_spark("check-correctness", shuffle_partitions=8)
@@ -134,45 +134,36 @@ def main() -> int:
         names = args.names or sorted(queries)
     n_pass = n_fail = n_skip = 0
     for name in names:
-        # Inter-query cache relief (the bench._relieve discipline):
-        # operator-persisted frames accumulate across a multi-query
-        # session — a 21-query sf1 sweep OOM'd a 4g heap on a query
-        # that passes in isolation at the same heap. clearCache drops
-        # the persisted intermediates; the GC pair lets the
-        # ContextCleaner reclaim py4j-held broadcasts.
-        import gc
-
-        spark.catalog.clearCache()
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
         if name not in queries:
             print(f"?? {name}: not registered")
             n_fail += 1
             continue
-        if name not in oracles:
+        # each query's scope releases the frames its operators persisted
+        with released():
+            if name not in oracles:
+                try:
+                    cnt = queries[name](spark, args.sf).count()
+                    print(f"-- {name}: no oracle (rows-only): {cnt} rows")
+                    n_skip += 1
+                except Exception as exc:  # noqa: BLE001
+                    print(f"!! {name}: BUILD ERROR {type(exc).__name__}: {exc}")
+                    n_fail += 1
+                continue
             try:
-                cnt = queries[name](spark, args.sf).count()
-                print(f"-- {name}: no oracle (rows-only): {cnt} rows")
-                n_skip += 1
+                df = queries[name](spark, args.sf)
+                problems, nrows, secs = compare(name, df, oracles[name], con)
             except Exception as exc:  # noqa: BLE001
-                print(f"!! {name}: BUILD ERROR {type(exc).__name__}: {exc}")
+                print(f"!! {name}: ERROR {type(exc).__name__}: {str(exc).splitlines()[0][:200]}")
                 n_fail += 1
-            continue
-        try:
-            df = queries[name](spark, args.sf)
-            problems, nrows, secs = compare(name, df, oracles[name], con)
-        except Exception as exc:  # noqa: BLE001
-            print(f"!! {name}: ERROR {type(exc).__name__}: {str(exc).splitlines()[0][:200]}")
-            n_fail += 1
-            continue
-        if problems:
-            print(f"!! {name}: MISMATCH ({nrows} rows, {secs:.1f}s)")
-            for p in problems:
-                print(f"     {p}")
-            n_fail += 1
-        else:
-            print(f"ok {name}: {nrows} rows ({secs:.1f}s)")
-            n_pass += 1
+                continue
+            if problems:
+                print(f"!! {name}: MISMATCH ({nrows} rows, {secs:.1f}s)")
+                for p in problems:
+                    print(f"     {p}")
+                n_fail += 1
+            else:
+                print(f"ok {name}: {nrows} rows ({secs:.1f}s)")
+                n_pass += 1
     print(f"\n{n_pass} pass, {n_fail} fail, {n_skip} rows-only")
     return 1 if n_fail else 0
 

@@ -40,7 +40,7 @@ def main() -> None:
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
 
     from chapterhouseqe_spark.queries.registry import get_queries
-    from chapterhouseqe_spark.session import get_spark
+    from chapterhouseqe_spark.session import get_spark, released
 
     spark = get_spark(
         "chqe-jobprofile",
@@ -74,11 +74,11 @@ def main() -> None:
         times = []
         for r in range(args.reps):
             spark.sparkContext.setJobDescription(f"Q:{name}:rep{r}")
-            t0 = time.time()
-            df = build(spark, args.sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            times.append(round(time.time() - t0, 3))
-            spark.catalog.clearCache()
+            with released():
+                t0 = time.time()
+                df = build(spark, args.sf_dir)
+                df.write.format("noop").mode("overwrite").save()
+                times.append(round(time.time() - t0, 3))
         marks[name] = times
         print(f"{name}: reps={times}", flush=True)
     app_id = spark.sparkContext.applicationId

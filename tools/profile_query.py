@@ -36,7 +36,7 @@ def main() -> None:
     args = ap.parse_args()
 
     from chapterhouseqe_spark.queries.registry import get_queries
-    from chapterhouseqe_spark.session import get_spark
+    from chapterhouseqe_spark.session import get_spark, released
 
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
     spark = get_spark("chqe-profile")
@@ -63,24 +63,22 @@ def main() -> None:
         times = []
         for r in range(args.reps):
             spark.sparkContext.setJobDescription(f"{name} rep{r}")
-            t0 = time.time()
-            df = build(spark, args.sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            times.append(round(time.time() - t0, 3))
-            spark.catalog.clearCache()
+            with released():
+                t0 = time.time()
+                df = build(spark, args.sf_dir)
+                df.write.format("noop").mode("overwrite").save()
+                times.append(round(time.time() - t0, 3))
         spark.sparkContext.setJobDescription(None)
         print(f"{name}: reps={times} min={min(times)}", flush=True)
         if args.plan_out:
             os.makedirs(args.plan_out, exist_ok=True)
-            df = build(spark, args.sf_dir)
             buf = io.StringIO()
-            with redirect_stdout(buf):
-                df.explain("formatted")
+            with released(), redirect_stdout(buf):
+                build(spark, args.sf_dir).explain("formatted")
             with open(
                 os.path.join(args.plan_out, f"{name}_{args.tag}.txt"), "w"
             ) as fh:
                 fh.write(buf.getvalue())
-            spark.catalog.clearCache()
 
 
 if __name__ == "__main__":
