@@ -294,16 +294,11 @@ def run_single(tiers: set[str]) -> dict:
     # synthetic source warms all three; the real streaming queries
     # then run at their steady-state cost.
     if tiers & {"extended", "core"}:
-        import shutil
-        import uuid
-
         from chapterhouseqe_spark.sources.synthetic import (
             register_synthetic_source,
         )
         from chapterhouseqe_spark.streaming.recurrence import streaming_ewma
-        from chapterhouseqe_spark.streaming.windows import (
-            stream_state_partitions,
-        )
+        from chapterhouseqe_spark.streaming.windows import run_stream
         from pyspark.sql import functions as F
 
         register_synthetic_source(spark)
@@ -319,28 +314,8 @@ def run_single(tiers: set[str]) -> dict:
                 "value",
             )
         )
-        _wname = f"warm_stream_{uuid.uuid4().hex[:8]}"
-        _wckpt = tempfile.mkdtemp(prefix="chqe_warm_ckpt_")
-        with stream_state_partitions(spark, 2):
-            _wq = (
-                streaming_ewma(_wstream, alpha=0.25)
-                .writeStream.format("memory")
-                .queryName(_wname)
-                .option("checkpointLocation", _wckpt)
-                .trigger(processingTime="0 seconds")
-                .start()
-            )
-            try:
-                _deadline = time.time() + 60
-                while (
-                    time.time() < _deadline
-                    and spark.table(_wname).count() < 5
-                ):
-                    time.sleep(0.1)
-            finally:
-                _wq.stop()
-                shutil.rmtree(_wckpt, ignore_errors=True)
-        spark.catalog.dropTempView(_wname)
+        with released():
+            run_stream(streaming_ewma(_wstream, alpha=0.25), "warm_stream")
 
     def run_tier(names) -> dict[str, float]:
         # One shared local JVM times 200+ queries back-to-back; each

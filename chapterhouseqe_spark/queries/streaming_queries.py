@@ -6,7 +6,8 @@ query here is the *batch-equivalent* of a Structured Streaming pipeline in
 :mod:`chapterhouseqe_spark.streaming` — identical transformations, so the
 DuckDB oracle validates the streaming logic's semantics while the
 streaming tests (tests/test_streaming.py) validate the incremental
-execution path (watermarks, availableNow triggers).
+execution path (watermarks, real micro-batches). The ``stream_*`` queries
+run their streams through :func:`~chapterhouseqe_spark.streaming.windows.run_stream`.
 """
 
 from __future__ import annotations
@@ -16,7 +17,7 @@ from pyspark.sql import functions as F
 from chapterhouseqe_spark.queries.registry import dsum, o_dsum, o_ts_str, query, ts_str
 from chapterhouseqe_spark.queries.core_sql import t
 from chapterhouseqe_spark.session import checkpoint, keep
-from chapterhouseqe_spark.streaming.windows import stream_state_partitions
+from chapterhouseqe_spark.streaming.windows import run_stream
 
 
 @query(
@@ -206,11 +207,6 @@ def events_click_to_purchase(spark, sf_dir):
     "(readBetweenOffsets) is pinned by tests/test_table_functions.py",
 )
 def stream_source_replay_agg(spark, sf_dir):
-    import shutil
-    import tempfile
-    import time
-    import uuid
-
     from chapterhouseqe_spark.sources.synthetic import register_synthetic_source
 
     register_synthetic_source(spark)
@@ -220,48 +216,17 @@ def stream_source_replay_agg(spark, sf_dir):
         .option("max_rows", 120)
         .load()
     )
-    # availableNow stops after the first prefetched batch on a
-    # SimpleDataSourceStreamReader (the source generates data on demand,
-    # so "available" is one batch) — run real micro-batches and stop at
-    # the source's declared end instead. Fresh queryName/checkpoint per
-    # call keeps the build idempotent; the data is deterministic, so
-    # every run materializes identical rows.
-    name = f"stream_replay_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="chqe_stream_ckpt_")
-    # 5 label keys: state partitions sized to key cardinality, not the
-    # session's batch-shuffle width (stream_state_partitions docstring).
-    with stream_state_partitions(spark, 8):
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        try:
-            deadline = time.time() + 120
-            while time.time() < deadline:
-                if spark.table(name).count() >= 120:
-                    break
-                time.sleep(0.25)
-        finally:
-            q.stop()
-            shutil.rmtree(ckpt, ignore_errors=True)
-    got = spark.table(name).count()
+    sink = run_stream(stream, "stream_replay")
+    got = sink.count()
     if got < 120:
-        # A stalled stream must fail loudly, not return a partial
+        # A short stream must fail loudly, not return a partial
         # aggregate that the oracle would grade as a wrong answer.
         raise RuntimeError(
-            f"stream_source_replay_agg: stream produced {got}/120 rows "
-            "before the 120s deadline — infra stall, not a query bug"
+            f"stream_source_replay_agg: stream produced {got}/120 rows"
         )
-    return (
-        spark.table(name)
-        .groupBy("label")
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            dsum(F.col("value")).alias("total_value"),
-        )
+    return sink.groupBy("label").agg(
+        F.count(F.lit(1)).alias("cnt"),
+        dsum(F.col("value")).alias("total_value"),
     )
 
 
@@ -302,11 +267,6 @@ def stream_source_replay_agg(spark, sf_dir):
     "tests/test_streaming.py pins stream==batch cross-batch equality",
 )
 def stream_ewma_replay(spark, sf_dir):
-    import shutil
-    import tempfile
-    import time
-    import uuid
-
     from chapterhouseqe_spark.sources.synthetic import register_synthetic_source
     from chapterhouseqe_spark.streaming.recurrence import streaming_ewma
 
@@ -323,39 +283,13 @@ def stream_ewma_replay(spark, sf_dir):
             "value",
         )
     )
-    folded = streaming_ewma(stream, alpha=0.25)
-    name = f"stream_ewma_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="chqe_ewma_ckpt_")
-    # 5 event-type keys: state partitions sized to key cardinality
-    # (stream_state_partitions docstring) — 32 inherited partitions
-    # meant 32 state-store commits + 32 pandas workers per micro-batch
-    # for 30 rows.
-    with stream_state_partitions(spark, 8):
-        q = (
-            folded.writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        try:
-            deadline = time.time() + 120
-            while time.time() < deadline:
-                if spark.table(name).count() >= 120:
-                    break
-                time.sleep(0.25)
-        finally:
-            q.stop()
-            shutil.rmtree(ckpt, ignore_errors=True)
-    got = spark.table(name).count()
+    sink = run_stream(streaming_ewma(stream, alpha=0.25), "stream_ewma")
+    got = sink.count()
     if got < 120:
-        # A stalled stream must fail loudly, not return partial rows
-        # the oracle would grade as a wrong answer.
-        raise RuntimeError(
-            f"stream_ewma_replay: stream produced {got}/120 rows "
-            "before the 120s deadline — infra stall, not a query bug"
-        )
-    return spark.table(name).select(
+        # A short stream must fail loudly, not return partial rows the
+        # oracle would grade as a wrong answer.
+        raise RuntimeError(f"stream_ewma_replay: stream produced {got}/120 rows")
+    return sink.select(
         "event_type",
         F.col("event_id").cast("bigint").alias("event_id"),
         "value",
@@ -430,7 +364,6 @@ def events_cohort_retention(spark, sf_dir):
 def stream_dedup_watermark(spark, sf_dir):
     import shutil
     import tempfile
-    import uuid
 
     ev = t(spark, sf_dir, "events")
     n_expected = ev.count()
@@ -455,45 +388,19 @@ def stream_dedup_watermark(spark, sf_dir):
             # every duplicate is within the window and nothing is late.
             .dropDuplicatesWithinWatermark(["event_id"])
         )
-        name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-        # dedup state is per event_id (high cardinality), but each
-        # micro-batch moves only this demo corpus's rows — 8 stores
-        # hold ~12k state rows each at sf0.1; at production volume
-        # leave the session width (stream_state_partitions docstring).
-        with stream_state_partitions(spark, 8):
-            q = (
-                deduped.writeStream.format("memory")
-                .queryName(name)
-                .option("checkpointLocation", f"{tmp}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            finished = q.awaitTermination(300)
-            if not finished:
-                # stop BEFORE the finally block deletes the
-                # source/checkpoint out from under a live query (which
-                # would spew background failures into the shared session)
-                q.stop()
-                raise RuntimeError(
-                    "stream_dedup_watermark: availableNow run did not "
-                    "finish within 300s — infra stall, not a query bug"
-                )
-        got = spark.table(name).count()
-        if got != n_expected:
-            raise RuntimeError(
-                f"stream_dedup_watermark: sink has {got} rows, expected "
-                f"{n_expected} — duplicates leaked or rows over-dropped"
-            )
-        return (
-            spark.table(name)
-            .groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("cnt"),
-                dsum(F.col("value")).alias("sum_value"),
-            )
-        )
+        sink = run_stream(deduped, "stream_dedup")
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+    got = sink.count()
+    if got != n_expected:
+        raise RuntimeError(
+            f"stream_dedup_watermark: sink has {got} rows, expected "
+            f"{n_expected} — duplicates leaked or rows over-dropped"
+        )
+    return sink.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("cnt"),
+        dsum(F.col("value")).alias("sum_value"),
+    )
 
 
 @query(
@@ -905,7 +812,6 @@ def events_dau_stickiness(spark, sf_dir):
 def stream_interval_join(spark, sf_dir):
     import shutil
     import tempfile
-    import uuid
 
     from chapterhouseqe_spark.queries.core_sql import t
 
@@ -940,38 +846,15 @@ def stream_interval_join(spark, sf_dir):
             & (F.col("pts") >= F.col("cts"))
             & (F.col("pts") <= F.col("cts") + F.expr("INTERVAL 1 HOUR")),
         )
-        name = f"stream_ij_{uuid.uuid4().hex[:8]}"
-        # join state is per user_id, but micro-batch volume here is the
-        # demo corpus — 8 stores over ~10k users at sf0.1; at
-        # production volume leave the session width
-        # (stream_state_partitions docstring).
-        with stream_state_partitions(spark, 8):
-            q = (
-                joined.writeStream.format("memory")
-                .queryName(name)
-                .option("checkpointLocation", f"{tmp}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            finished = q.awaitTermination(300)
-            if not finished:
-                q.stop()
-                raise RuntimeError(
-                    "stream_interval_join: availableNow run did not "
-                    "finish within 300s — infra stall, not a query bug"
-                )
-        return (
-            spark.table(name)
-            .groupBy("user_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_pairs"),
-                F.sum(F.col("value").cast("decimal(27,4)"))
-                .cast("double")
-                .alias("attributed_value"),
-            )
-        )
+        sink = run_stream(joined, "stream_ij")
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+    return sink.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n_pairs"),
+        F.sum(F.col("value").cast("decimal(27,4)"))
+        .cast("double")
+        .alias("attributed_value"),
+    )
 
 
 @query(
@@ -1934,10 +1817,6 @@ def _stream_quality_oracle() -> str:
     "batch cost per micro-batch",
 )
 def stream_quality_filter_agg(spark, sf_dir):
-    import shutil
-    import tempfile
-    import uuid
-
     from chapterhouseqe_spark.operators.corpus import hashed_linear_score
 
     docs = t(spark, sf_dir, "documents")
@@ -1945,39 +1824,20 @@ def stream_quality_filter_agg(spark, sf_dir):
     # r12 verdict item 8: the per-RUN corpus copy dominated the scale
     # probe (6.2x growth at 10x was shutil + a single-file write, not
     # the scoring stage). Stage the stream source ONCE per session per
-    # corpus, split into ~2k-row files so the availableNow micro-batches
-    # get multi-file parallelism; only the checkpoint dir is per-run.
+    # corpus, split into ~2k-row files so the micro-batches get
+    # multi-file parallelism; only the checkpoint dir is per-run.
     data_dir = _stage_stream_source(spark, docs, f"{sf_dir}:{n_expected}")
-    tmp = tempfile.mkdtemp(prefix="chqe_stream_quality_")
-    try:
-        stream = spark.readStream.schema(docs.schema).parquet(data_dir)
-        scored = hashed_linear_score(stream, dim=64, seed=7)
-        name = f"stream_quality_{uuid.uuid4().hex[:8]}"
-        q = (
-            scored.writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+    stream = spark.readStream.schema(docs.schema).parquet(data_dir)
+    sink = run_stream(hashed_linear_score(stream, dim=64, seed=7), "stream_quality")
+    got = sink.count()
+    if got < n_expected:
+        raise RuntimeError(
+            f"stream_quality_filter_agg: stream produced {got}/{n_expected} rows"
         )
-        finished = q.awaitTermination(300)
-        got = spark.table(name).count()
-        if not finished or got < n_expected:
-            q.stop()
-            raise RuntimeError(
-                f"stream_quality_filter_agg: stream produced "
-                f"{got}/{n_expected} rows — infra stall, not a query bug"
-            )
-        return (
-            spark.table(name)
-            .groupBy("is_quality")
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                dsum(F.col("score")).alias("sum_score"),
-            )
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    return sink.groupBy("is_quality").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        dsum(F.col("score")).alias("sum_score"),
+    )
 
 
 def _stream_decontam_oracle() -> str:
@@ -2007,7 +1867,6 @@ def _stream_decontam_oracle() -> str:
     "cost linear in batch rows, quarantine appends only flagged docs",
 )
 def stream_decontaminate_ingest(spark, sf_dir):
-    import os
     import shutil
     import tempfile
 
@@ -2028,9 +1887,7 @@ def stream_decontaminate_ingest(spark, sf_dir):
         .select(F.explode(word_shingles(F.col("text"), 8)).alias("s"))
         .distinct()
     )
-    tmp = tempfile.mkdtemp(prefix="chqe_stream_decontam_")
-    out_dir = f"{tmp}/quarantine"
-    os.makedirs(out_dir)
+    out_dir = tempfile.mkdtemp(prefix="chqe_stream_decontam_")
     sink_schema = "doc_id bigint, n_overlap bigint, _batch_id bigint"
 
     def _screen(batch, batch_id):
@@ -2057,40 +1914,25 @@ def stream_decontaminate_ingest(spark, sf_dir):
         # really run MULTIPLE micro-batches (sf0.1: 2, sf1: 13), so the
         # batch-local-aggregation and per-batch-partition idempotence
         # claims are exercised, not vacuously true on one all-files
-        # batch (availableNow's default chunking). Production ingest
-        # would batch by arrival; the per-batch cost here is the same
-        # screen at whatever the batch size is. The shuffle-width pin
-        # covers the foreachBatch groupBy: a ~4k-doc batch on 32
-        # shuffle tasks is pure scheduling overhead (instrumented
-        # ~0.85s/batch fixed cost at width 32); 8 matches the batch
-        # size. Same single-threaded-session contract as the stateful
-        # streams that use this helper.
+        # batch. Production ingest would batch by arrival; the per-batch
+        # cost here is the same screen at whatever the batch size is.
+        # The runner's shuffle-width pin also covers the foreachBatch
+        # groupBy: a ~4k-doc batch on 32 shuffle tasks is pure
+        # scheduling overhead (instrumented ~0.85s/batch fixed cost at
+        # width 32); 8 matches the batch size.
         stream = (
             spark.readStream.schema(docs.schema)
             .option("maxFilesPerTrigger", 2)
             .parquet(data_dir)
         )
-        with stream_state_partitions(spark, 8):
-            q = (
-                stream.writeStream.foreachBatch(_screen)
-                .option("checkpointLocation", f"{tmp}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            finished = q.awaitTermination(300)
-        if not finished:
-            q.stop()
-            raise RuntimeError(
-                "stream_decontaminate_ingest: stream did not finish in "
-                "300s — infra stall, not a query bug"
-            )
-        # availableNow + finished => every input file's batch committed.
-        # Materialize before the tmp cleanup (the returned frame must
-        # not read a deleted sink); flagged sets are tiny by design.
+        run_stream(stream, "stream_decontaminate", sink=_screen)
+        # drained => every input file's batch committed. Materialize
+        # before the cleanup (the returned frame must not read a
+        # deleted sink); flagged sets are tiny by design.
         return checkpoint(
             spark.read.schema(sink_schema)
             .parquet(out_dir)
             .select("doc_id", "n_overlap")
         )
     finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        shutil.rmtree(out_dir, ignore_errors=True)

@@ -12,6 +12,8 @@ and local-checkpoint them only through :func:`checkpoint`; both record
 the frame in the innermost :func:`released` scope, and the scope
 releases what was recorded in it when it exits. So a query releases
 exactly what it persisted and never the rest of the session's cache.
+The stream runner (``run_stream`` in ``streaming/windows.py``) records
+the drop of its memory-sink view the same way.
 Scopes are context-local, so each ``QueryEngine`` worker thread owns
 its own. Outside any scope the two calls only persist or checkpoint,
 and nothing releases the frame. Two queries that persist the same plan

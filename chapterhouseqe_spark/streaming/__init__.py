@@ -16,7 +16,7 @@ from chapterhouseqe_spark.streaming.sessions import (
 )
 from chapterhouseqe_spark.streaming.windows import (
     read_events_stream,
-    run_stream_to_memory,
+    run_stream,
     stream_dedup,
     stream_state_partitions,
     stream_user_rollup,
@@ -25,7 +25,7 @@ from chapterhouseqe_spark.streaming.windows import (
 
 __all__ = [
     "read_events_stream",
-    "run_stream_to_memory",
+    "run_stream",
     "sessionize",
     "stateful_user_stats",
     "stream_dedup",

@@ -1,11 +1,16 @@
-"""Watermarked window aggregations over the events stream.
+"""Watermarked window aggregations over the events stream, and the one
+runner every stream in the package goes through.
 
-These are the streaming twins of the batch queries in
-``queries/streaming_queries.py`` — same transformations, incremental
-execution. The batch versions carry the DuckDB oracles; the tests run
-these with ``Trigger.AvailableNow`` and assert the streaming results
-equal the batch results (exactly-once, no late drops when the watermark
-covers the data).
+The window and rollup builders are the streaming twins of the batch
+queries in ``queries/streaming_queries.py`` — same transformations,
+incremental execution. The batch versions carry the DuckDB oracles; the
+tests run these through :func:`run_stream` and assert the streaming
+results equal the batch results (exactly-once, no late drops when the
+watermark covers the data).
+
+:func:`run_stream` starts a stream, waits until its input is drained,
+stops it and cleans up after it; no other module calls
+``.writeStream`` (``tests/test_antipatterns.py`` enforces it).
 
 100 TB notes: a file-source stream with ``maxFilesPerTrigger`` gives
 bounded micro-batches; state for windowed aggs is bounded by the
@@ -17,41 +22,54 @@ not apply inside streaming aggregations.
 
 from __future__ import annotations
 
+import shutil
+import tempfile
+import time
+import uuid
+from collections.abc import Callable
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from chapterhouseqe_spark.queries.registry import dsum, ts_str
+from chapterhouseqe_spark.session import _own
+
+# the one bound on a stream's run; a stream still running when it
+# passes is stopped and reported as an infra stall
+STREAM_TIMEOUT_S = 300
+# shuffle partitions (state stores) every stream runs with
+STREAM_STATE_PARTITIONS = 8
+_POLL_S = 0.1
 
 
 @contextmanager
 def stream_state_partitions(spark: SparkSession, n: int):
     """Pin ``spark.sql.shuffle.partitions`` for a stream's lifetime.
 
+    :func:`run_stream` holds this pin from ``.start()`` until the query
+    has stopped, with ``n = STREAM_STATE_PARTITIONS``: the value is read
+    when the FIRST BATCH plans, and it is frozen into the checkpoint.
+
     A stateful streaming query instantiates one state store (and, for
     ``applyInPandasWithState``, one Python worker) PER shuffle partition
-    PER micro-batch, and the partition count is frozen into the
-    checkpoint at first batch — AQE never coalesces it (see the module
+    PER micro-batch, and AQE never coalesces it (see the module
     docstring). So the right number is keyed to the stream's KEY
     CARDINALITY, not the session's batch-shuffle width: a 5-key demo
     stream inheriting the session's 32 pays 32 store commits + 32
     pandas workers per micro-batch to move ~30 rows (measured 13.4s ->
     ~4s for the EWMA replay at sf0.1). At production cardinality size
-    ``n`` up or don't use this at all. Restores the previous value on
-    exit; the conf must stay pinned through the poll/stop, not just
-    ``.start()``, because the value is read when the FIRST BATCH plans.
+    ``n`` up. Restores the previous value on exit.
 
-    SINGLE-THREADED-SESSION ASSUMPTION (r12 ADVICE item 3): the pin
-    mutates the SESSION-global conf for the whole start/poll/stop
-    window, so any concurrent batch work on the same session (other
-    threads, or even this block's own memory-sink polls — harmless
-    here, they scan tiny in-memory tables) plans with width ``n``
-    while the pin is held, and the get/restore pair is not atomic
-    across threads. This matches the repo's harness (one driver
-    thread per session); callers running concurrent queries should
-    use a dedicated session (``spark.newSession()``) for the stream
-    so the pin is scoped to its own conf clone.
+    SINGLE-THREADED-SESSION ASSUMPTION: the pin mutates the
+    SESSION-global conf for the whole run, so any concurrent batch work
+    on the same session (other threads) plans with width ``n`` while
+    the pin is held, and the get/restore pair is not atomic across
+    threads. This matches the repo's harness (one driver thread per
+    session); callers running concurrent queries should use a dedicated
+    session (``spark.newSession()``) for the stream so the pin is
+    scoped to its own conf clone.
     """
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
@@ -129,26 +147,85 @@ def stream_user_rollup(events: DataFrame, watermark: str = "2 hours") -> DataFra
     )
 
 
-def run_stream_to_memory(
-    stream_df: DataFrame, name: str, output_mode: str = "complete"
-) -> DataFrame:
-    """Execute a streaming DataFrame to completion with AvailableNow and
-    return the result as a batch DataFrame from the memory sink.
+def _drained(q: StreamingQuery) -> bool:
+    """Whether a running query has consumed all of its input.
 
-    AvailableNow processes all currently-available input in bounded
-    micro-batches then stops — the streaming analog of a batch run, and
-    the driver-friendly way to smoke a stream without a long-lived job.
+    True once a finished trigger found no new input — the status says
+    no data is available and no trigger is running — or once the last
+    reported batch read zero rows while no data is available. The
+    second case is a stateful operator with a processing-time timeout:
+    it runs a no-data batch on every trigger, so a trigger is always
+    active and the query never idles. Both cases need a reported
+    batch: before the first one, the status reads "no data" while the
+    sources are still being opened.
     """
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
+    status, progress = q.status, q.lastProgress
+    return (
+        progress is not None
+        and not status["isDataAvailable"]
+        and (not status["isTriggerActive"] or progress["numInputRows"] == 0)
     )
-    q.awaitTermination(120)
+
+
+def run_stream(
+    stream_df: DataFrame,
+    name: str,
+    sink: Callable[[DataFrame, int], None] | None = None,
+    output_mode: str = "append",
+) -> DataFrame | None:
+    """Run a bounded stream until its input is drained, then stop it.
+
+    ``sink`` is a ``foreachBatch`` function, or ``None`` for a memory
+    sink under a fresh ``{name}_<uuid>`` query name; the memory sink's
+    rows are returned as a batch DataFrame. Its temp view is dropped
+    when the innermost :func:`~chapterhouseqe_spark.session.released`
+    scope closes, so the returned frame must be read inside that scope.
+
+    The run owns a fresh checkpoint directory and removes it, and holds
+    the :func:`stream_state_partitions` pin throughout. It waits at
+    most ``STREAM_TIMEOUT_S`` and raises ``RuntimeError`` past it; a
+    failed query raises its own error. The query is stopped in every
+    case BEFORE the checkpoint (and any input the caller staged) is
+    deleted: a live query whose files vanish keeps failing in the
+    background of the shared session.
+
+    Trigger: ``processingTime="0 seconds"`` for every stream, with
+    :func:`_drained` deciding when it is done. ``availableNow`` would
+    end file-source streams by itself, but it stops an on-demand
+    Python source (``sources/synthetic.py``) after its first prefetched
+    batch, and it never ends a stream whose stateful operator has a
+    processing-time timeout (that operator asks for a no-data batch on
+    every trigger).
+    """
     spark = stream_df.sparkSession
-    return spark.table(name)
+    query_name = f"{name}_{uuid.uuid4().hex[:8]}"
+    writer = stream_df.writeStream.queryName(query_name).outputMode(output_mode)
+    if sink is None:
+        writer = writer.format("memory")
+        _own(lambda: spark.catalog.dropTempView(query_name))
+    else:
+        writer = writer.foreachBatch(sink)
+    ckpt = tempfile.mkdtemp(prefix="chqe_stream_ckpt_")
+    try:
+        with stream_state_partitions(spark, STREAM_STATE_PARTITIONS):
+            q = (
+                writer.option("checkpointLocation", ckpt)
+                .trigger(processingTime="0 seconds")
+                .start()
+            )
+            try:
+                deadline = time.monotonic() + STREAM_TIMEOUT_S
+                while not q.awaitTermination(_POLL_S) and not _drained(q):
+                    if time.monotonic() > deadline:
+                        raise RuntimeError(
+                            f"{name}: stream did not finish within "
+                            f"{STREAM_TIMEOUT_S}s — infra stall, not a query bug"
+                        )
+            finally:
+                q.stop()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+    return spark.table(query_name) if sink is None else None
 
 
 def stream_enrich(
@@ -245,7 +322,7 @@ def idempotent_batch_writer(path: str, batch_col: str = "__batch_id"):
     txn-version dedup), and it scales: each micro-batch touches only
     its own directory, never the accumulated table.
 
-    Use: ``stream.writeStream.foreachBatch(idempotent_batch_writer(p))``.
+    Use: ``run_stream(stream, name, sink=idempotent_batch_writer(p))``.
     """
 
     def write(batch_df: DataFrame, batch_id: int) -> None:

@@ -164,14 +164,38 @@ def test_persist_goes_through_keep():
         if rel != "session.py" and _PERSIST.search(src)
     ]
     assert not bad, f"persist/cache/localCheckpoint outside session.py: {bad}"
+    relief = _harness_matches(_CACHE_RELIEF, "tests", "tools")
+    assert not relief, f"whole-session cache relief in: {relief}"
+
+
+def _harness_matches(pattern, *subdirs):
+    """Repo-relative paths of ``bench.py`` and the ``.py`` files under
+    ``subdirs`` whose source matches ``pattern``."""
     repo = os.path.dirname(PKG)
     paths = [os.path.join(repo, "bench.py")]
-    for sub in ("tests", "tools"):
+    for sub in subdirs:
         for root, _, files in os.walk(os.path.join(repo, sub)):
             paths += [os.path.join(root, f) for f in files if f.endswith(".py")]
-    relief = []
+    hits = []
     for path in paths:
         with open(path, encoding="utf-8") as fh:
-            if _CACHE_RELIEF.search(fh.read()):
-                relief.append(os.path.relpath(path, repo))
-    assert not relief, f"whole-session cache relief in: {relief}"
+            if pattern.search(fh.read()):
+                hits.append(os.path.relpath(path, repo))
+    return hits
+
+
+_WRITE_STREAM = re.compile(r"\.writeStream\b")
+
+
+def test_streams_go_through_runner():
+    """Streams have one runner, ``streaming.windows.run_stream``: it
+    bounds the wait, stops the query, removes its checkpoint and drops
+    its memory-sink view. No other package module, nor ``bench.py`` or
+    a tool, starts a stream."""
+    runner = os.path.join("streaming", "windows.py")
+    bad = [
+        rel for rel, src in _sources()
+        if rel != runner and _WRITE_STREAM.search(src)
+    ]
+    bad += _harness_matches(_WRITE_STREAM, "tools")
+    assert not bad, f".writeStream outside streaming/windows.py: {bad}"

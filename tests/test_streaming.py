@@ -1,5 +1,6 @@
-"""Structured Streaming tests: AvailableNow runs must equal the batch
-equivalents (the oracle-checked queries in streaming_queries.py)."""
+"""Structured Streaming tests: streams run to completion through
+``run_stream`` must equal the batch equivalents (the oracle-checked
+queries in streaming_queries.py)."""
 
 from __future__ import annotations
 
@@ -9,7 +10,7 @@ from chapterhouseqe_spark.queries.streaming_queries import (
 )
 from chapterhouseqe_spark.streaming import (
     read_events_stream,
-    run_stream_to_memory,
+    run_stream,
     stream_user_rollup,
     stream_window_counts,
 )
@@ -22,8 +23,8 @@ def _as_sorted_rows(df, cols):
 def test_stream_window_counts_equals_batch(spark, sf_dir):
     ev = read_events_stream(spark, sf_dir)
     assert ev.isStreaming
-    result = run_stream_to_memory(
-        stream_window_counts(ev), "t_stream_windows", "complete"
+    result = run_stream(
+        stream_window_counts(ev), "t_stream_windows", output_mode="complete"
     )
     batch = events_tumbling_window(spark, sf_dir)
     cols = ["window_start", "event_type", "cnt", "sum_value"]
@@ -32,7 +33,9 @@ def test_stream_window_counts_equals_batch(spark, sf_dir):
 
 def test_stream_user_rollup_equals_batch(spark, sf_dir):
     ev = read_events_stream(spark, sf_dir)
-    result = run_stream_to_memory(stream_user_rollup(ev), "t_stream_users", "complete")
+    result = run_stream(
+        stream_user_rollup(ev), "t_stream_users", output_mode="complete"
+    )
     batch = events_user_activity(spark, sf_dir)
     cols = ["user_id", "n_events", "first_seen", "last_seen"]
     assert _as_sorted_rows(result, cols) == _as_sorted_rows(batch, cols)
@@ -41,8 +44,8 @@ def test_stream_user_rollup_equals_batch(spark, sf_dir):
 def test_stream_bounded_micro_batches(spark, sf_dir):
     # maxFilesPerTrigger bounds each micro-batch (scale knob)
     ev = read_events_stream(spark, sf_dir, max_files_per_trigger=1)
-    result = run_stream_to_memory(
-        stream_window_counts(ev), "t_stream_bounded", "complete"
+    result = run_stream(
+        stream_window_counts(ev), "t_stream_bounded", output_mode="complete"
     )
     assert result.count() > 0
 
@@ -52,7 +55,7 @@ def test_streaming_sessionize_equals_batch(spark, sf_dir):
     from chapterhouseqe_spark.queries.streaming_queries import events_sessionization
 
     ev = read_events_stream(spark, sf_dir).withWatermark("ts", "2 hours")
-    result = run_stream_to_memory(sessionize(ev), "t_stream_sessions", "complete")
+    result = run_stream(sessionize(ev), "t_stream_sessions", output_mode="complete")
     batch = events_sessionization(spark, sf_dir)
     cols = ["user_id", "session_start", "n_events"]
     assert _as_sorted_rows(result, cols) == _as_sorted_rows(batch, cols)
@@ -60,12 +63,14 @@ def test_streaming_sessionize_equals_batch(spark, sf_dir):
 
 def test_stateful_user_stats_custom_op(spark, sf_dir):
     # applyInPandasWithState: running per-user (count, sum) must match
-    # the plain batch aggregate after one AvailableNow pass
+    # the plain batch aggregate once the input is drained
     from chapterhouseqe_spark.streaming.sessions import stateful_user_stats
     from pyspark.sql import functions as F
 
     ev = read_events_stream(spark, sf_dir)
-    result = run_stream_to_memory(stateful_user_stats(ev), "t_stateful_users", "update")
+    result = run_stream(
+        stateful_user_stats(ev), "t_stateful_users", output_mode="update"
+    )
     expect = (
         spark.read.parquet(f"{sf_dir}/events.parquet")
         .groupBy("user_id")
@@ -80,9 +85,7 @@ def test_stream_dedup_first_occurrence(spark, sf_dir):
     from chapterhouseqe_spark.streaming.windows import stream_dedup
 
     ev = read_events_stream(spark, sf_dir)
-    result = run_stream_to_memory(
-        stream_dedup(ev, ["user_id", "event_type"]), "t_stream_dedup", "append"
-    )
+    result = run_stream(stream_dedup(ev, ["user_id", "event_type"]), "t_stream_dedup")
     batch = (
         spark.read.parquet(f"{sf_dir}/events.parquet")
         .select("user_id", "event_type")
@@ -166,7 +169,7 @@ def test_stream_enrich_equals_batch_join(spark, sf_dir):
     )
     ev = read_events_stream(spark, sf_dir)
     enriched = stream_enrich(ev, users, "user_id").groupBy("tier").count()
-    result = run_stream_to_memory(enriched, "t_stream_enrich", "complete")
+    result = run_stream(enriched, "t_stream_enrich", output_mode="complete")
     import pyspark.sql.functions as F
     from chapterhouseqe_spark.queries.core_sql import t as load_t
 
@@ -193,7 +196,7 @@ def test_stream_stream_join_equals_batch(spark, sf_dir):
         "user_id", "ts", "value"
     )
     joined = stream_stream_join(clicks, purchases, "user_id")
-    result = run_stream_to_memory(joined, "t_ss_join", "append")
+    result = run_stream(joined, "t_ss_join")
 
     from chapterhouseqe_spark.queries.core_sql import t as load_t
 
@@ -234,8 +237,6 @@ def test_stream_to_snapshot_pipeline(spark, tmp_path):
     real micro-batches -> idempotent exactly-once landing -> committed
     snapshot version -> time-traveled read. Every piece exists and is
     tested alone; this pins that they compose."""
-    import time
-
     from pyspark.sql import functions as F
 
     from chapterhouseqe_spark.operators.maintenance import (
@@ -255,23 +256,7 @@ def test_stream_to_snapshot_pipeline(spark, tmp_path):
         .option("max_rows", 120)
         .load()
     )
-    q = (
-        stream.writeStream.foreachBatch(idempotent_batch_writer(landing))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    deadline = time.time() + 120
-    try:
-        while time.time() < deadline:
-            try:
-                if spark.read.parquet(landing).count() >= 120:
-                    break
-            except Exception:
-                pass  # landing dir not created yet
-            time.sleep(0.25)
-    finally:
-        q.stop()
+    run_stream(stream, "t_landing", sink=idempotent_batch_writer(landing))
     landed = spark.read.parquet(landing).drop("__batch_id")
     assert landed.count() == 120
 
@@ -346,18 +331,8 @@ def test_debounce_kept_vs_model_and_throttle(spark, tmp_path):
         .parquet(str(staging))
         .withWatermark("ts", "10 minutes")
     )
-    q = (
-        debounce_kept(ev, gap_seconds=60)
-        .writeStream.format("memory")
-        .queryName("t_debounce_kept")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120)
-    got = {
-        r.event_id for r in spark.table("t_debounce_kept").collect()
-    }
+    kept = run_stream(debounce_kept(ev, gap_seconds=60), "t_debounce_kept")
+    got = {r.event_id for r in kept.collect()}
 
     # pure-Python previous-kept model
     from collections import defaultdict
@@ -496,17 +471,9 @@ def test_streaming_ewma_state_survives_micro_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(str(staging))
     )
-    q = (
-        streaming_ewma(ev, alpha=0.25)
-        .writeStream.format("memory")
-        .queryName("t_stream_ewma")
-        .option("checkpointLocation", str(tmp_path / "ewma_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120)
     got = {
-        r.event_id: r.ewma for r in spark.table("t_stream_ewma").collect()
+        r.event_id: r.ewma
+        for r in run_stream(streaming_ewma(ev, alpha=0.25), "t_stream_ewma").collect()
     }
 
     # pure-Python model over the full in-order log

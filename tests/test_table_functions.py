@@ -105,13 +105,12 @@ def test_custom_python_datasource(spark):
     assert by_id[13]["label"] == "l3"
 
 
-def test_custom_python_datasource_streaming(spark, tmp_path):
+def test_custom_python_datasource_streaming(spark):
     # SimpleDataSourceStreamReader: the same deterministic rows arrive
     # incrementally (batch_rows per trigger); the aggregate over all
     # micro-batches must equal the batch source's answer.
-    import time
-
     from chapterhouseqe_spark.sources.synthetic import register_synthetic_source
+    from chapterhouseqe_spark.streaming.windows import run_stream
 
     register_synthetic_source(spark)
     stream = (
@@ -120,22 +119,7 @@ def test_custom_python_datasource_streaming(spark, tmp_path):
         .option("max_rows", 50)
         .load()
     )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("synth_stream")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    try:
-        deadline = time.time() + 60
-        while time.time() < deadline:
-            if spark.table("synth_stream").count() >= 50:
-                break
-            time.sleep(0.5)
-    finally:
-        q.stop()
-    got = spark.table("synth_stream").collect()
+    got = run_stream(stream, "synth_stream").collect()
     assert len(got) == 50
     batch = spark.read.format("chqe_synthetic").option("rows", 50).load()
     assert sorted(map(tuple, got)) == sorted(map(tuple, batch.collect()))
