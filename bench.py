@@ -1,64 +1,68 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR.
+"""Benchmark harness: every registered query at $SPARK_GRAFT_SF_DIR.
 
-Runs the engine's headline workload — reference-parity scan/filter (the
-reference's own huge_simple benchmark shape), TPC-H-shaped join/agg
-queries, window functions, and the pipeline operators (dedup,
-similarity, text) — on ``local[$SPARK_GRAFT_CPUS]``, then EVERY other
-registered query (extended + computed core tier, so no query escapes
-regression timing).
+Times the headline tier (reference-parity scan/filter, TPC-H-shaped
+joins and aggregates, windows, streaming-shaped queries and the
+pipeline operators), the hand-listed extended tier and the computed
+core tier (every other registered query), plus the headline queries
+again at the 10x scale in $SPARK_GRAFT_SF1_DIR when that directory
+exists. Each query runs into the noop sink, so the time is build, scan
+and compute, not driver transfer.
 
-Median-of-N isolated sessions (r10 verdict item 2): three same-code
-sessions of the single-pass bench spanned 32.9-42.7s — a ±15%
-page-cache/JIT band that cost a manual drift triage in each of r8, r9
-and r10. The graded tiers (headline + sf1) therefore run as
-``SPARK_GRAFT_BENCH_PASSES`` (default 3) sequential passes, EACH IN
-ITS OWN FRESH JVM subprocess (fresh JIT, fresh heap — a real session
-sample, not a warm in-process repeat), and the recorded artifact
-carries the per-query MEDIAN plus SPREAD (max−min across passes). The
-breadth tiers (extended + core) exist for regression coverage, not
-headline grading, and run on TWO of the scheduled passes (r12 verdict
-item 3 — a single sample could not separate sweep wins from pass
-noise), reported as median + spread like the headline tier: if a
-breadth-carrying pass dies, a later pass inherits its slot, with one
-bounded extended+core-only retry as the backstop, and unmeasured
-tiers report ``null`` rather than 0 (r11 verdict item 1 — round 11
-shipped ``extended_total: 0`` after a silent pass-1 death). A
-``passes`` provenance block records each pass's exit status,
-duration, and stderr tail. Passes run SEQUENTIALLY — concurrent JVMs
-contaminate each other's timings (round-3 lesson).
+The run is ``SPARK_GRAFT_BENCH_PASSES`` (default 3) sequential passes,
+each a child process with its own JVM on a ``perfbench.harness``
+session: a ``mkdtemp`` work directory that holds its spill, warehouse
+and temp files and is removed with the pass, ``local[n]`` on the n
+CPUs of the process's affinity (use ``taskset`` to run on fewer), the
+session's scan and Python-worker warm-ups, and a stream warm-up. The
+headline and sf1 tiers run in every pass; the breadth tiers (extended
+and core) in ``BREADTH_PASSES`` of them. If a pass carrying them fails,
+a later pass takes its slot, and if none succeeds one bounded
+extended+core retry runs. A tier no pass measured reports ``null``.
+The orchestrator samples perfbench's ``Health`` rule (CPU steal, start
+load) around each pass and stores it in the pass's ``passes`` record,
+with exit status, duration, the child's peak RSS and, on failure, its
+stderr tail. Passes never overlap: concurrent JVMs contaminate each
+other's timings.
 
-Output: the full per-query JSON first (also saved to
-``bench_last.json`` — flat median maps plus ``*_spread`` maps and raw
-per-pass totals), then a compact ~1.9 KB final line where each graded
-query maps to ``[median, spread]``::
+Output: the full record first (also written to ``bench_last.json``:
+per-query median maps, ``*_spread`` max-min maps and per-pass totals),
+then a compact last line of at most 1900 characters, because recorded
+artifacts keep a bounded output tail::
 
-    {"metric": "...", "value": <sum of headline medians>, "unit":
-     "sec", "median_of": 3, "queries": {name: [med, spread], ...},
-     "extended_total": ..., "core_total": ...,
-     "sf1_queries": {name: [med, spread], ...}, "sf": 0.1}
+    {"metric": "headline_total_runtime", "value": <sum of headline
+     medians>, "unit": "sec", "median_of": 3, "healthy": true, ...,
+     "queries": {name: [median, spread]}, "extended_total": ...,
+     "core_total": ..., "sf1_queries": {name: [median, spread]}, "sf": 0.1}
 
-The compact line ends the output because recorded artifacts capture a
-bounded output TAIL — the full per-query dict outgrew the round-6
-capture and truncated mid-line. ``tools/sf1_regression_gate.py``
-consumes the medians (it unpacks ``[med, spread]`` pairs and stays
-compatible with the flat floats of r9/r10 artifacts).
-
-Each query is fully materialized via a count/collect-free foreach-noop
-(``df.write.format("noop")``) so the measured time is scan+compute, not
-driver transfer.
+``sf1_slice`` labels how the line was shortened to fit (see
+``compact_line``). ``tools/sf1_regression_gate.py`` reads the medians.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import statistics
+import shutil
 import subprocess
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
+
+from perfbench.harness import Health, Session, median  # noqa: E402
+
+TABLES = ("region", "lineitem", "orders", "customer", "documents",
+          "embeddings", "events")
+# passes that carry the extended and core tiers: two give a median and
+# a spread; more would double the bench's long tail
+BREADTH_PASSES = 2
+# once a pass has spent this long on the sf1 tier, the remaining sf1
+# queries are skipped and named in "sf1_skipped"
+SF1_BUDGET_S = 480
+COMPACT_MAX_CHARS = 1900
+
 
 # the headline subset: representative, covers every operator family,
 # and completes in minutes at sf0.1
@@ -213,214 +217,116 @@ def core_tier(all_names: list[str]) -> list[str]:
     return [n for n in all_names if n not in timed]
 
 
+def warm_scans(session: Session, sf_dir: str) -> None:
+    session.warm_scans(sf_dir, tuple(
+        t for t in TABLES if os.path.exists(f"{sf_dir}/{t}.parquet")
+    ))
+
+
+def warm_session(work: str, sf_dir: str, event_log: bool = False) -> Session:
+    """A perfbench session in ``work`` whose first timed query pays no
+    first-touch cost: every table of ``sf_dir`` read once (JIT of the
+    Parquet reader, file listing, page cache) and one Python worker per
+    core forked with numpy and pandas imported."""
+    session = Session(work, event_log=event_log)
+    warm_scans(session, sf_dir)
+    session.warm_python_workers()
+    return session
+
+
+def time_query(spark, build, sf_dir: str) -> float:
+    """Seconds to build one query and run it into the noop sink. The
+    timer stops before the query's scope releases what it persisted."""
+    from chapterhouseqe_spark.session import released
+
+    with released():
+        t0 = time.time()
+        build(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return round(time.time() - t0, 3)
+
+
+def _warm_streams(spark) -> None:
+    """The first stream of a JVM pays 6-10 s once (micro-batch engine
+    classes, state-store provider, the Python state-protocol worker).
+    One 5-row stateful stream pays it before the first stream_* query."""
+    from pyspark.sql import functions as F
+
+    from chapterhouseqe_spark.session import released
+    from chapterhouseqe_spark.sources.synthetic import register_synthetic_source
+    from chapterhouseqe_spark.streaming.recurrence import streaming_ewma
+    from chapterhouseqe_spark.streaming.windows import run_stream
+
+    register_synthetic_source(spark)
+    events = (
+        spark.readStream.format("chqe_synthetic")
+        .option("batch_rows", 5)
+        .option("max_rows", 5)
+        .load()
+        .select(
+            F.col("label").alias("event_type"),
+            F.timestamp_seconds(F.col("id")).alias("ts"),
+            F.col("id").alias("event_id"),
+            "value",
+        )
+    )
+    with released():
+        run_stream(streaming_ewma(events, alpha=0.25), "warm_stream")
+
+
 def run_single(tiers: set[str]) -> dict:
-    """One full bench session in THIS process's (fresh) JVM, running
-    only the requested tiers. Returns the per-tier per-query second
-    maps. This is the body every isolated pass executes."""
+    """One pass in this process's fresh JVM over the requested tiers;
+    returns the per-tier maps of query seconds."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
     except ValueError:
         sf = 0.0
+    work = tempfile.mkdtemp(prefix="chqe_bench_")
+    try:
+        session = warm_session(work, sf_dir)
+        try:
+            out = _run_tiers(session, tiers, sf_dir)
+            out["peak_rss_mb"] = round(session.peak_rss_mb(), 1)
+        finally:
+            session.close()
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+    out["sf"] = sf
+    return out
 
+
+def _run_tiers(session: Session, tiers: set[str], sf_dir: str) -> dict:
     from chapterhouseqe_spark.queries.registry import get_queries
-    from chapterhouseqe_spark.session import get_spark, released
 
-    # 6g, not the session default 4g: the bench is the one consumer
-    # that runs ALL 200+ registered queries through a single local
-    # JVM, and the steady-state residue (broadcast payloads awaiting
-    # the ContextCleaner) needs headroom the per-test sessions don't —
-    # two full runs OOMed late in the core tier at 4g, back when cached
-    # operator intermediates outlived their query. Whether 4g now
-    # suffices is unmeasured. 6g stays under the knee where the
-    # session.py A/B measured young-gen pause cost (that was at 16g).
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
-    spark = get_spark("chqe-bench")
+    spark = session.spark
     queries = get_queries()
-
-    # Untimed warm-up: one full pass over each input table. This pins
-    # what the timed section measures to QUERY cost — codegen'd scan +
-    # compute — rather than first-touch noise (JVM JIT of the parquet
-    # reader, file listing, and the block device's cold cache) that
-    # would otherwise land entirely on whichever query runs first.
-    # A noop WRITE, not count(): count() answers from row-group
-    # metadata without touching a single data page, so it warms
-    # nothing past the footer.
-    for tbl in (
-        "region",
-        "lineitem",
-        "orders",
-        "customer",
-        "documents",
-        "embeddings",
-        "events",
-    ):
-        spark.read.parquet(f"{sf_dir}/{tbl}.parquet").write.format(
-            "noop"
-        ).mode("overwrite").save()
-
-    # Python-worker-pool warm-up, SAME untimed category as the scan/JIT
-    # warm-up above (r13 optimization round; documented in
-    # OPTIMIZATION_r13.md "bench methodology"): the first mapInPandas/
-    # pandas-UDF query of a session pays ~3.5s at local[32] to fork the
-    # 32 Python workers and import numpy+pandas in each — measured as
-    # the gap between dedup_minhash_lsh's first (4.4s) and warm (0.8s)
-    # signature pass. That cost is per-executor-lifetime infrastructure
-    # (amortized over days on a cluster), not query cost, and it
-    # previously landed entirely on whichever Python-boundary query ran
-    # first (dedup_minhash_lsh in the headline tier — the source of its
-    # pinned "bimodal band"). One pass-through batch per core warms the
-    # pool; workers are reused for every later Python-boundary query.
-    def _warm_py(batches):
-        import numpy  # noqa: F401  (preload into the reused worker)
-
-        yield from batches
-
-    n_cores = spark.sparkContext.defaultParallelism
-    spark.range(0, n_cores, 1, n_cores).mapInPandas(
-        _warm_py, "id long"
-    ).write.format("noop").mode("overwrite").save()
-
-    # Streaming-machinery warm-up, SAME untimed category (r13
-    # optimization round, documented in OPTIMIZATION_r13.md): the FIRST
-    # streaming query of a JVM pays a ~6-10s one-off — micro-batch
-    # engine classload/JIT, state-store provider init, and the
-    # python STATE-protocol worker fork (a different worker shape than
-    # the mapInPandas pool above; measured trigger breakdown: batch 0
-    # addBatch 5.6-8.7s vs 0.7-1.2s for every later batch). That is
-    # per-JVM-lifetime infrastructure, not query cost, and it
-    # previously landed on whichever stream_* query ran first in the
-    # extended/core tier. One 5-row stateful micro-batch over the
-    # synthetic source warms all three; the real streaming queries
-    # then run at their steady-state cost.
     if tiers & {"extended", "core"}:
-        from chapterhouseqe_spark.sources.synthetic import (
-            register_synthetic_source,
-        )
-        from chapterhouseqe_spark.streaming.recurrence import streaming_ewma
-        from chapterhouseqe_spark.streaming.windows import run_stream
-        from pyspark.sql import functions as F
+        _warm_streams(spark)
 
-        register_synthetic_source(spark)
-        _wstream = (
-            spark.readStream.format("chqe_synthetic")
-            .option("batch_rows", 5)
-            .option("max_rows", 5)
-            .load()
-            .select(
-                F.col("label").alias("event_type"),
-                F.timestamp_seconds(F.col("id")).alias("ts"),
-                F.col("id").alias("event_id"),
-                "value",
-            )
-        )
-        with released():
-            run_stream(streaming_ewma(_wstream, alpha=0.25), "warm_stream")
+    def run_tier(tier: str, names: list[str]) -> dict[str, float]:
+        if tier not in tiers:
+            return {}
+        return {n: time_query(spark, queries[n], sf_dir) for n in names}
 
-    def run_tier(names) -> dict[str, float]:
-        # One shared local JVM times 200+ queries back-to-back; each
-        # query's scope releases the intermediates its operators
-        # persisted (LSH shingle tables, CC frontiers, IVF codebooks...)
-        # after its timed write, so the cache does not grow across the
-        # tier — the local-mode analog of per-job executor lifetime on
-        # a cluster.
-        out: dict[str, float] = {}
-        for name in names:
-            build = queries[name]
-            with released():
-                t0 = time.time()
-                df = build(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                out[name] = round(time.time() - t0, 3)
-        return out
-
-    timings = run_tier(BENCH_QUERIES) if "headline" in tiers else {}
-    extended = run_tier(EXTENDED_QUERIES) if "extended" in tiers else {}
-    core = (
-        run_tier(core_tier(list(queries))) if "core" in tiers else {}
-    )
-
-    # sf1 tier (r7 verdict item 2): the headline queries again at 10x
-    # the bench scale, so the per-family 10x scale probes become a
-    # repeatable per-round regression artifact instead of one-off
-    # PLANS.md numbers. The data is locally generated
-    # (tools/gen_sf_data.py — same schema/distributions as the
-    # driver's tables); skipped silently when the directory is absent
-    # so the driver's default run still works on a fresh clone.
-    sf1_dir = os.environ.get(
-        "SPARK_GRAFT_SF1_DIR",
-        os.path.join(os.path.dirname(os.path.abspath(__file__)), "testdata_sf1"),
-    )
-    # The tier is TIME-BUDGETED (default 480s per pass) so the whole
-    # bench stays inside any reasonable harness timeout: once the
-    # budget is spent, remaining queries are SKIPPED and named in
-    # "sf1_skipped" — a visible cap, never a silent one.
-    sf1: dict[str, float] = {}
-    sf1_skipped: list[str] = []
+    out = {
+        "queries": run_tier("headline", BENCH_QUERIES),
+        "extended": run_tier("extended", EXTENDED_QUERIES),
+        "core": run_tier("core", core_tier(list(queries))),
+        "sf1": {},
+        "sf1_skipped": [],
+    }
+    # the headline queries again at 10x, on locally generated data
+    # (tools/gen_sf_data.py); skipped when the directory is absent
+    sf1_dir = os.environ.get("SPARK_GRAFT_SF1_DIR", os.path.join(REPO, "testdata_sf1"))
     if "sf1" in tiers and os.path.isdir(sf1_dir):
-        budget = float(os.environ.get("SPARK_GRAFT_SF1_BUDGET_S", "480"))
-        for tbl in ("lineitem", "orders", "customer", "documents",
-                    "embeddings", "events"):
-            spark.read.parquet(f"{sf1_dir}/{tbl}.parquet").write.format(
-                "noop"
-            ).mode("overwrite").save()
+        warm_scans(session, sf1_dir)
         tier_start = time.time()
         for name in BENCH_QUERIES:
-            if time.time() - tier_start > budget:
-                sf1_skipped.append(name)
-                continue
-            build = queries[name]
-            # dedup_minhash_lsh's sf1 time has a bimodal band (first
-            # touch of its banded shuffle JITs ~6s of codegen) that
-            # triggered drift triage in r9, r10 AND r11. Record the
-            # WARM FLOOR — best of 3 back-to-back runs — so the
-            # artifact carries the query's steady-state cost, not the
-            # JIT lottery (r11 verdict item 7). All three runs charge
-            # the tier budget; only the floor is recorded.
-            # dedup_ngram_jaccard joined the pinned set in r13 (r12
-            # verdict item 4): 24.8s median with a 7.47s spread was
-            # the noisiest sf1 row for three straight rounds — its
-            # band is JIT/cache lottery on the inverted-index shuffle,
-            # not plan-dominated, so the warm floor is the number the
-            # round-over-round gate should compare.
-            # multimodal_decode_features joined in r13: each heavy-row
-            # pin added upstream bumps its first run ~+0.7s (r11 0.55
-            # -> r12 0.70 with the minhash pin -> r13 1.38 with the
-            # ngram pin) — a LASTING JVM effect of the extra JIT churn
-            # that dropping the session's cache cannot undo (bisected:
-            # reps1 0.585s / current 1.42s / cache dropped before it
-            # 1.47s), while its warm steady state is unchanged at
-            # ~0.6-0.8s. The row measures
-            # the mapInPandas decode, not the JIT lottery of whatever
-            # ran before it, so record ITS warm floor too.
-            reps = (
-                3
-                if name
-                in (
-                    "dedup_minhash_lsh",
-                    "dedup_ngram_jaccard",
-                    "multimodal_decode_features",
-                )
-                else 1
-            )
-            best = None
-            for _ in range(reps):
-                with released():
-                    t0 = time.time()
-                    df = build(spark, sf1_dir)
-                    df.write.format("noop").mode("overwrite").save()
-                    dt = time.time() - t0
-                best = dt if best is None else min(best, dt)
-            sf1[name] = round(best, 3)
-
-    return {
-        "queries": timings,
-        "extended": extended,
-        "core": core,
-        "sf1": sf1,
-        "sf1_skipped": sf1_skipped,
-        "sf": sf,
-    }
+            if time.time() - tier_start > SF1_BUDGET_S:
+                out["sf1_skipped"].append(name)
+            else:
+                out["sf1"][name] = time_query(spark, queries[name], sf1_dir)
+    return out
 
 
 def _merge(passes: list[dict[str, float]]) -> tuple[
@@ -436,9 +342,170 @@ def _merge(passes: list[dict[str, float]]) -> tuple[
     med, spread = {}, {}
     for n in names:
         vals = [p[n] for p in passes if n in p]
-        med[n] = round(statistics.median(vals), 3)
+        med[n] = round(median(vals), 3)
         spread[n] = round(max(vals) - min(vals), 3)
     return med, spread
+
+
+def _tier_total(tier: dict | None) -> float | None:
+    # null, never 0, for a tier no pass measured
+    return round(sum(tier.values()), 3) if tier else None
+
+
+def run_pass(label: str, tiers: str) -> tuple[dict | None, dict]:
+    """Run one pass as a child process; returns its result (None if it
+    failed) and its ``passes`` record, with the box health sampled
+    around it."""
+    with tempfile.NamedTemporaryFile(suffix=".json", delete=False) as tf:
+        out_path = tf.name
+    err_path = out_path + ".stderr"
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_BENCH_CHILD="1",
+        SPARK_GRAFT_BENCH_TIERS=tiers,
+        SPARK_GRAFT_BENCH_OUT=out_path,
+    )
+    health = Health()
+    t0 = time.time()
+    with open(err_path, "w") as errf:
+        proc = subprocess.run(
+            [sys.executable, os.path.abspath(__file__)],
+            env=env,
+            stdout=subprocess.DEVNULL,
+            stderr=errf,
+        )
+    meta = {
+        "pass": label,
+        "tiers": tiers,
+        "rc": proc.returncode,
+        "dur_s": round(time.time() - t0, 1),
+        "health": health.finish(),
+        "ok": False,
+    }
+    result = None
+    try:
+        with open(out_path) as fh:
+            result = json.load(fh)
+        meta["ok"] = True
+        meta["peak_rss_mb"] = result.pop("peak_rss_mb", None)
+    except (OSError, json.JSONDecodeError):
+        with open(err_path) as fh:
+            meta["stderr_tail"] = fh.read()[-1500:]
+        print(
+            f"bench: pass {label} failed (rc={proc.returncode}, "
+            f"{meta['dur_s']}s) — continuing with the passes that "
+            "succeeded",
+            file=sys.stderr,
+            flush=True,
+        )
+    finally:
+        for p in (out_path, err_path):
+            os.unlink(p)
+    return result, meta
+
+
+def full_record(pass_results: list[dict], pass_meta: list[dict]) -> dict:
+    head, ext_passes, core_passes, sf1_passes = (
+        [p[k] for p in pass_results if p.get(k)]
+        for k in ("queries", "extended", "core", "sf1")
+    )
+    timings, timings_spread = _merge(head)
+    sf1, sf1_spread = _merge(sf1_passes)
+    extended, extended_spread = (
+        _merge(ext_passes) if ext_passes else (None, None)
+    )
+    core, core_spread = _merge(core_passes) if core_passes else (None, None)
+
+    def totals(maps: list[dict[str, float]]) -> list[float]:
+        return [round(sum(m.values()), 3) for m in maps]
+
+    return {
+        "metric": "headline_total_runtime",
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+        "median_of": len(head),
+        "healthy": all(m["health"]["healthy"] for m in pass_meta),
+        "passes": pass_meta,
+        "queries": timings,
+        "queries_spread": timings_spread,
+        "headline_pass_totals": totals(head),
+        "extended": extended,
+        "extended_spread": extended_spread,
+        "extended_median_of": len(ext_passes),
+        "extended_pass_totals": totals(ext_passes),
+        "extended_total": _tier_total(extended),
+        "core": core,
+        "core_spread": core_spread,
+        "core_median_of": len(core_passes),
+        "core_pass_totals": totals(core_passes),
+        "core_total": _tier_total(core),
+        "sf1": sf1,
+        "sf1_spread": sf1_spread,
+        "sf1_pass_totals": totals(sf1_passes),
+        "sf1_total": _tier_total(sf1),
+        "sf1_skipped": sorted(
+            set().union(*(p.get("sf1_skipped", []) for p in pass_results))
+        ),
+        "sf": pass_results[0].get("sf", 0.0),
+    }
+
+
+def _pairs(med: dict[str, float], spread: dict[str, float]) -> dict:
+    return {n: [v, spread.get(n, 0.0)] for n, v in med.items()}
+
+
+def _compact(full: dict, variant: str, floor: float = 0.25) -> str:
+    q, q_spread = full["queries"], full["queries_spread"]
+    sf1, sf1_spread = full["sf1"], full["sf1_spread"]
+    body = {
+        "metric": full["metric"],
+        "value": full["value"],
+        "unit": "sec",
+        "median_of": full["median_of"],
+        "passes_ok": sum(1 for m in full["passes"] if m["ok"]),
+        "passes_run": len(full["passes"]),
+        "healthy": full["healthy"],
+        "extended_total": full["extended_total"],
+        "core_total": full["core_total"],
+        "sf1_total": full["sf1_total"],
+        "sf1_slice": variant,
+        "sf1_n_skipped": len(full["sf1_skipped"]),
+        "detail": "bench_last.json",
+        "sf": full["sf"],
+        "queries": _pairs(q, q_spread),
+        "sf1_queries": _pairs(sf1, sf1_spread),
+    }
+    if variant == "flat":
+        body["sf1_slice"] = f"flat_ge_{floor}"
+        del body["detail"]
+        body["queries"] = {n: round(v, 2) for n, v in q.items()}
+        body["sf1_queries"] = {n: round(v, 2) for n, v in sf1.items()}
+        body["spread_ge"] = {
+            n: round(s, 2) for n, s in q_spread.items() if s >= floor
+        }
+        body["sf1_spread_ge"] = {
+            n: round(s, 2) for n, s in sf1_spread.items() if s >= floor
+        }
+    elif variant == "top10_slowest":
+        top10 = sorted(sf1, key=sf1.get, reverse=True)[:10]
+        body["sf1_queries"] = {n: [sf1[n], sf1_spread.get(n, 0.0)] for n in top10}
+    return json.dumps(body, separators=(",", ":"))
+
+
+def compact_line(full: dict) -> str:
+    """The first of these that fits, each labeled in ``sf1_slice``:
+    ``full`` (both maps as [median, spread] pairs); ``flat_ge_X``
+    (both maps as flat medians, plus only the spreads >= X, with X
+    raised from 0.25 to 2.0 until the line fits; X = 0.25 sits under
+    the gate's 0.5 s floor); else ``top10_slowest`` (the ten slowest
+    sf1 queries as pairs). bench_last.json keeps every spread."""
+    lines = [_compact(full, "full")] + [
+        _compact(full, "flat", floor) for floor in (0.25, 0.5, 1.0, 2.0)
+    ]
+    return next(
+        (line for line in lines if len(line) <= COMPACT_MAX_CHARS),
+        _compact(full, "top10_slowest"),
+    )
 
 
 def main() -> None:
@@ -453,255 +520,42 @@ def main() -> None:
             json.dump(res, fh)
         return
 
-    # ---- orchestrator: N isolated sequential passes ----
-    # Round 11 shipped extended_total: 0 / core_total: 0 / median_of: 2
-    # because pass 1 — the ONLY pass carrying the breadth tiers — died
-    # and the handler swallowed the failure (r11 verdict item 1). Three
-    # fixes here: (a) if the breadth-carrying pass fails, the breadth
-    # tiers are re-attached to the NEXT pass (and, if all scheduled
-    # passes have run without breadth data, ONE bounded replacement
-    # pass carrying only extended+core is spawned); (b) unmeasured
-    # tiers are reported as null, never 0; (c) every pass records exit
-    # status, duration, and a stderr tail in a "passes" provenance
-    # block so the next triage starts from data.
     n_passes = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3")))
-    # r12 verdict item 3: the breadth tiers (extended + core) used to
-    # ride pass 1 alone, so a 29% core-total swing had no spread to
-    # separate sweep wins from single-pass noise. They now ride TWO of
-    # the scheduled passes (median + spread reported like the headline
-    # tier); more than two would double the bench's long tail for a
-    # diminishing noise estimate.
-    breadth_target = min(
-        n_passes, int(os.environ.get("SPARK_GRAFT_BENCH_BREADTH_PASSES", "2"))
-    ) or 1
-    here = os.path.abspath(__file__)
+    breadth_target = min(n_passes, BREADTH_PASSES)
     pass_results: list[dict] = []
     pass_meta: list[dict] = []
     breadth_done = 0
 
-    def run_pass(label: str, tiers: str) -> None:
+    def run(label: str, tiers: str) -> None:
         nonlocal breadth_done
-        with tempfile.NamedTemporaryFile(suffix=".json", delete=False) as tf:
-            out_path = tf.name
-        err_path = out_path + ".stderr"
-        env = dict(
-            os.environ,
-            SPARK_GRAFT_BENCH_CHILD="1",
-            SPARK_GRAFT_BENCH_TIERS=tiers,
-            SPARK_GRAFT_BENCH_OUT=out_path,
-        )
-        t0 = time.time()
-        with open(err_path, "w") as errf:
-            proc = subprocess.run(
-                [sys.executable, here],
-                env=env,
-                stdout=subprocess.DEVNULL,
-                stderr=errf,
-            )
-        meta = {
-            "pass": label,
-            "tiers": tiers,
-            "rc": proc.returncode,
-            "dur_s": round(time.time() - t0, 1),
-            "ok": False,
-        }
-        try:
-            with open(out_path) as fh:
-                pass_results.append(json.load(fh))
-            meta["ok"] = True
+        result, meta = run_pass(label, tiers)
+        pass_meta.append(meta)
+        if result is not None:
+            pass_results.append(result)
             if "extended" in tiers:
                 breadth_done += 1
-        except (OSError, json.JSONDecodeError):
-            try:
-                with open(err_path) as fh:
-                    tail = fh.read()[-1500:]
-            except OSError:
-                tail = ""
-            meta["stderr_tail"] = tail
-            print(
-                f"bench: pass {label} failed (rc={proc.returncode}, "
-                f"{meta['dur_s']}s) — continuing with the passes that "
-                "succeeded",
-                file=sys.stderr,
-                flush=True,
-            )
-        finally:
-            pass_meta.append(meta)
-            for p in (out_path, err_path):
-                try:
-                    os.unlink(p)
-                except OSError:
-                    pass
 
     for i in range(n_passes):
-        # the first breadth_target passes carry the breadth tiers; if
-        # one dies, a later pass inherits its slot so the 84-query
-        # extended / computed core regression series never silently
-        # drops a round again
-        tiers = (
+        # a pass whose breadth tiers failed leaves its slot to the next
+        run(
+            str(i + 1),
             "headline,extended,core,sf1"
             if breadth_done < breadth_target
-            else "headline,sf1"
+            else "headline,sf1",
         )
-        run_pass(str(i + 1), tiers)
     if not breadth_done:
-        # every scheduled pass either failed or (impossible today, but
-        # cheap to guard) ran without breadth — one bounded retry
-        # dedicated to the regression tiers alone (a single sample
-        # beats a null round; the artifact's *_median_of field records
-        # the degraded state)
-        run_pass("breadth-retry", "extended,core")
+        run("breadth-retry", "extended,core")
     if not pass_results:
         print("bench: every pass failed", file=sys.stderr)
         print(json.dumps({"passes": pass_meta}), file=sys.stderr)
         sys.exit(1)
 
-    sf = pass_results[0].get("sf", 0.0)
-    head_passes = [p["queries"] for p in pass_results if p.get("queries")]
-    sf1_passes = [p["sf1"] for p in pass_results if p.get("sf1")]
-    timings, timings_spread = _merge(head_passes)
-    sf1, sf1_spread = _merge(sf1_passes)
-    # None (not {}) when no pass measured the tier → totals serialize
-    # as null, unambiguous against a real 0-second measurement. With
-    # two samples (r12 item 3) the recorded map is the per-query
-    # MEDIAN and the *_spread map the per-query max−min, exactly like
-    # the headline tier.
-    ext_passes = [p["extended"] for p in pass_results if p.get("extended")]
-    core_passes = [p["core"] for p in pass_results if p.get("core")]
-    extended, extended_spread = (
-        _merge(ext_passes) if ext_passes else (None, None)
-    )
-    core, core_spread = _merge(core_passes) if core_passes else (None, None)
-    sf1_skipped = sorted(
-        set().union(*(p.get("sf1_skipped", []) for p in pass_results))
-    )
-
-    total = round(sum(timings.values()), 3)
-
-    def _tier_total(tier: dict | None) -> float | None:
-        return round(sum(tier.values()), 3) if tier else None
-
-    full = json.dumps(
-        {
-            "metric": "headline_total_runtime",
-            "value": total,
-            "unit": "sec",
-            "median_of": len(head_passes),
-            "passes": pass_meta,
-            "queries": timings,
-            "queries_spread": timings_spread,
-            "headline_pass_totals": [
-                round(sum(p.values()), 3) for p in head_passes
-            ],
-            "extended": extended,
-            "extended_spread": extended_spread,
-            "extended_median_of": len(ext_passes),
-            "extended_pass_totals": [
-                round(sum(p.values()), 3) for p in ext_passes
-            ],
-            "extended_total": _tier_total(extended),
-            "core": core,
-            "core_spread": core_spread,
-            "core_median_of": len(core_passes),
-            "core_pass_totals": [
-                round(sum(p.values()), 3) for p in core_passes
-            ],
-            "core_total": _tier_total(core),
-            "sf1": sf1,
-            "sf1_spread": sf1_spread,
-            "sf1_pass_totals": [
-                round(sum(p.values()), 3) for p in sf1_passes
-            ],
-            "sf1_total": round(sum(sf1.values()), 3),
-            "sf1_skipped": sf1_skipped,
-            "sf": sf,
-        }
-    )
-    # Harness runs capture only a bounded TAIL of output (BENCH_r06's
-    # recorded tail was 2000 chars — the full per-query JSON is several
-    # KB, so the headline block was cut off mid-line no matter how
-    # quiet the console). Emit the full detail FIRST (and to a file),
-    # then end with a COMPACT spec-shaped line — metric/value/unit/
-    # per-query [median, spread] pairs, ~1.9 KB — so the LAST line
-    # always fits inside any reasonable tail capture and parses as
-    # JSON.
+    record = full_record(pass_results, pass_meta)
+    full = json.dumps(record)
     print(full, flush=True)
-    with open(
-        os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_last.json"),
-        "w",
-    ) as f:
+    with open(os.path.join(REPO, "bench_last.json"), "w") as f:
         f.write(full + "\n")
-
-    def _pairs(med: dict[str, float], spr: dict[str, float]) -> dict:
-        return {n: [med[n], spr.get(n, 0.0)] for n in med}
-
-    # Per-query median+spread in the driver-visible tail (r8 verdict
-    # item 3 gave sf1 its per-query map; r10 item 2 adds the spread).
-    # Two 27-query maps of [median, spread] pairs outgrow the
-    # ~2000-char tail budget (query names dominate), so degrade in
-    # three labeled steps — the gate reads medians from any of them:
-    #   "full"       — both maps as [median, spread] pairs
-    #   "flat_ge_X"  — both maps flat medians (2dp) + per-map
-    #                  "spread_ge"/"sf1_spread_ge" carrying only
-    #                  spreads ≥ X (X self-raises from 0.25 until the
-    #                  line fits; an omitted query's spread is < X,
-    #                  and X=0.25 sits under the gate's 0.5s floor)
-    #   "top10_slowest" — the 10 slowest sf1 queries as pairs (the
-    #                  queries whose regressions matter most)
-    # Full-precision per-query spread always lives in bench_last.json.
-    def _compact(variant: str) -> str:
-        body = {
-            "metric": "headline_total_runtime",
-            "value": total,
-            "unit": "sec",
-            "median_of": len(head_passes),
-            "passes_ok": sum(1 for m in pass_meta if m["ok"]),
-            "passes_run": len(pass_meta),
-            "extended_total": _tier_total(extended),
-            "core_total": _tier_total(core),
-            "sf1_total": round(sum(sf1.values()), 3) if sf1 else None,
-            "sf1_slice": variant,
-            "sf1_n_skipped": len(sf1_skipped),
-            "detail": "bench_last.json",
-            "sf": sf,
-        }
-        if variant == "full":
-            body["queries"] = _pairs(timings, timings_spread)
-            body["sf1_queries"] = _pairs(sf1, sf1_spread)
-        elif variant == "flat":
-            floor = globals().get("_SPREAD_FLOOR", 0.25)
-            body["sf1_slice"] = f"flat_ge_{floor}"
-            body["queries"] = {n: round(v, 2) for n, v in timings.items()}
-            body["sf1_queries"] = {n: round(v, 2) for n, v in sf1.items()}
-            body["spread_ge"] = {
-                n: round(s, 2)
-                for n, s in timings_spread.items()
-                if s >= floor
-            }
-            body["sf1_spread_ge"] = {
-                n: round(s, 2) for n, s in sf1_spread.items() if s >= floor
-            }
-            del body["detail"]
-        else:  # top10_slowest
-            body["queries"] = _pairs(timings, timings_spread)
-            top10 = sorted(sf1.items(), key=lambda kv: kv[1], reverse=True)[:10]
-            body["sf1_queries"] = {
-                n: [v, sf1_spread.get(n, 0.0)] for n, v in top10
-            }
-        return json.dumps(body, separators=(",", ":"))
-
-    compact = _compact("full")
-    if len(compact) > 1900:
-        # the flat step self-trims: drop the SMALLEST sparse-spread
-        # entries (least informative) until the line fits, before
-        # surrendering sf1 breadth to the top10 slice
-        for floor in (0.25, 0.5, 1.0, 2.0):
-            globals()["_SPREAD_FLOOR"] = floor
-            compact = _compact("flat")
-            if len(compact) <= 1900:
-                break
-    if len(compact) > 1900:
-        compact = _compact("top10_slowest")
+    compact = compact_line(record)
     print(compact, flush=True)
     print(compact, file=sys.stderr, flush=True)
 

@@ -279,11 +279,21 @@ def json_scan(spark, sf_dir):
     doc="named-table scan, the reference's NotImplemented S2 (builder.rs:67-72)",
 )
 def named_table_scan(spark, sf_dir):
-    t(spark, sf_dir, "nation").createOrReplaceTempView("chqe_nation_tbl")
-    return _ref_engine(spark, sf_dir).dataframe_for(
-        "select n_nationkey, n_name from chqe_nation_tbl where n_regionkey = 2",
-        mode="reference",
-    )
+    # the formatter spark.sql(text, **frames) uses: a uuid-named view
+    # per frame, dropped once the reference engine has resolved it
+    from pyspark.sql.sql_formatter import SQLStringFormatter
+
+    views = SQLStringFormatter(spark)
+    try:
+        return _ref_engine(spark, sf_dir).dataframe_for(
+            views.format(
+                "select n_nationkey, n_name from {nation} where n_regionkey = 2",
+                nation=t(spark, sf_dir, "nation"),
+            ),
+            mode="reference",
+        )
+    finally:
+        views.clear()
 
 
 # =====================================================================
@@ -700,15 +710,15 @@ def cte_segment_totals(spark, sf_dir):
     doc="IN subquery → left semi join under Catalyst",
 )
 def in_subquery(spark, sf_dir):
-    t(spark, sf_dir, "orders").createOrReplaceTempView("chqe_orders_v")
-    t(spark, sf_dir, "customer").createOrReplaceTempView("chqe_customer_v")
     return spark.sql(
         """
-        SELECT o_orderkey, o_custkey FROM chqe_orders_v
-        WHERE o_custkey IN (SELECT c_custkey FROM chqe_customer_v
+        SELECT o_orderkey, o_custkey FROM {orders}
+        WHERE o_custkey IN (SELECT c_custkey FROM {customer}
                             WHERE c_mktsegment = 'BUILDING')
           AND o_totalprice > 300000
-        """
+        """,
+        orders=t(spark, sf_dir, "orders"),
+        customer=t(spark, sf_dir, "customer"),
     )
 
 
@@ -724,14 +734,14 @@ def in_subquery(spark, sf_dir):
     doc="scalar subquery with an exact (decimal-summed) global average",
 )
 def scalar_subquery(spark, sf_dir):
-    t(spark, sf_dir, "orders").createOrReplaceTempView("chqe_orders_v")
     return spark.sql(
         """
-        SELECT o_orderkey, o_totalprice FROM chqe_orders_v
+        SELECT o_orderkey, o_totalprice FROM {orders}
         WHERE o_totalprice > 1.5 * (
           SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(27,4))) AS DOUBLE) / COUNT(*)
-          FROM chqe_orders_v)
-        """
+          FROM {orders})
+        """,
+        orders=t(spark, sf_dir, "orders"),
     )
 
 
@@ -1093,14 +1103,14 @@ def udf_pandas_charge(spark, sf_dir):
     from chapterhouseqe_spark.functions.udfs import register_default_udfs
 
     register_default_udfs(spark)
-    t(spark, sf_dir, "lineitem").createOrReplaceTempView("chqe_lineitem_v")
     return spark.sql(
         """
         SELECT l_orderkey, l_linenumber,
                chqe_charge(l_extendedprice, l_discount, l_tax) AS charge,
                chqe_word_count(l_returnflag || ' ' || l_linestatus) AS wc
-        FROM chqe_lineitem_v WHERE l_orderkey % 100 = 0
-        """
+        FROM {lineitem} WHERE l_orderkey % 100 = 0
+        """,
+        lineitem=t(spark, sf_dir, "lineitem"),
     )
 
 
@@ -1511,15 +1521,14 @@ def json_extract_props(spark, sf_dir):
     "one shuffle, vs three UNION'd aggregations",
 )
 def grouping_sets_mix(spark, sf_dir):
-    c = t(spark, sf_dir, "customer")
-    c.createOrReplaceTempView("gs_customer")
     return spark.sql(
         """
         SELECT c_mktsegment, c_nationkey, COUNT(*) AS cnt,
                CAST(SUM(CAST(c_acctbal AS DECIMAL(27,4))) AS DOUBLE) AS sum_bal
-        FROM gs_customer
+        FROM {customer}
         GROUP BY GROUPING SETS ((c_mktsegment), (c_nationkey), ())
-        """
+        """,
+        customer=t(spark, sf_dir, "customer"),
     )
 
 
@@ -2817,19 +2826,19 @@ def set_except_intersect_all(spark, sf_dir):
     "per-row re-execution",
 )
 def lateral_topn_per_key(spark, sf_dir):
-    t(spark, sf_dir, "customer").createOrReplaceTempView("lat_customer")
-    t(spark, sf_dir, "orders").createOrReplaceTempView("lat_orders")
     return spark.sql(
         """
         SELECT c.c_custkey, o.o_orderkey,
                CAST(o.o_totalprice AS DOUBLE) AS o_totalprice
-        FROM lat_customer c, LATERAL (
-          SELECT o_orderkey, o_totalprice FROM lat_orders
+        FROM {customer} c, LATERAL (
+          SELECT o_orderkey, o_totalprice FROM {orders}
           WHERE o_custkey = c.c_custkey
           ORDER BY o_totalprice DESC, o_orderkey LIMIT 2
         ) o
         WHERE c.c_mktsegment = 'BUILDING'
-        """
+        """,
+        customer=t(spark, sf_dir, "customer"),
+        orders=t(spark, sf_dir, "orders"),
     )
 
 
@@ -2861,11 +2870,10 @@ def lateral_topn_per_key(spark, sf_dir):
     "regardless of table size. Exact integer aggregates per depth",
 )
 def recursive_cte_hierarchy(spark, sf_dir):
-    t(spark, sf_dir, "customer").createOrReplaceTempView("rec_customer")
     return spark.sql(
         """
         WITH RECURSIVE walk AS (
-          SELECT c_custkey, c_custkey AS cur, 0 AS depth FROM rec_customer
+          SELECT c_custkey, c_custkey AS cur, 0 AS depth FROM {customer}
           UNION ALL
           SELECT c_custkey, cur DIV 10 AS cur, depth + 1 AS depth
           FROM walk WHERE cur >= 10
@@ -2877,7 +2885,8 @@ def recursive_cte_hierarchy(spark, sf_dir):
                CAST(MAX(c_custkey) AS BIGINT) AS max_key
         FROM walk WHERE cur < 10
         GROUP BY depth
-        """
+        """,
+        customer=t(spark, sf_dir, "customer"),
     )
 
 

@@ -3957,17 +3957,16 @@ def embedding_norm_audit(spark, sf_dir):
     "divide these exact counts downstream",
 )
 def corpus_composition_report(spark, sf_dir):
-    d = t(spark, sf_dir, "documents")
-    d.createOrReplaceTempView("ccr_documents")
     return spark.sql(
         """
         SELECT COALESCE(lang, '<all>') AS lang,
                COALESCE(source, '<all>') AS source,
                COUNT(*) AS n_docs,
                SUM(n_chars) AS total_chars
-        FROM ccr_documents
+        FROM {documents}
         GROUP BY GROUPING SETS ((lang, source), (lang), (source), ())
-        """
+        """,
+        documents=t(spark, sf_dir, "documents"),
     )
 
 

@@ -4,19 +4,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 # Dimension tables small enough to broadcast at ANY scale factor —
 # region/nation are fixed-size; documents/embeddings are fixed 500 rows
 # in this dataset. customer/supplier/part grow with SF and are left to
@@ -55,14 +42,3 @@ def events_ts_micros(df: DataFrame) -> DataFrame:
         F.timestamp_micros(F.call_function("div", F.col("ts"), F.lit(1000))),
     )
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register all tables as temp views (for spark.sql-built queries)."""
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs

@@ -16,20 +16,13 @@ plus ``.csv`` / ``.json`` which the reference declares but never built
 
 from __future__ import annotations
 
-import hashlib
 import re
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
 from chapterhouseqe_spark.connections import ConnectionRegistry
-
-_READ_FILES_RE = re.compile(
-    r"""read_files\s*\(\s*
-        '(?P<path>(?:[^']|'')+)'\s*
-        (?:,\s*connection\s*=>\s*'(?P<conn>[^']+)'\s*)?
-        \)""",
-    re.IGNORECASE | re.VERBOSE,
-)
+from chapterhouseqe_spark.session import _own
 
 
 def load_glob(
@@ -158,6 +151,14 @@ def rewrite_table_functions(
 ) -> str:
     """Replace each registered table-function call with a temp-view name.
 
+    Each distinct ``(function, args, kwargs)`` of the statement gets one
+    view named ``<function>_<uuid4 hex>``, so a source used twice is one
+    scan (Catalyst reuses the exchange) and no two statements share a
+    view. The view's drop is recorded in the innermost
+    :func:`~chapterhouseqe_spark.session.released` scope (a
+    ``QueryEngine`` query's own), so the session keeps no view after the
+    query; outside a scope the view stays.
+
     Covers every function in the TableFunctionRegistry (``read_files``,
     ``read_table``, and any user-registered builder), so full Spark SQL
     can mix them with joins/aggregates/CTEs. See
@@ -181,6 +182,7 @@ def rewrite_table_functions(
         r"\s*(?:(?P<name>[A-Za-z_][A-Za-z0-9_]*)\s*=>\s*)?'(?P<val>(?:[^']|'')*)'\s*"
     )
 
+    views: dict[tuple, str] = {}
     out: list[str] = []
     last = 0
     for m in pattern.finditer(sql):
@@ -210,20 +212,13 @@ def rewrite_table_functions(
                 kwargs[am.group("name").lower()] = val
             else:
                 args.append(val)
-        digest = hashlib.md5(
-            f"{fn}\x00{args}\x00{sorted(kwargs.items())}".encode()
-        ).hexdigest()[:10]
-        view = (
-            fn
-            + "_"
-            + re.sub(r"[^A-Za-z0-9]", "_", "_".join(args))[:64]
-            + "_"
-            + digest
-        )
-        df = functions.get(fn).build(spark, args, kwargs, registry)
-        df.createOrReplaceTempView(view)
+        key = (fn, tuple(args), tuple(sorted(kwargs.items())))
+        if key not in views:
+            view = views[key] = f"{fn}_{uuid.uuid4().hex}"
+            functions.get(fn).build(spark, args, kwargs, registry).createTempView(view)
+            _own(lambda view=view: spark.catalog.dropTempView(view))
         out.append(sql[last : m.start()])
-        out.append(view)
+        out.append(views[key])
         last = call_end
     out.append(sql[last:])
     return "".join(out)
@@ -238,11 +233,8 @@ def rewrite_read_files(
 
     Returns SQL that Spark's parser accepts; any trailing alias in the
     original text keeps working because ``FROM <view> <alias>`` is valid.
-    View names are deterministic per (connection, path) — a short hash of
-    the raw pair is appended so distinct sources can never collide after
-    sanitization (e.g. ``a/b.parquet`` vs ``a_b.parquet`` — ADVICE r1) —
-    so repeated use in one statement resolves to one scan (Catalyst
-    reuses the exchange).
+    Views are named and released as :func:`rewrite_table_functions`
+    describes.
 
     Occurrences inside single-quoted SQL string literals are left alone:
     a match is a genuine call site iff an even number of quote characters

@@ -14,13 +14,6 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
-    # 6g, matching bench.py's rationale: the suite replays all 277
-    # registered queries (plus the operator tests) through ONE shared
-    # JVM. At 4g the round-12 suite died with UNABLE_TO_ACQUIRE_MEMORY
-    # ~440 tests in, when persisted operator intermediates piled up
-    # across tests. The per-test scope below now releases them; whether
-    # the suite fits a smaller heap again is unmeasured.
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
     return get_spark("chqe-tests", shuffle_partitions=8)
 
 

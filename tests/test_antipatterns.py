@@ -199,3 +199,20 @@ def test_streams_go_through_runner():
     ]
     bad += _harness_matches(_WRITE_STREAM, "tools")
     assert not bad, f".writeStream outside streaming/windows.py: {bad}"
+
+
+_TEMP_VIEW = re.compile(r"\.create(?:OrReplace)?(?:Global)?TempView\(")
+
+
+def test_temp_views_only_in_read_files():
+    """A fixed-name session view outlives its query and lets two
+    queries replace each other's. Builders pass frames to
+    ``spark.sql(text, name=df)``, whose formatter names a view per call
+    and drops it before returning; only the table-function rewrite
+    registers views itself, each with a uuid name and its drop recorded
+    in the query's ``released`` scope."""
+    bad = [
+        rel for rel, src in _sources()
+        if rel != os.path.join("sql", "read_files.py") and _TEMP_VIEW.search(src)
+    ]
+    assert not bad, f"temp view registered outside sql/read_files.py: {bad}"

@@ -1,7 +1,8 @@
 """Persisted intermediates are owned by the query that made them:
 ``session.keep`` records each frame in the innermost ``released``
 scope, and the scope unpersists it when the query ends, normally or by
-an error, without touching frames other queries kept."""
+an error, without touching frames other queries kept. The temp views a
+query names its sources by go the same way."""
 
 from __future__ import annotations
 
@@ -166,3 +167,49 @@ def test_concurrent_queries_release_only_their_own_frames(spark, sf_dir, tmp_pat
     assert engine.num_rows(qa) == 1000
     assert not _is_cached(frames["a"])
     assert _persisted(spark) <= before
+
+
+def _temp_views(session) -> set[str]:
+    return {t.name for t in session.catalog.listTables() if t.isTemporary}
+
+
+# registry builders that name their input tables in SQL text
+@pytest.mark.parametrize(
+    "name",
+    [
+        "named_table_scan",
+        "in_subquery",
+        "scalar_subquery",
+        "udf_pandas_charge",
+        "grouping_sets_mix",
+        "lateral_topn_per_key",
+        "recursive_cte_hierarchy",
+        "corpus_composition_report",
+    ],
+)
+def test_registry_builder_leaves_no_temp_view(spark, sf_dir, name):
+    # a new session shares the context but starts with no temp views,
+    # so whatever view it holds afterwards is the builder's
+    fresh = spark.newSession()
+    before = _temp_views(spark)
+    with released():
+        get_queries()[name](fresh, sf_dir).write.format("noop").mode("overwrite").save()
+    assert not _temp_views(fresh)
+    assert _temp_views(spark) <= before
+
+
+def test_read_files_query_leaves_no_temp_view(spark, sf_dir, tmp_path):
+    fresh = spark.newSession()
+    engine = QueryEngine(
+        fresh,
+        results_root=str(tmp_path / "results"),
+        registry=ConnectionRegistry(default_base=sf_dir),
+    )
+    with released():
+        qid = engine.run_query_sync(
+            "select count(*) as n from read_files('nation.parquet') a "
+            "join read_files('region.parquet') r on a.n_regionkey = r.r_regionkey"
+        )
+    assert engine.status(qid) is QueryStatus.COMPLETE, engine.error(qid)
+    assert engine.fetch(qid, 0, 1)[0]["n"] == 25
+    assert not _temp_views(fresh)

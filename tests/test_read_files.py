@@ -5,6 +5,8 @@ rewriting).
 
 from __future__ import annotations
 
+import re
+
 from chapterhouseqe_spark.connections import ConnectionRegistry
 from chapterhouseqe_spark.sql.read_files import load_glob, rewrite_read_files
 
@@ -30,28 +32,18 @@ def test_rewrite_produces_runnable_sql(spark, sf_dir):
 
 
 def test_rewrite_distinct_sources_get_distinct_views(spark, sf_dir):
-    # ADVICE r1: paths that sanitize identically (e.g. 'a/b.parquet' vs
-    # 'a.b.parquet') must land in distinct views — the hash suffix keeps
-    # them apart; identical sources keep a deterministic shared view.
-    a = rewrite_read_files(spark, f"select * from read_files('{sf_dir}/region.parquet')")
-    b = rewrite_read_files(spark, f"select * from read_files('{sf_dir}/region.parquet')")
-    assert a == b  # same source → same deterministic view name
+    # ADVICE r1: distinct sources must land in distinct views; a source
+    # repeated in one statement resolves to one shared view (one scan).
+    region = f"read_files('{sf_dir}/region.parquet')"
+    a = rewrite_read_files(spark, f"select * from {region}")
     c = rewrite_read_files(spark, f"select * from read_files('{sf_dir}/nation.parquet')")
     assert a != c
-    # sanitized-identical but distinct raw paths → distinct view names
-    from chapterhouseqe_spark.sql.read_files import _READ_FILES_RE  # noqa: F401
-    import hashlib, re
-
-    def view_name(conn, path):
-        digest = hashlib.md5(f"{conn}\x00{path}".encode()).hexdigest()[:10]
-        return (
-            "read_files_"
-            + re.sub(r"[^A-Za-z0-9]", "_", f"{conn}_{path}")[:64]
-            + "_"
-            + digest
-        )
-
-    assert view_name("default", "a/b.parquet") != view_name("default", "a.b.parquet")
+    both = rewrite_read_files(
+        spark, f"select * from {region} x join {region} y using (r_regionkey)"
+    )
+    views = re.findall(r"\bread_files_\w+", both)
+    assert len(views) == 2 and views[0] == views[1]
+    assert spark.sql(both).count() == 5
 
 
 def test_rewrite_skips_string_literals(spark, sf_dir):

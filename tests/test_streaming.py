@@ -416,12 +416,16 @@ def test_debounce_state_retires_behind_watermark(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    assert q.awaitTermination(180)
-    prog = q.lastProgress
-    state_rows = prog["stateOperators"][0]["numRowsTotal"]
-    # 401 keys passed through; only the final straggler's key may live
-    assert state_rows <= 2, f"state not evicted: {state_rows} rows"
-    assert spark.table("t_debounce_evict").count() == 401
+    try:
+        assert q.awaitTermination(180)
+        prog = q.lastProgress
+        state_rows = prog["stateOperators"][0]["numRowsTotal"]
+        # 401 keys passed through; only the final straggler's key may live
+        assert state_rows <= 2, f"state not evicted: {state_rows} rows"
+        assert spark.table("t_debounce_evict").count() == 401
+    finally:
+        q.stop()
+        spark.catalog.dropTempView("t_debounce_evict")
 
 
 def test_streaming_ewma_state_survives_micro_batches(spark, tmp_path):
