@@ -15,9 +15,13 @@ Status lifecycle is the reference's: Queued → Running → Complete | Error
 ``<results_root>/<query_id>/`` (reference writes
 ``/query_results/<uuid>/rec_<n>.parquet``, materialize_files_task.rs:117-141)
 with a global ``__row_id`` column so fetch supports forward AND reverse
-cursor paging. Pages are served on the driver from the Parquet files,
-with no Spark job: a page's row-id range prunes the result's row groups
-by the footers' ``__row_id`` statistics — the reference's
+cursor paging (the reference numbers nothing: it pages by position in
+its files). The ids are numbered inside the result's write job by
+Spark's distributed sequence (:func:`with_row_ids`), with no shuffle and
+no join, and the write job counts the rows it writes. Pages are served
+on the driver from the Parquet files, with no Spark job: a page's row-id
+range prunes the result's row groups by the footers' ``__row_id``
+statistics — the reference's
 ``(file, row_group)`` cursor (query_data_handler.rs:239-253) — and a
 row filter inside those groups stands in for its ``row_idx``. Results
 Spark may not have written to the driver's disk, results with a variant
@@ -33,8 +37,9 @@ import uuid
 from dataclasses import dataclass, field
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.internal import InternalFunction
 from pyspark.sql.types import ArrayType, MapType, StructType, VariantType
 from pyspark.sql.types import YearMonthIntervalType
 
@@ -72,61 +77,28 @@ class QueryStatus(enum.Enum):
 
 
 def with_row_ids(df: DataFrame, col_name: str = ROW_ID) -> DataFrame:
-    """Assign dense global row ids 0..n-1 in stable partition order.
+    """``df`` with a last column of dense row ids 0..n-1 in partition
+    order, numbered inside the job that consumes the frame.
 
-    Scale note: a ``row_number() OVER ()`` window would funnel the whole
-    result through ONE task. Instead: monotonically_increasing_id encodes
-    (partition_id, local offset); we aggregate per-partition counts (a
-    tiny 1-row-per-partition shuffle), compute cumulative offsets on the
-    driver (O(num_partitions), not O(rows)), and broadcast-join a tiny
-    ``(pid → offset)`` frame back in. A broadcast join — unlike a literal
-    ``create_map`` — keeps the plan size O(1) in partition count, so this
-    holds at 100k partitions; the persist is DISK_ONLY so a 100 TB result
-    never pins executor memory (VERDICT r1 "What's wrong" #4).
-
-    The persisted intermediate is kept in the caller's
-    :func:`~chapterhouseqe_spark.session.released` scope, which releases
-    it once the caller's action is done. The returned frame carries
-    ``_chqe_total_rows`` (summed from the per-partition counts — no
-    post-write re-scan needed).
+    The ids come from Spark's distributed sequence (the
+    ``AttachDistributedSequence`` node of pandas-on-Spark's default
+    index): a ``zipWithIndex`` over the frame's partitions. It needs no
+    shuffle, no driver round trip and no join; a one-partition frame is
+    numbered in the consuming job itself, a wider one after one narrow
+    job that counts each partition's rows. That count job and the
+    consuming job read the rows from one ``DISK_ONLY`` persist, kept in
+    the caller's :func:`~chapterhouseqe_spark.session.released` scope,
+    so the frame is computed once and a large result never pins
+    executor memory. The node's own cache is off
+    (``pandas_on_Spark.compute.default_index_cache`` in
+    ``session.DEFAULT_CONFS``): Spark would release it only through
+    adaptive-execution clean-up, and the persist already holds the rows.
     """
-    spark = df.sparkSession
-    tagged = df.withColumn("__mid", F.monotonically_increasing_id()).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    keep(tagged, StorageLevel.DISK_ONLY)
-    # one row per partition — small by construction, so the order is set
-    # on the driver rather than by a Spark sort
-    counts = sorted(tagged.groupBy("__pid").count().collect())
-    offsets: list[tuple[int, int]] = []
-    running = 0
-    for pid, count in counts:
-        offsets.append((pid, running))
-        running += count
-    if offsets:
-        off_df = spark.createDataFrame(offsets, "__pid int, __offset long")
-        joined = tagged.join(F.broadcast(off_df), "__pid", "inner")
-    else:
-        # empty result: no rows to number, but the expression must still
-        # pass analysis (an empty create_map() is VOID-typed and fails —
-        # ADVICE r1 high-severity finding).
-        joined = tagged.withColumn("__offset", F.lit(0).cast("long"))
-    # local offset = mid - (pid << 33); monotonically_increasing_id puts
-    # the partition id in the upper 31 bits.
-    out = joined.withColumn(
-        col_name,
-        (
-            F.col("__mid")
-            - (F.col("__pid").cast("long") * F.lit(1 << 33).cast("long"))
-            + F.col("__offset")
-        ).cast("long"),
-    ).drop("__mid", "__pid", "__offset")
-    # preserve the caller's column order (the join moved __pid first);
+    keep(df, StorageLevel.DISK_ONLY)
     # names are quoted so a dot in one is not read as a field access
     quoted = ["`" + c.replace("`", "``") + "`" for c in df.columns]
-    out = out.select(*quoted, col_name)
-    out._chqe_total_rows = running
-    return out
+    row_id = InternalFunction.distributed_sequence_id().alias(col_name)
+    return df.select(*quoted, row_id)
 
 
 @dataclass
@@ -277,16 +249,18 @@ class QueryEngine:
                     df = self.dataframe_for(sql, mode)
                     _check_pageable(df.schema)
                     path = f"{self.results_root}/{query_id}"
-                    ided = with_row_ids(df)
+                    obs = Observation()
+                    ided = with_row_ids(df).observe(
+                        obs, F.count(F.lit(1)).alias("rows")
+                    )
                     writer = ided.write.mode("overwrite")
                     if self.max_records_per_file:
                         writer = writer.option(
                             "maxRecordsPerFile", self.max_records_per_file
                         )
                     writer.parquet(path)
-                # row count comes from with_row_ids' per-partition counts —
-                # no second full read of the result (VERDICT r1 #5).
-                state.num_rows = ided._chqe_total_rows
+                # counted by the write job itself, no re-read of the result
+                state.num_rows = int(obs.get["rows"])
                 state.schema = df.schema
                 state.result_path = path
                 state.status = QueryStatus.COMPLETE
@@ -339,8 +313,6 @@ class QueryEngine:
         output directory, which would double-scan the dataset and, under
         ``save_mode='append'``, report pre-existing rows as written.
         """
-        from pyspark.sql import Observation
-
         obs = Observation()
         with released():
             df = self.dataframe_for(sql, mode).observe(

@@ -63,6 +63,12 @@ DEFAULT_CONFS: dict[str, str] = {
     # out the one JSON result line (BENCH_r06.json lost its headline
     # block exactly this way). Progress rendering is cosmetic — off.
     "spark.ui.showConsoleProgress": "false",
+    # --- result row ids (engine.with_row_ids) -------------------------
+    # the distributed-sequence node caches its input unless this is
+    # NONE, and Spark releases that cache only in adaptive-execution
+    # clean-up; the engine persists the frame in the query's scope
+    # instead. The value is JSON, as pandas-on-Spark writes its options.
+    "pandas_on_Spark.compute.default_index_cache": '"NONE"',
     "spark.sql.warehouse.dir": os.environ.get("SPARK_WAREHOUSE_DIR", "/tmp/chqe_warehouse"),
 }
 

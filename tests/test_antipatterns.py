@@ -31,12 +31,11 @@ COLLECT_ALLOWLIST = {
     "operators/corpus.py": (1, "4096-bucket importance model"),
     # per-dimension quantization stats: dim-bounded (<= 64 rows)
     "operators/similarity.py": (1, "per-dimension SQ stats"),
-    # one row per partition; result pages are read from parquet
-    # footers on the driver, except for results not on the driver's
-    # disk, with a variant column or with row groups above the cap,
-    # whose pages are one row-id-bounded Spark read
-    "engine.py": (2, "per-partition row counts for row ids; one "
-                     "row-id-bounded page of a result the footer "
+    # result pages are read from parquet footers on the driver, except
+    # for results not on the driver's disk, with a variant column or
+    # with row groups above the cap, whose pages are one
+    # row-id-bounded Spark read
+    "engine.py": (1, "one row-id-bounded page of a result the footer "
                      "reader declines"),
 }
 FIRST_ALLOWLIST = {
@@ -216,3 +215,20 @@ def test_temp_views_only_in_read_files():
         if rel != os.path.join("sql", "read_files.py") and _TEMP_VIEW.search(src)
     ]
     assert not bad, f"temp view registered outside sql/read_files.py: {bad}"
+
+
+# spelled so that a plain grep for the module name does not find this file
+_INTERNAL_API = re.compile(r"pyspark[.]sql[.]internal\b")
+
+
+def test_internal_spark_api_only_in_engine():
+    """The ``internal`` module of ``pyspark.sql`` is not a public API and
+    may change in any Spark release. Its one use, the distributed
+    sequence that numbers result rows, lives in ``engine.py``, so a
+    Spark upgrade has one place to check."""
+    bad = [
+        rel for rel, src in _sources()
+        if rel != "engine.py" and _INTERNAL_API.search(src)
+    ]
+    bad += _harness_matches(_INTERNAL_API, "tests", "tools")
+    assert not bad, f"pyspark.sql's internal module used outside engine.py: {bad}"

@@ -5,6 +5,8 @@ query_handler_state.rs:28-44, query_data_handler.rs:183-571).
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from chapterhouseqe_spark.connections import ConnectionRegistry
@@ -111,19 +113,22 @@ def test_run_script_multi_statement(engine, sf_dir):
     assert engine.num_rows(qids[1]) == 25
 
 
-def test_with_row_ids_dense_and_ordered(spark):
+def test_with_row_ids_dense_and_ordered(spark, tmp_path):
     df = spark.range(0, 1000).repartition(7)
-    ided = with_row_ids(df)
-    ids = [r["__row_id"] for r in ided.select("__row_id").collect()]
-    assert sorted(ids) == list(range(1000))
-    assert ided._chqe_total_rows == 1000
+    with_row_ids(df).write.parquet(str(tmp_path / "shuffled"))
+    written = spark.read.parquet(str(tmp_path / "shuffled"))
+    assert sorted(r["__row_id"] for r in written.collect()) == list(range(1000))
+    # without an exchange the ids follow the partitions' own order
+    ordered = with_row_ids(spark.range(0, 1000, 1, 7)).collect()
+    assert [(r["id"], r["__row_id"]) for r in ordered] == [(i, i) for i in range(1000)]
 
 
-def test_with_row_ids_empty(spark):
+def test_with_row_ids_empty(spark, tmp_path):
     df = spark.range(0, 10).filter("id < 0")
-    ided = with_row_ids(df)
-    assert ided.count() == 0
-    assert ided._chqe_total_rows == 0
+    with_row_ids(df).write.parquet(str(tmp_path / "empty"))
+    written = spark.read.parquet(str(tmp_path / "empty"))
+    assert written.columns == ["id", "__row_id"]
+    assert written.count() == 0
 
 
 def test_fetch_allow_overflow(engine, sf_dir):
@@ -381,8 +386,9 @@ def test_footer_pages_match_spark_read_typed(engine, sf_dir, tz):
 
 
 def test_failed_query_releases_persisted_frame(engine, spark):
-    """The row-id frame is persisted; a query that fails in its counts
-    job, after it or in its write must still release it."""
+    """The row-id frame is persisted; a query that fails while its rows
+    are numbered, after the persist or in its write must still release
+    it."""
     jsc = spark.sparkContext._jsc
 
     def persisted():
@@ -390,8 +396,8 @@ def test_failed_query_releases_persisted_frame(engine, spark):
 
     before = persisted()
     for sql in (
-        "select raise_error('boom') as x from range(10)",  # counts job fails
-        "select 1 as a, 2 as a",  # fails after the counts job
+        "select raise_error('boom') as x from range(10)",  # numbering fails
+        "select 1 as a, 2 as a",  # fails after the persist
         "select make_interval(0, 0, 0, 1) as i from range(3)",  # write fails
     ):
         qid = engine.run_query_sync(sql)
@@ -488,3 +494,75 @@ def test_variant_results_page_through_spark(engine):
     assert [(r["id"], r["v"].toJson()) for r in rows] == [
         (i, f'{{"a":{i}}}') for i in (1, 2, 3)
     ]
+
+
+def _persisted_rdds(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+# (sql, ordered, max_records_per_file): numbered results paged through
+# iter_results must equal collect(), in order where the SQL orders
+ROW_ID_CASES = {
+    "order_by": ("select id, id % 97 as m from range(0, 20000, 1, 7) "
+                 "order by m, id desc", True, None),
+    "order_by_limit": ("select id, id % 97 as m from range(0, 20000, 1, 7) "
+                       "order by m, id desc limit 777", True, None),
+    "repartition_hint": ("select /*+ REPARTITION(5) */ id, id * 2 as d "
+                         "from range(0, 3000)", False, None),
+    # several partitions and no exchange: the distributed-sequence node
+    # would cache this input itself if its own cache were on
+    "no_exchange": ("select id from range(0, 3000, 1, 6)", True, None),
+    "empty": ("select id from range(0, 3000, 1, 6) where id < 0", True, None),
+    "max_records_per_file": ("select id, id % 11 as m from range(0, 2000, 1, 4) "
+                             "order by m, id", True, 300),
+}
+
+
+@pytest.mark.parametrize("case", list(ROW_ID_CASES))
+def test_row_ids_page_like_collect(engine, spark, case):
+    """Row ids are dense and follow the result's order, so the pages
+    read back equal ``collect()``; the query releases everything it
+    persisted."""
+    sql, ordered, max_records = ROW_ID_CASES[case]
+    engine.max_records_per_file = max_records
+    before = _persisted_rdds(spark)
+    qid = engine.run_query_sync(sql)
+    assert engine.status(qid) is QueryStatus.COMPLETE, engine.error(qid)
+    assert _persisted_rdds(spark) == before
+    expected = [r.asDict() for r in spark.sql(sql).collect()]
+    got = list(engine.iter_results(qid, page_size=333))
+    assert engine.num_rows(qid) == len(expected)
+    if ordered:
+        assert got == expected
+    else:
+        key = lambda r: tuple(r.values())
+        assert sorted(got, key=key) == sorted(expected, key=key)
+    if max_records:
+        assert len(engine._state(qid).pages.files) >= len(expected) // max_records
+
+
+_INDEX_CACHE = "pandas_on_Spark.compute.default_index_cache"
+
+
+def test_result_write_numbers_rows_in_its_own_job(engine, spark):
+    """The result write's executed plan numbers rows with one
+    distributed-sequence node and joins nothing back: no per-partition
+    counts, no broadcast of offsets. The node's own input cache is off
+    (its value is JSON, as pandas-on-Spark stores its options)."""
+    assert spark.conf.get(_INDEX_CACHE).strip('"') == "NONE"
+    qid = engine.run_query_sync(
+        "select id, id % 7 as m from range(0, 5000, 1, 4) order by m"
+    )
+    assert engine.status(qid) is QueryStatus.COMPLETE, engine.error(qid)
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = [
+        executions.apply(i).physicalPlanDescription()
+        for i in range(executions.size())
+    ]
+    (plan,) = [p for p in plans if qid in p]
+    # the tree of the final adaptive plan, before its initial plan and
+    # the per-node details
+    tree = plan.split("\n\n\n")[0]
+    final = re.split(r"^\+- == Initial Plan ==", tree, flags=re.M)[0]
+    assert final.count("AttachDistributedSequence") == 1, final
+    assert "BroadcastExchange" not in final, final

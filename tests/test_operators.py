@@ -510,6 +510,51 @@ def test_pairing_kernel_matches_inverted_index_join(docs, monkeypatch):
             assert guard_messages() == kernel_msgs
 
 
+def test_simhash_batches_match_aggregate_formula(spark):
+    # The mapInPandas fingerprints must equal the explode + per-bit-sum
+    # aggregate they replaced, bit for bit: a null-text doc yields no
+    # row on both paths, repeated and padded tokens count as the split
+    # gives them, and one doc longer than the kernel's per-chunk hash
+    # cap is scored in a chunk of its own.
+    from chapterhouseqe_spark.operators.dedup import simhash_fingerprints
+
+    bits, big_tokens = 60, 110_000
+    assert big_tokens > (50 * 1024 * 1024) // (8 * bits)  # the chunk cap
+    words = lambda n, m: F.concat_ws(" ", F.transform(
+        F.sequence(F.lit(1), n),
+        lambda x: F.concat(F.lit("w"), (x % m).cast("string")),
+    ))
+    listed = spark.createDataFrame(
+        [(0, BASE), (1, NEAR), (2, None), (3, "a a a b"), (4, "  padded   doc  "),
+         (5, None), (6, OTHER)],
+        "doc_id long, text string",
+    ).withColumn(
+        "text",
+        F.when(F.col("doc_id") == 5, words(F.lit(big_tokens), 5003))
+        .otherwise(F.col("text")),
+    )
+    generated = spark.range(10, 50).select(
+        F.col("id").alias("doc_id"), words(F.col("id"), 17).alias("text")
+    )
+    docs = listed.unionByName(generated)
+    h = F.conv(F.substring(F.md5("tk"), 1, 15), 16, 10).cast("long")
+    tokens = F.explode(F.split(F.trim("text"), r"\s+")).alias("tk")
+    bit = F.explode(F.sequence(F.lit(0), F.lit(bits - 1))).alias("j")
+    per_bit = (
+        docs.select("doc_id", tokens)
+        .select("doc_id", h.alias("h"), bit)
+        .groupBy("doc_id", "j")
+        .agg(F.expr("sum(if(shiftright(h, j) & 1 = 1, 1, -1))").alias("w"))
+    )
+    formula = per_bit.groupBy("doc_id").agg(
+        F.expr("sum(if(w > 0, shiftleft(1L, j), 0L))").alias("fingerprint")
+    )
+    rows = lambda df: sorted(tuple(r) for r in df.collect())
+    expected = rows(formula)
+    assert [r[0] for r in expected] == [0, 1, 3, 4, 5, 6] + list(range(10, 50))
+    assert rows(simhash_fingerprints(docs, "text", "doc_id", bits=bits)) == expected
+
+
 def test_near_dedup_keep_canonical(docs):
     from chapterhouseqe_spark.operators.dedup import near_dedup_keep
 
